@@ -48,7 +48,19 @@ def col_or_name(c) -> Column:
 def lazy_pandas_udf(return_type):
     """Defer pandas_udf creation until first call — DDL-string return types
     need an active SparkSession to parse, and this package must be importable
-    without one (driver imports __spark_entry__ before building the session)."""
+    without one (driver imports __spark_entry__ before building the session).
+
+    ``.once(*cols)`` applies the same kernel as a *nondeterministic* UDF —
+    the single-eval shape for a kernel column that is both filtered on and
+    kept.  When a filter on a deterministic Python-UDF column (or an
+    ``isnotnull`` Catalyst infers from a join condition) is pushed below
+    the projection, the optimizer re-evaluates the UDF inside the pushed
+    filter, so every row pays the kernel and its Arrow crossing twice.  The
+    nondeterministic flag only withdraws the optimizer's licence to
+    reorder or duplicate the call; the kernel is the same function, so
+    values stay bit-identical.  The trade: a filter a *user* places on any
+    column above such a projection is not pushed through it either (for
+    example into a Parquet scan's ``PushedFilters``)."""
     import functools
 
     def deco(fn):
@@ -60,7 +72,13 @@ def lazy_pandas_udf(return_type):
                 holder["udf"] = pandas_udf(return_type)(fn)
             return holder["udf"](*cols)
 
+        def once(*cols):
+            if "once" not in holder:
+                holder["once"] = pandas_udf(return_type)(fn).asNondeterministic()
+            return holder["once"](*cols)
+
         call.fn = fn
+        call.once = once
         call.returnType = return_type
         return call
 

@@ -87,11 +87,6 @@ def _footprint(neighborhood):
     raise ValueError(f"unrecognized neighborhood {neighborhood!r}")
 
 
-def _radius(neighborhood: str) -> int:
-    """Radius of the neighborhood's bounding square."""
-    return _footprint(neighborhood)[0]
-
-
 def _windows(a: np.ma.MaskedArray, r: int):
     """(rows, cols, k, k) view of NaN-padded data; NaN marks NoData + edge pad."""
     filled = np.where(np.ma.getmaskarray(a), np.nan, np.asarray(a.data, dtype="float64"))

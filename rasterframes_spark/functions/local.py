@@ -57,11 +57,6 @@ def _f64(ma: np.ma.MaskedArray) -> np.ma.MaskedArray:
     return ma.astype("float64") if ma.dtype.kind != "f" else ma
 
 
-def _lift_rhs(b):
-    """tile-rhs arrives as masked array; scalar as float."""
-    return b
-
-
 # -- arithmetic (localops/Add.scala:46, Subtract, Multiply, Divide) ----------
 
 rf_local_add = binary_tile_op(lambda a, b: a + b)

@@ -35,10 +35,6 @@ def rf_proj_raster(tile, extent, crs) -> Column:
     )
 
 
-def _is_proj_raster(c: Column) -> Column:
-    return c
-
-
 def rf_tile(proj_raster) -> Column:
     """Extract/realize the tile (accessors/RealizeTile.scala:42). For lazy
     refs see sources.raster_reader.realize_tiles."""

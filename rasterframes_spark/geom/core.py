@@ -849,14 +849,6 @@ def box_polygon(xmin, ymin, xmax, ymax):
     return ("Polygon", [[(xmin, ymin), (xmax, ymin), (xmax, ymax), (xmin, ymax), (xmin, ymin)]])
 
 
-def buffer_point(pt, radius, segments=32):
-    """Planar circular buffer (radius in coordinate units)."""
-    ang = np.linspace(0, 2 * math.pi, segments + 1)
-    ring = [(pt[0] + radius * math.cos(a), pt[1] + radius * math.sin(a)) for a in ang]
-    ring[-1] = ring[0]
-    return ("Polygon", [ring])
-
-
 def buffer_point_geodesic(pt, radius_m, segments=64):
     """Geodesic point buffer: ring of points at constant great-circle
     distance ``radius_m`` METERS from a lon/lat point (spherical direct

@@ -65,10 +65,6 @@ def _geoms(s: pd.Series):
     return out
 
 
-def _wkb_series(geoms) -> pd.Series:
-    return pd.Series([None if g is None else G.wkb_dumps(g) for g in geoms], dtype=object)
-
-
 def _unary_scalar(fn, rtype):
     @lazy_pandas_udf(rtype)
     def udf(s: pd.Series) -> pd.Series:
@@ -311,48 +307,6 @@ def _distance_udf(a: pd.Series, b: pd.Series) -> pd.Series:
 
 def st_distance(a, b) -> Column:
     return _distance_udf(col_or_name(a), col_or_name(b))
-
-
-_distance_once_holder: dict = {}
-
-
-def _distance_once(a, b) -> Column:
-    """``_distance_udf`` marked nondeterministic — the §4.4 single-eval
-    shape for project-then-filter: a filter on a column computed by a
-    deterministic Python UDF gets pushed below the projection and the
-    optimizer DUPLICATES the UDF (measured: two ArrowEvalPython nodes,
-    every surviving candidate pays the kernel and the Arrow crossing of
-    both geometry payloads twice).  The flag only removes the optimizer's
-    licence to reorder/duplicate; the kernel is bit-identical, so values
-    never change — use where a distance column is both filtered on and
-    carried downstream (st_knn_join)."""
-    if "udf" not in _distance_once_holder:
-        from pyspark.sql.functions import pandas_udf
-
-        _distance_once_holder["udf"] = pandas_udf("double")(
-            _distance_udf.fn).asNondeterministic()
-    return _distance_once_holder["udf"](col_or_name(a), col_or_name(b))
-
-
-_envelope_once_holder: dict = {}
-
-
-def _envelope_once(geom) -> Column:
-    """``_envelope_udf`` marked nondeterministic — the §4.4 single-eval
-    shape for project-then-filter (same rationale as
-    :func:`_distance_once`): st_join's cover-cell bucketing projects the
-    envelope and then filters ``xmin.isNotNull()`` on it, and the
-    optimizer pushed the filter below the projection, DUPLICATING the
-    envelope eval — every row on BOTH join sides paid the WKB Arrow
-    crossing twice (plan-verified: 4 ArrowEvalPython envelope sites for
-    2 sides).  Same kernel, bit-identical values."""
-    if "udf" not in _envelope_once_holder:
-        from pyspark.sql.functions import pandas_udf
-
-        _envelope_once_holder["udf"] = pandas_udf(
-            "struct<xmin:double,ymin:double,xmax:double,ymax:double>")(
-            _envelope_udf.fn).asNondeterministic()
-    return _envelope_once_holder["udf"](col_or_name(geom))
 
 
 @lazy_pandas_udf("double")

@@ -45,29 +45,6 @@ def _extent_to_4326_udf(e: pd.DataFrame, crs: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
 
 
-_extent_once_holder: dict = {}
-
-
-def _extent_to_4326_once(e, crs):
-    """``_extent_to_4326_udf`` marked nondeterministic — the §4.4
-    single-eval shape (r15; same pattern as geom/functions
-    ``_envelope_once``): the pair join's bbox-overlap condition lets
-    Catalyst INFER ``isnotnull`` constraints on the projected __e4326
-    fields and push them below the projection, duplicating the
-    reprojection UDF — each side paid the Arrow crossing + pyproj
-    transform twice per row (plan-verified: 2 ArrowEvalPython sites per
-    side).  Same kernel, bit-identical values; rows with null extents
-    are dropped by the downstream cell-explode/overlap condition either
-    way."""
-    if "udf" not in _extent_once_holder:
-        from pyspark.sql.functions import pandas_udf
-
-        _extent_once_holder["udf"] = pandas_udf(
-            "struct<xmin:double,ymin:double,xmax:double,ymax:double>")(
-            _extent_to_4326_udf.fn).asNondeterministic()
-    return _extent_once_holder["udf"](e, crs)
-
-
 def _merge_kernel(resampling: str):
     @lazy_pandas_udf(TILE_SCHEMA)
     def udf(ltile: pd.DataFrame, lext: pd.DataFrame, lcrs: pd.Series,
@@ -473,16 +450,15 @@ def raster_join(
         L = L.persist()
         R = R.persist()
 
-    # _extent_to_4326_once, not the raw UDF (r15, §4.4): the overlap
-    # condition's inferred isnotnull constraints otherwise push below
-    # these projections and duplicate the reprojection eval per side
+    # .once: the overlap condition's inferred isnotnull would be pushed
+    # under these projections
     l4326 = L.select(
         "__lid", "__lid2",
-        _extent_to_4326_once(F.col(left_extent), F.col(left_crs)).alias("__e4326"),
+        _extent_to_4326_udf.once(F.col(left_extent), F.col(left_crs)).alias("__e4326"),
     )
     r4326 = R.select(
         "__rid", "__rid2",
-        _extent_to_4326_once(F.col(right_extent), F.col(right_crs)).alias("__e4326"),
+        _extent_to_4326_udf.once(F.col(right_extent), F.col(right_crs)).alias("__e4326"),
     )
 
     if cell_size_deg is None:

@@ -120,11 +120,8 @@ def _stamp_row_id(df: DataFrame, a: str, b: str) -> DataFrame:
 
 def _cells(df: DataFrame, geom_col: str, g: float, side: str,
            pad: float = 0.0) -> DataFrame:
-    # _envelope_once, not st_envelope (r15, §4.4): the isNotNull filter
-    # below is otherwise pushed under this projection and the optimizer
-    # duplicates the envelope UDF — every row of this side crossed WKB
-    # to Python twice (plan-verified 4 -> 2 eval sites for the 2 sides)
-    e = GF._envelope_once(geom_col)
+    # .once: the isNotNull filter below would be pushed under this projection
+    e = GF._envelope_udf.once(F.col(geom_col))
     if pad:
         e = F.struct((e["xmin"] - pad).alias("xmin"),
                      (e["ymin"] - pad).alias("ymin"),
@@ -257,12 +254,10 @@ def st_join(left: DataFrame, right: DataFrame,
         # distance ONCE and filter on the column, so the caller's rank
         # window / output column reuse the value instead of paying a
         # second ArrowEvalPython crossing of both geometry payloads per
-        # surviving candidate.  Needs the nondeterministic twin: a
-        # filter on a deterministic-UDF column is pushed below the
-        # projection and the eval is DUPLICATED (guide §4.4; plan-
-        # asserted by test_st_knn_join_single_distance_eval).
+        # surviving candidate.  .once: the `<= d` filter below would be
+        # pushed under this projection.
         cand = cand.withColumn(
-            _distance_col, GF._distance_once(F.col(geom_left), F.col(gr)))
+            _distance_col, GF._distance_udf.once(F.col(geom_left), F.col(gr)))
         exact = F.col(_distance_col) <= F.lit(d)
     elif predicate == "dwithin":
         exact = GF.st_distance(F.col(geom_left), F.col(gr)) <= F.lit(d)

@@ -65,9 +65,8 @@ def dedup_against_minhash(new: DataFrame, reference: DataFrame,
         minhash_signature_text, text_jaccard)
 
     def banded(df, tag):
-        # _once on both kernels here and in the verify below: the §4.4
-        # single-eval shape (see minhash_dedup_pairs — same duplicated-
-        # filter-pushdown mechanism, plan-asserted in tests)
+        # _once here and in the verify below: the isNotNull / threshold
+        # filters would be pushed under the projections
         sig = df.select(
             F.col(id_col).alias(f"{tag}_id"),
             F.col(text_col).alias(f"__t_{tag}"),

@@ -95,17 +95,12 @@ def text_jaccard(text_a, text_b, shingle_size: int = 3, *,
     kernel is ~50x cheaper there. Set semantics identical to
     jaccard_sim(shingles(a), shingles(b)).
 
-    ``_once`` (internal): mark the UDF nondeterministic — the §4.4
-    single-eval shape for callers that both FILTER on the result and
-    emit it (a threshold filter on a deterministic-UDF column is pushed
-    below the projection and the optimizer DUPLICATES the eval: two
-    Arrow crossings of both full texts per candidate pair, plan-
-    verified).  The kernel is unchanged, so values are bit-identical;
-    the flag only removes the optimizer's licence to duplicate/reorder."""
+    ``_once`` (internal): apply ``.once``, for callers whose threshold
+    filter on the result would be pushed below the projection."""
     n = int(shingle_size)
 
     @lazy_pandas_udf("double")
-    def udf(ta: pd.Series, tb: pd.Series) -> pd.Series:
+    def text_jaccard(ta: pd.Series, tb: pd.Series) -> pd.Series:
         out = np.empty(len(ta), dtype="float64")
         va, vb = ta.values, tb.values
         for i in range(len(va)):
@@ -123,11 +118,7 @@ def text_jaccard(text_a, text_b, shingle_size: int = 3, *,
 
     ca = F.col(text_a) if isinstance(text_a, str) else text_a
     cb = F.col(text_b) if isinstance(text_b, str) else text_b
-    if _once:
-        from pyspark.sql.functions import pandas_udf
-
-        return pandas_udf("double")(udf.fn).asNondeterministic()(ca, cb)
-    return udf(ca, cb)
+    return (text_jaccard.once if _once else text_jaccard)(ca, cb)
 
 
 def jaccard_sim(a, b) -> Column:
@@ -207,20 +198,14 @@ def minhash_signature_text(text_col, shingle_size: int = 3,
     order-insensitive so distinct order never matters). NULL for docs with
     fewer than ``shingle_size`` tokens.
 
-    ``_once`` (internal): nondeterministic marking for the §4.4
-    single-eval shape — pipelines that project the signature and then
-    filter ``isNotNull()`` on it had the filter pushed below BOTH the
-    projection and the spread Exchange, so the fused kernel ran TWICE
-    over the whole corpus per cold call, the duplicate at pre-spread
-    (often single-task) parallelism (plan-verified).  Same kernel,
-    bit-identical values; short-doc null-signature rows now cross the
-    spread shuffle before being filtered — a few extra narrow rows vs
-    a full duplicated corpus pass."""
+    ``_once`` (internal): apply ``.once``, for callers whose
+    ``isNotNull()`` filter on the signature would be pushed below the
+    projection."""
     a, b = _hash_params(num_perm, seed)
     n = int(shingle_size)
 
     @lazy_pandas_udf("array<long>")
-    def udf(texts: pd.Series) -> pd.Series:
+    def minhash_signature_text(texts: pd.Series) -> pd.Series:
         vals = texts.values
         lists = []
         nz = []
@@ -235,12 +220,8 @@ def minhash_signature_text(text_col, shingle_size: int = 3,
             lists.append(ss)
         return _minhash_from_lists(lists, nz, len(vals), a, b)
 
-    if _once:
-        from pyspark.sql.functions import pandas_udf
-
-        return pandas_udf("array<long>")(udf.fn).asNondeterministic()(
-            text_col)
-    return udf(text_col)
+    return (minhash_signature_text.once if _once
+            else minhash_signature_text)(text_col)
 
 
 
@@ -403,11 +384,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     # Gopher upstream, where those passes were the cell's dominant
     # cost).  Text in the cache trades memory for passes; it spills to
     # disk gracefully and releases with release_cache(result).
-    # _once: without it the isNotNull filter below is pushed under the
-    # projection AND the spread Exchange, running the fused signature
-    # kernel TWICE over the corpus per cold call — the duplicate at
-    # pre-spread parallelism (r15, §4.4; plan-asserted by
-    # test_minhash_pipeline_single_kernel_evals)
+    # _once: the isNotNull filter below would be pushed under the projection
     sigs = src.select("__id", "__txt", minhash_signature_text(
         "__txt", shingle_size, num_perm, _once=True).alias("minhash"))
     sigs = sigs.where(F.col("minhash").isNotNull())
@@ -438,9 +415,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     # read the CACHED frame (zero upstream recompute)
     sa = sigs.select(F.col("__id").alias("id_a"), F.col("__txt").alias("__ta"))
     sb = sigs.select(F.col("__id").alias("id_b"), F.col("__txt").alias("__tb"))
-    # _once: the threshold filter on the jaccard column otherwise
-    # duplicates the fused verify kernel — two Arrow crossings of both
-    # full texts per candidate pair (r15, §4.4)
+    # _once: the threshold filter would be pushed under the projection
     verified = (
         cands.join(sa, "id_a").join(sb, "id_b")
         .select("id_a", "id_b", F.round(text_jaccard(
@@ -784,18 +759,11 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str = "embedding",
             cs[nz] = sims[np.arange(len(nz)), best]
         return pd.DataFrame({"l": ls, "c": cs})
 
-    # nondeterministic marking (r15, §4.4): the `sem_list >= 0` filter
-    # below is otherwise pushed under this projection and the optimizer
-    # duplicates the eval — the centroid-assignment matmul ran TWICE
-    # over the whole corpus (plan-verified: ArrowEvalPython above AND
-    # below the pushed filter).  Same kernel, bit-identical values.
-    from pyspark.sql.functions import pandas_udf as _pudf
-
-    assign_once = _pudf("struct<l:int,c:double>")(
-        assign.fn).asNondeterministic()
+    # .once: the `sem_list >= 0` filter below would be pushed under this
+    # projection
     base = df.select(F.col(id_col).alias("__sid"),
                      F.col(vec_col).alias("__sv"),
-                     assign_once(F.col(vec_col)).alias("__a"))
+                     assign.once(F.col(vec_col)).alias("__a"))
     base = base.select(
         "__sid", "__sv", F.col("__a.l").alias("sem_list"),
         F.round(F.col("__a.c"), 9).alias("cent_cos"),

@@ -215,11 +215,9 @@ def hyperplane_bucket(vec_col, n_planes: int = 12, dim: int = 64,
     """Random-hyperplane LSH bucket id: sign-bit pattern of `n_planes`
     projections (Charikar cosine LSH).
 
-    ``_once`` (internal): nondeterministic marking for the §4.4
-    single-eval shape — a caller that equi-joins on the bucket column
-    gets an inferred isnotnull filter pushed below the projection,
-    duplicating the projection matmul over its whole input (see
-    lsh_ann_topk's corpus side).  Same kernel, bit-identical values."""
+    ``_once`` (internal): apply ``.once``, for callers whose equi-join on
+    the bucket infers an isnotnull that would be pushed below the
+    projection."""
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_planes, dim))
 
@@ -239,11 +237,7 @@ def hyperplane_bucket(vec_col, n_planes: int = 12, dim: int = 64,
         return pd.Series(out, dtype=object)
 
     col = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    if _once:
-        from pyspark.sql.functions import pandas_udf
-
-        return pandas_udf("long")(udf.fn).asNondeterministic()(col)
-    return udf(col)
+    return (udf.once if _once else udf)(col)
 
 
 def _train_unit_centroids(corpus: DataFrame, vec_col: str, n_lists: int,
@@ -335,7 +329,7 @@ def ivf_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                                       sample_size, seed, corpus_rows,
                                       caller="ivf_ann_topk")
 
-    def _list_udf(top_n: int, once: bool = False):
+    def _list_udf(top_n: int):
         @lazy_pandas_udf("array<int>")
         def udf(v: pd.Series) -> pd.Series:
             vals = v.values
@@ -350,21 +344,13 @@ def ivf_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 for t, i in enumerate(nz):
                     out[i] = order[t]
             return pd.Series(out, dtype=object)
-        if once:
-            from pyspark.sql.functions import pandas_udf
-
-            return pandas_udf("array<int>")(udf.fn).asNondeterministic()
         return udf
 
-    # once=True on the corpus side (r15, §4.4): the equi-join on
-    # __list lets Catalyst infer isnotnull(__list) and push it below
-    # this projection, duplicating the eval — the centroid-assignment
-    # matmul ran TWICE over the whole corpus (plan-verified: two
-    # ArrowEvalPython sites with the same UDF call id).  Values
-    # bit-identical; null-list rows drop in the equi-join either way.
+    # .once on the corpus side: the equi-join's inferred isnotnull(__list)
+    # would be pushed under this projection
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__cv"),
-        F.element_at(_list_udf(1, once=True)(F.col(vec_col)), 1).alias("__list"),
+        F.element_at(_list_udf(1).once(F.col(vec_col)), 1).alias("__list"),
     )
     q = queries.select(
         F.col(query_id).alias("__qid"), F.col(vec_col).alias("__qv"),
@@ -394,9 +380,8 @@ def lsh_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     is untouched, so this raises recall at candidate-join cost only, the
     standard multiprobe-LSH trade).
     """
-    # _once on the corpus side (r15, §4.4): the bucket equi-join's
-    # inferred isnotnull otherwise duplicates the projection matmul
-    # over the whole corpus (see hyperplane_bucket docstring)
+    # _once on the corpus side: the bucket equi-join's inferred isnotnull
+    # would be pushed under this projection
     c = corpus.select(
         F.col(corpus_id).alias("neighbor_id"), F.col(vec_col).alias("__cv"),
         hyperplane_bucket(vec_col, n_planes, dim, _once=True)

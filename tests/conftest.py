@@ -1,3 +1,5 @@
+from collections import Counter
+
 import numpy as np
 import pytest
 
@@ -20,6 +22,37 @@ def spark():
 @pytest.fixture(scope="session")
 def rng():
     return np.random.default_rng(42)
+
+
+def udf_sites(df) -> Counter:
+    """Python UDF evaluation sites in ``df``'s executed plan, counted by UDF
+    name: one per UDF on each ``*EvalPythonExec`` node.  Walks into AQE
+    plans, query stages and cached relations; a node reached twice (a
+    cache read by several scans) counts once."""
+    jvm = df.sparkSession._jvm
+    seen: set[int] = set()
+    sites: Counter = Counter()
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        p = todo.pop()
+        key = jvm.System.identityHashCode(p)
+        if key in seen:
+            continue
+        seen.add(key)
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(p.executedPlan())
+        elif cls.endswith("QueryStageExec"):
+            todo.append(p.plan())
+        elif cls == "InMemoryTableScanExec":
+            todo.append(p.relation().cachedPlan())
+        elif cls.endswith("EvalPythonExec"):
+            it = p.udfs().iterator()
+            while it.hasNext():
+                sites[it.next().name()] += 1
+        ch = p.children()
+        todo.extend(ch.apply(i) for i in range(ch.size()))
+    return sites
 
 
 def make_tile_df(spark, tiles, extra=None):

@@ -6,6 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rasterframes_spark import pipeline as P
+from tests.conftest import udf_sites
 
 SF = "/root/testdata/sf0.001"
 
@@ -89,26 +90,20 @@ def test_minhash_finds_planted_near_dups(spark, docs):
 
 def test_minhash_pipeline_single_kernel_evals(spark, docs):
     """r15 (§4.4): the fused signature kernel and the jaccard verify
-    kernel each appear EXACTLY ONCE as distinct ArrowEvalPython
-    evaluations in the physical plan — without the nondeterministic
-    marking, the isNotNull / threshold filters are pushed below the
-    projections and the optimizer duplicates both kernels (the
+    kernel each appear EXACTLY ONCE as UDF evaluation sites in the
+    physical plan — without ``.once``, the isNotNull / threshold
+    filters are pushed below the projections and the optimizer
+    duplicates both kernels (the
     signature duplicate additionally ran BELOW the spread Exchange).
     Also pins: the signature eval sits above the spread exchange, and
     results are identical to a threshold-free recompute."""
-    import re
-
     both = docs.select("doc_id", "text").limit(30)
     pairs = P.minhash_dedup_pairs(both, "doc_id", "text", shingle_size=3,
                                   num_perm=32, bands=16, threshold=0.5)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
-    # distinct eval sites = distinct result expr-ids per udf signature
-    sig_evals = set(re.findall(r"ArrowEvalPython \[udf\(__txt#\d+\)(#\d+)",
-                               plan))
-    jac_evals = set(re.findall(
-        r"ArrowEvalPython \[udf\(__ta#\d+, __tb#\d+\)(#\d+)", plan))
-    assert len(sig_evals) == 1, plan
-    assert len(jac_evals) == 1, plan
+    sites = udf_sites(pairs)
+    assert sites["minhash_signature_text"] == 1, plan
+    assert sites["text_jaccard"] == 1, plan
     # the signature eval consumes the spread (round-robin) exchange
     # output, not the raw scan: its input column is the post-exchange
     # __txt and an Exchange RoundRobinPartitioning exists below it
@@ -1291,29 +1286,38 @@ def test_scan_row_bound_and_sized_spread(spark, docs):
     assert [r.asDict() for r in a] == [r.asDict() for r in b]
 
 
-def test_ann_corpus_kernels_single_eval(spark, emb):
+def test_ann_corpus_kernels_single_eval(spark, emb, monkeypatch):
     """r15 (§4.4): the corpus-side bucketing kernels (IVF centroid
     assignment, LSH hyperplane bucket, semantic_dedup assignment)
     evaluate exactly ONCE over the corpus — the bucket equi-join's
     inferred isnotnull (resp. the sem_list >= 0 filter) otherwise
     pushes below the projection and duplicates the matmul.  Plan-
-    asserted per operator; semantic_dedup results pinned against the
-    same call's kept-count invariants."""
-    import re
-
+    asserted per operator (semantic_dedup on the frame it checkpoints,
+    since the final plan reads the checkpoint); semantic_dedup results
+    pinned against the same call's kept-count invariants."""
     q = emb.limit(4).select(F.col("vec_id").alias("query_id"), "embedding")
     cents = np.eye(8, 64)
 
+    # corpus side + query side, both kernels named `udf`
     ivf = P.ivf_ann_topk(emb, q, k=5, n_lists=8, n_probe=2, centroids=cents)
     plan = ivf._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"ArrowEvalPython \[", plan)) == 2, plan
+    assert udf_sites(ivf) == {"udf": 2}, plan
 
     lsh = P.lsh_ann_topk(emb, q, k=5, n_planes=4, dim=64)
     plan = lsh._jdf.queryExecution().executedPlan().toString()
-    assert len(re.findall(r"ArrowEvalPython \[", plan)) == 2, plan
+    assert udf_sites(lsh) == {"udf": 2}, plan
 
+    checkpointed = []
+    local_checkpoint = type(emb).localCheckpoint
+
+    def capture(df, *args, **kwargs):
+        checkpointed.append(df)
+        return local_checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(emb), "localCheckpoint", capture)
     sd = P.semantic_dedup(emb, "vec_id", n_clusters=8, threshold=0.97,
                           pairs_method="blas", centroids=cents)
+    assert udf_sites(checkpointed[0])["assign"] == 1
     rows = sd.collect()
     ids = {r["vec_id"] for r in rows}
     assert len(rows) == len(ids) == emb.count()

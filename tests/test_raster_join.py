@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from rasterframes_spark.tile import Tile
 from rasterframes_spark.operators import raster_join
 from rasterframes_spark.geom import proj as P
+from tests.conftest import udf_sites
 
 TILE_T = "struct<cell_type:string,cols:int,rows:int,cells:binary>"
 EXT_T = "struct<xmin:double,ymin:double,xmax:double,ymax:double>"
@@ -325,7 +326,7 @@ def test_raster_join_single_extent_reprojection_eval(spark, left_df):
     exactly ONCE — the pair join's bbox-overlap condition lets Catalyst
     infer isnotnull constraints on the projected __e4326 fields and push
     them below the projection, duplicating the UDF (was 2 eval sites per
-    side); the nondeterministic twin removes the licence.  Values pinned
+    side); ``.once`` removes the licence.  Values pinned
     by the reprojection tests above (bit-identical kernel)."""
     rt = Tile(np.full((8, 8), 7.0), "float64")
     right = spark.createDataFrame(
@@ -333,4 +334,4 @@ def test_raster_join_single_extent_reprojection_eval(spark, left_df):
     out = raster_join(left_df, right, left_tile="tile",
                       right_tiles=["tile"])
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("_extent_to_4326_udf") == 2, plan  # one per side
+    assert udf_sites(out)["_extent_to_4326_udf"] == 2, plan  # one per side

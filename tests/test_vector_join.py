@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from rasterframes_spark.geom import functions as GF
 from rasterframes_spark.operators import st_join
+from tests.conftest import udf_sites
 
 
 @pytest.fixture(scope="module")
@@ -239,8 +240,8 @@ def test_st_knn_join_tie_break_precomputed_hash(spark):
 
 def test_st_knn_join_single_distance_eval(spark):
     """r15 (§4.4/§2.4): the exact distance is evaluated ONCE — st_join's
-    dwithin filter projects it (nondeterministic twin blocks the
-    filter-pushdown duplication) and the rank window + output column
+    dwithin filter projects it (``.once`` blocks the filter-pushdown
+    duplication) and the rank window + output column
     reuse the value.  (a) plan-assert: exactly one _distance_udf
     evaluation; (b) results identical to a brute-force exact knn;
     (c) the carried column name is reserved on inputs."""
@@ -258,8 +259,7 @@ def test_st_knn_join_single_distance_eval(spark):
     qs = spark.createDataFrame(qrows, "qid int, qx double, qy double") \
         .select("qid", "qx", "qy", GF.st_point("qx", "qy").alias("geometry"))
     out = st_knn_join(qs, pts, k=3, max_distance=3.0, grid_size=3.0)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("_distance_udf") == 1
+    assert udf_sites(out)["_distance_udf"] == 1
     got = {(r["qid"], r["lid"], round(r["distance"], 9), r["knn_rank"])
            for r in out.collect()}
     # brute-force oracle: exact distances, same <= bound and top-k by
@@ -336,14 +336,14 @@ def test_st_join_hot_cell_salting(spark):
 
 def test_st_join_single_envelope_eval_per_side(spark, pts, polys):
     """r15 (§4.4): the cover-cell bucketing projects each side's envelope
-    with the nondeterministic twin, so the isNotNull filter can no longer
+    with ``.once``, so the isNotNull filter can no longer
     be pushed below the projection and duplicate the UDF — exactly ONE
     envelope evaluation per join side (was two: every row crossed its WKB
     payload to Python twice).  Results pinned against the same join run
     via the plain st_envelope expression."""
     out = st_join(pts, polys, predicate="within", grid_size=10.0)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("_envelope_udf") == 2, plan
+    assert udf_sites(out)["_envelope_udf"] == 2, plan
     got = sorted((r["pid"], r["zid"]) for r in out.collect())
     exp = sorted((r["pid"], r["zid"])
                  for r in _brute(spark, pts, polys, "within").collect())

@@ -1,11 +1,11 @@
 """Capture .explain("formatted") for every declared query into
-plans/r15/<query>_<tag>.txt (tag = before/after).  The r15 optimization-round
-judge checks plan claims against these files.
+plans/<round>/<query>_<tag>.txt (tag = before/after), so plan claims of an
+optimization round can be checked against the files.
 
-Run: python tools/capture_r15_plans.py <tag> [query1,query2,...]
-Defaults: tag=before, all queries, sf dir from $SPARK_GRAFT_SF_DIR
-(default sf0.01 — plan SHAPE is scale-independent; eager plan-time
-estimators run against the small inputs).
+Run: python tools/capture_plans.py <round> <tag> [query1,query2,...]
+Defaults: all queries, sf dir from $SPARK_GRAFT_SF_DIR (default sf0.01 —
+plan SHAPE is scale-independent; eager plan-time estimators run against
+the small inputs).
 """
 
 from __future__ import annotations
@@ -19,18 +19,20 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
     from rasterframes_spark import create_rf_spark_session
     import __spark_entry__ as entry
 
     spark = create_rf_spark_session(master="local[8]",
-                                    app_name="capture-r14-plans")
+                                    app_name=f"capture-{rnd}-plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    outdir = os.path.join(os.path.dirname(__file__), "..", "plans", "r15")
+    outdir = os.path.join(os.path.dirname(__file__), "..", "plans", rnd)
     os.makedirs(outdir, exist_ok=True)
 
     qs = entry.queries()
