@@ -15,6 +15,8 @@ amortized ~1e4× per iteration.
 
 from __future__ import annotations
 
+import functools
+import re
 from typing import Callable
 
 import numpy as np
@@ -22,6 +24,7 @@ import pandas as pd
 
 from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import StructType
 
 from rasterframes_spark.tile import (
     CellType,
@@ -37,6 +40,7 @@ __all__ = [
     "unary_tile_op",
     "binary_tile_op",
     "tile_to_scalar",
+    "tile_udf",
     "TileExpr",
 ]
 
@@ -61,7 +65,6 @@ def lazy_pandas_udf(return_type):
     values stay bit-identical.  The trade: a filter a *user* places on any
     column above such a projection is not pushed through it either (for
     example into a Parquet scan's ``PushedFilters``)."""
-    import functools
 
     def deco(fn):
         holder: dict = {}
@@ -117,9 +120,10 @@ def _encode_result(res: np.ndarray | np.ma.MaskedArray, out_ct: CellType | None)
 class TileExpr:
     """A fusable kernel DAG: ``fn(vals)`` over ``inputs`` -> masked array.
 
-    ``inputs`` is a list of ``(key, Column, kind)`` with kind ``"tile"``
-    (struct column, decoded to a Tile) or ``"scalar"`` (numeric column,
-    passed per-row as float). ``fn`` receives values aligned to ``inputs``.
+    ``inputs`` is a list of ``(key, Column)``: tile-struct columns, which
+    reach ``fn`` as masked arrays, and numeric columns cast to double,
+    which reach it as floats (see ``tile_udf``). ``fn`` receives values
+    aligned to ``inputs``.
     """
 
     __slots__ = ("fn", "inputs", "out_ct")
@@ -130,7 +134,7 @@ class TileExpr:
         self.out_ct = out_ct
 
 
-_PLAIN_COL_RE = __import__("re").compile(r"[A-Za-z_][A-Za-z0-9_.]*")
+_PLAIN_COL_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_.]*")
 
 
 def _expr_key(col: Column) -> str:
@@ -151,7 +155,7 @@ def _as_tile_expr(arg) -> TileExpr:
     e = getattr(col, "_rf_expr", None)
     if isinstance(e, TileExpr):
         return e
-    return TileExpr(lambda vals: vals[0], [(_expr_key(col), col, "tile")], None)
+    return TileExpr(lambda vals: vals[0], [(_expr_key(col), col)], None)
 
 
 def _boundary(e: TileExpr):
@@ -172,55 +176,83 @@ def _boundary(e: TileExpr):
 
 def _merge_inputs(e1: TileExpr, e2: TileExpr):
     inputs = list(e1.inputs)
-    pos = {k: i for i, (k, _, _) in enumerate(inputs)}
+    pos = {k: i for i, (k, _) in enumerate(inputs)}
     idx2 = []
-    for k, c, kind in e2.inputs:
+    for k, c in e2.inputs:
         if k in pos:
             idx2.append(pos[k])
         else:
             pos[k] = len(inputs)
-            inputs.append((k, c, kind))
+            inputs.append((k, c))
             idx2.append(len(inputs) - 1)
     return inputs, idx2
 
 
-def _decode_batch_cols(args, kinds):
-    cols = []
-    for a, kind in zip(args, kinds):
-        cols.append(decode_struct_pdf(a) if kind == "tile" else a.values)
-    return cols
+def _decode_batch_cols(args):
+    """Tile-struct columns (pandas DataFrames) decode to Tiles; any other
+    column is its values array."""
+    return [decode_struct_pdf(a) if isinstance(a, pd.DataFrame) else a.values
+            for a in args]
 
 
-def _row_vals(cols, kinds, i):
-    """Aligned kernel inputs for row i, or None if any input is null."""
+def _row_vals(cols, i):
+    """Row i's arguments as Tiles and plain Python values, or None if any
+    is null (a null double arrives from Arrow as NaN)."""
     vals = []
-    for c, kind in zip(cols, kinds):
+    for c in cols:
         v = c[i]
-        if kind == "tile":
-            if v is None:
-                return None
-            vals.append(v.masked())
-        else:
-            if v is None or (isinstance(v, float) and np.isnan(v)):
-                return None
-            vals.append(float(v))
+        if v is None or (isinstance(v, float) and np.isnan(v)):
+            return None
+        vals.append(v.item() if isinstance(v, np.generic) else v)
     return vals
 
 
+def tile_udf(return_type):
+    """Per-row tile kernel as a ``lazy_pandas_udf``: the one decode ->
+    compute -> encode loop every tile kernel runs through.
+
+    ``fn(*row)`` receives each tile-struct argument (proj_raster structs
+    too) as a ``Tile`` and every other argument as a plain Python value.
+    It returns a ``Tile`` when ``return_type`` is ``TILE_SCHEMA``, a tuple
+    for any other ``StructType``, else a scalar (``np.ma.masked`` reads as
+    null).  A row with any null argument gives a null result without
+    calling ``fn``; null structs come back as all-null-field structs."""
+
+    def deco(fn):
+        def batch(*args):
+            cols = _decode_batch_cols(args)
+            out = []
+            for i in range(len(cols[0])):
+                vals = _row_vals(cols, i)
+                out.append(None if vals is None else fn(*vals))
+            if return_type is TILE_SCHEMA:
+                return tiles_to_struct_pdf(out)
+            if isinstance(return_type, StructType):
+                names = return_type.fieldNames()
+                none = (None,) * len(names)
+                return pd.DataFrame([none if r is None else r for r in out],
+                                    columns=names)
+            return pd.Series([None if v is np.ma.masked else v for v in out],
+                             dtype=object)
+
+        batch.__name__ = batch.__qualname__ = fn.__name__
+        return lazy_pandas_udf(return_type)(batch)
+
+    return deco
+
+
+def _masked(row):
+    return [v.masked() if isinstance(v, Tile) else v for v in row]
+
+
 def _compile_tile(e: TileExpr) -> Column:
-    kinds = [k for _, _, k in e.inputs]
     fn, out_ct = e.fn, e.out_ct
 
-    @pandas_udf(TILE_SCHEMA)
-    def udf(*args):
-        cols = _decode_batch_cols(args, kinds)
-        out: list[Tile | None] = []
-        for i in range(len(cols[0])):
-            vals = _row_vals(cols, kinds, i)
-            out.append(None if vals is None else _encode_result(fn(vals), out_ct))
-        return tiles_to_struct_pdf(out)
+    @tile_udf(TILE_SCHEMA)
+    def udf(*row):
+        return _encode_result(fn(_masked(row)), out_ct)
 
-    col = udf(*[c for _, c, _ in e.inputs])
+    col = udf(*[c for _, c in e.inputs])
     try:
         col._rf_expr = e
     except Exception:
@@ -228,42 +260,14 @@ def _compile_tile(e: TileExpr) -> Column:
     return col
 
 
-_SCALAR_DT = None
-
-
-def _scalar_dtype(name: str):
-    global _SCALAR_DT
-    if _SCALAR_DT is None:
-        from pyspark.sql import types as T
-
-        _SCALAR_DT = {
-            "double": T.DoubleType(), "float": T.FloatType(),
-            "long": T.LongType(), "int": T.IntegerType(),
-            "boolean": T.BooleanType(), "string": T.StringType(),
-        }
-    return _SCALAR_DT[name]
-
-
 def _compile_scalar(e: TileExpr, fn, return_type: str) -> Column:
     inner = _boundary(e)
-    kinds = [k for _, _, k in e.inputs]
 
-    @pandas_udf(_scalar_dtype(return_type))
-    def sudf(*args):
-        cols = _decode_batch_cols(args, kinds)
-        out = []
-        for i in range(len(cols[0])):
-            vals = _row_vals(cols, kinds, i)
-            if vals is None:
-                out.append(None)
-                continue
-            v = fn(inner(vals))
-            if v is np.ma.masked:
-                v = None
-            out.append(v)
-        return pd.Series(out, dtype=object)
+    @tile_udf(return_type)
+    def sudf(*row):
+        return fn(inner(_masked(row)))
 
-    return sudf(*[c for _, c, _ in e.inputs])
+    return sudf(*[c for _, c in e.inputs])
 
 
 def unary_tile_op(fn: Callable[[np.ma.MaskedArray], np.ma.MaskedArray], out_ct: str | None = None):
@@ -314,7 +318,7 @@ def binary_tile_op(
         e1 = _as_tile_expr(left)
         i1 = _boundary(e1)
         rc = col_or_name(right).cast("double")
-        inputs = e1.inputs + [(_expr_key(rc), rc, "scalar")]
+        inputs = e1.inputs + [(_expr_key(rc), rc)]
         n1 = len(e1.inputs)
 
         def nf(vals, _a=i1, _n1=n1):
@@ -329,21 +333,12 @@ def binary_tile_op(
 
 def tile_to_scalar(fn: Callable[[np.ma.MaskedArray], object], return_type: str):
     """(tile) -> scalar column function (double/long/boolean). A fused-DAG
-    input collapses the whole chain + reduction into one UDF crossing."""
+    input collapses the whole chain + reduction into one UDF crossing.
+    ``op.udf`` is the unfused kernel (what SQL registration exposes)."""
 
-    @lazy_pandas_udf(return_type)
-    def udf(t: pd.DataFrame) -> pd.Series:
-        tiles = decode_struct_pdf(t)
-        out = []
-        for tile in tiles:
-            if tile is None:
-                out.append(None)
-            else:
-                v = fn(tile.masked())
-                if v is np.ma.masked:
-                    v = None
-                out.append(v)
-        return pd.Series(out, dtype=object)
+    @tile_udf(return_type)
+    def udf(tile):
+        return fn(tile.masked())
 
     def op(tile) -> Column:
         col = col_or_name(tile)
@@ -352,4 +347,5 @@ def tile_to_scalar(fn: Callable[[np.ma.MaskedArray], object], return_type: str):
             return _compile_scalar(e, fn, return_type)
         return udf(col)
 
+    op.udf = udf
     return op

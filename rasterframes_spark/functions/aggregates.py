@@ -51,29 +51,27 @@ _PARTIAL_T = (
 )
 
 
+def cell_stats(a: np.ma.MaskedArray) -> tuple:
+    """``(data_cells, no_data_cells, min, max, sum, sum_of_squares)`` of one
+    tile's data cells — the engine's one cell-statistics kernel; min and max
+    are None when the tile has no data cells."""
+    nd = int(np.ma.getmaskarray(a).sum())
+    # one float64 copy of the DATA cells only, then single-pass
+    # reductions (BLAS dot for sum-of-squares instead of an (af*af)
+    # temp + second pass) — measured 2.6x over the masked-array path
+    v = (np.asarray(a).ravel() if nd == 0 else a.compressed()).astype(
+        "float64")
+    if v.size == 0:
+        return (0, nd, None, None, 0.0, 0.0)
+    return (v.size, nd, float(v.min()), float(v.max()), float(v.sum()),
+            float(np.dot(v, v)))
+
+
 @lazy_pandas_udf(_PARTIAL_T)
 def _partial_udf(t: pd.DataFrame) -> pd.DataFrame:
-    tiles = decode_struct_pdf(t)
-    rows = []
-    for tile in tiles:
-        if tile is None:
-            rows.append((0, 0, None, None, 0.0, 0.0))
-            continue
-        a = tile.masked()
-        nd = int(np.ma.getmaskarray(a).sum())
-        # one float64 copy of the DATA cells only, then single-pass
-        # reductions (BLAS dot for sum-of-squares instead of an (af*af)
-        # temp + second pass) — measured 2.6x over the masked-array path
-        v = (np.asarray(a).ravel() if nd == 0 else a.compressed()).astype(
-            "float64")
-        n = v.size
-        if n == 0:
-            rows.append((0, nd, None, None, 0.0, 0.0))
-        else:
-            rows.append(
-                (n, nd, float(v.min()), float(v.max()), float(v.sum()),
-                 float(np.dot(v, v)))
-            )
+    # a null tile is an empty partial (zero counts), not a null one
+    rows = [(0, 0, None, None, 0.0, 0.0) if tile is None else cell_stats(tile.masked())
+            for tile in decode_struct_pdf(t)]
     return pd.DataFrame(rows, columns=["cnt", "nd", "mn", "mx", "sm", "ssq"])
 
 

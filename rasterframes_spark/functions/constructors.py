@@ -18,16 +18,9 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.functions import pandas_udf
 
-from rasterframes_spark.tile import (
-    CellType,
-    Tile,
-    TILE_SCHEMA,
-    decode_struct_pdf,
-    tiles_to_struct_pdf,
-)
-from rasterframes_spark.functions._kernel import lazy_pandas_udf, col_or_name
+from rasterframes_spark.tile import CellType, Tile, TILE_SCHEMA, decode_struct_pdf
+from rasterframes_spark.functions._kernel import col_or_name, tile_udf
 
 __all__ = [
     "rf_make_constant_tile", "rf_make_zeros_tile", "rf_make_ones_tile",
@@ -68,33 +61,19 @@ def rf_array_to_tile(array_col, cols: int, rows: int, cell_type: str = "float64"
     nc, nr = int(cols), int(rows)
     ct = CellType.parse(cell_type)
 
-    @pandas_udf(TILE_SCHEMA)
-    def udf(arrs: pd.Series) -> pd.DataFrame:
-        out = []
-        for a in arrs.values:
-            if a is None:
-                out.append(None)
-                continue
-            vals = np.asarray(a, dtype="float64")
-            mask = np.isnan(vals)
-            vals = np.where(mask, 0, vals).reshape(nr, nc)
-            out.append(Tile(np.ma.masked_array(vals.astype(ct.dtype), mask=mask.reshape(nr, nc)), ct))
-        return tiles_to_struct_pdf(out)
+    @tile_udf(TILE_SCHEMA)
+    def udf(a) -> Tile:
+        vals = np.asarray(a, dtype="float64")
+        mask = np.isnan(vals)
+        vals = np.where(mask, 0, vals).reshape(nr, nc)
+        return Tile(np.ma.masked_array(vals.astype(ct.dtype), mask=mask.reshape(nr, nc)), ct)
 
     return udf(col_or_name(array_col))
 
 
-@lazy_pandas_udf("array<double>")
-def _tile_to_array_double_udf(t: pd.DataFrame) -> pd.Series:
-    tiles = decode_struct_pdf(t)
-    out = []
-    for tile in tiles:
-        if tile is None:
-            out.append(None)
-        else:
-            a = tile.masked().astype("float64")
-            out.append(a.filled(np.nan).ravel())
-    return pd.Series(out, dtype=object)
+@tile_udf("array<double>")
+def _tile_to_array_double_udf(tile: Tile) -> np.ndarray:
+    return tile.masked().astype("float64").filled(np.nan).ravel()
 
 
 def rf_tile_to_array_double(tile) -> Column:
@@ -103,16 +82,9 @@ def rf_tile_to_array_double(tile) -> Column:
     return _tile_to_array_double_udf(col_or_name(tile))
 
 
-@lazy_pandas_udf("array<int>")
-def _tile_to_array_int_udf(t: pd.DataFrame) -> pd.Series:
-    tiles = decode_struct_pdf(t)
-    out = []
-    for tile in tiles:
-        if tile is None:
-            out.append(None)
-        else:
-            out.append(tile.masked().filled(tile.cell_type.nodata or 0).astype("int32").ravel())
-    return pd.Series(out, dtype=object)
+@tile_udf("array<int>")
+def _tile_to_array_int_udf(tile: Tile) -> np.ndarray:
+    return tile.masked().filled(tile.cell_type.nodata or 0).astype("int32").ravel()
 
 
 def rf_tile_to_array_int(tile) -> Column:
@@ -228,27 +200,21 @@ def _assemble_collect_packed(df, group_cols, ri, ci, cvs, out_names,
     is_bool = ct.dtype == np.dtype("bool")
     pos = (F.col(ri).cast("int") * nc + F.col(ci).cast("int"))
 
-    @lazy_pandas_udf(TILE_SCHEMA)
-    def scatter_packed(pk: pd.Series) -> pd.DataFrame:
-        out = []
-        for p in pk.values:
-            if p is None:
-                out.append(None)
-                continue
-            # Arrow hands back int32; widen so the arithmetic shift below
-            # keeps high bits for packed values with the int32 sign bit set.
-            a = np.asarray(p, dtype="int64")
-            idx = (a >> vbits) & ((1 << (32 - vbits)) - 1)
-            val = a & vmask
-            if signed:
-                val = (val ^ sign_bit) - sign_bit
-            flat = np.zeros(nr * nc, dtype=ct.dtype)
-            mask = np.ones(nr * nc, dtype=bool)
-            flat[idx] = val.astype(ct.dtype) if not is_bool else (val != 0)
-            mask[idx] = False
-            out.append(Tile(np.ma.masked_array(
-                flat.reshape(nr, nc), mask=mask.reshape(nr, nc)), ct))
-        return tiles_to_struct_pdf(out)
+    @tile_udf(TILE_SCHEMA)
+    def scatter_packed(p) -> Tile:
+        # Arrow hands back int32; widen so the arithmetic shift below
+        # keeps high bits for packed values with the int32 sign bit set.
+        a = np.asarray(p, dtype="int64")
+        idx = (a >> vbits) & ((1 << (32 - vbits)) - 1)
+        val = a & vmask
+        if signed:
+            val = (val ^ sign_bit) - sign_bit
+        flat = np.zeros(nr * nc, dtype=ct.dtype)
+        mask = np.ones(nr * nc, dtype=bool)
+        flat[idx] = val.astype(ct.dtype) if not is_bool else (val != 0)
+        mask[idx] = False
+        return Tile(np.ma.masked_array(
+            flat.reshape(nr, nc), mask=mask.reshape(nr, nc)), ct)
 
     aggs = []
     for cv in cvs:
@@ -378,31 +344,24 @@ def assemble_tiles(df: DataFrame, group_cols: list, col_index, row_index, cell,
             aggs.append(F.collect_list(F.col(cv).cast(xfer)).alias(f"__arr_{cv}"))
         grouped = df.groupBy(*group_cols).agg(*aggs)
 
-        @lazy_pandas_udf(TILE_SCHEMA)
-        def scatter(poss: pd.Series, vals: pd.Series) -> pd.DataFrame:
-            out = []
-            for p, v in zip(poss.values, vals.values):
-                if p is None:
-                    out.append(None)
-                    continue
-                pa = np.asarray(p, dtype="int64")
-                if int_cells:
-                    # integer cells: scatter straight into the target dtype,
-                    # mask tracked explicitly — no float64 canvas/isnan pass
-                    flat = np.zeros(nr * nc, dtype=ct.dtype)
-                    mask = np.ones(nr * nc, dtype=bool)
-                    flat[pa] = np.asarray(v, dtype=ct.dtype)
-                    mask[pa] = False
-                    out.append(Tile(np.ma.masked_array(
-                        flat.reshape(nr, nc), mask=mask.reshape(nr, nc)), ct))
-                else:
-                    flat = np.full(nr * nc, np.nan, dtype="float64")
-                    flat[pa] = np.asarray(v, dtype="float64")
-                    arr = flat.reshape(nr, nc)
-                    mask = np.isnan(arr)
-                    out.append(Tile(np.ma.masked_array(
-                        np.where(mask, 0, arr).astype(ct.dtype), mask=mask), ct))
-            return tiles_to_struct_pdf(out)
+        @tile_udf(TILE_SCHEMA)
+        def scatter(p, v) -> Tile:
+            pa = np.asarray(p, dtype="int64")
+            if int_cells:
+                # integer cells: scatter straight into the target dtype,
+                # mask tracked explicitly — no float64 canvas/isnan pass
+                flat = np.zeros(nr * nc, dtype=ct.dtype)
+                mask = np.ones(nr * nc, dtype=bool)
+                flat[pa] = np.asarray(v, dtype=ct.dtype)
+                mask[pa] = False
+                return Tile(np.ma.masked_array(
+                    flat.reshape(nr, nc), mask=mask.reshape(nr, nc)), ct)
+            flat = np.full(nr * nc, np.nan, dtype="float64")
+            flat[pa] = np.asarray(v, dtype="float64")
+            arr = flat.reshape(nr, nc)
+            mask = np.isnan(arr)
+            return Tile(np.ma.masked_array(
+                np.where(mask, 0, arr).astype(ct.dtype), mask=mask), ct)
 
         sel = list(group_cols)
         for cv, name in zip(cvs, out_names):
@@ -511,16 +470,9 @@ def rf_convert_cell_type(tile, cell_type: str) -> Column:
     """Convert cells + NoData semantics (SetCellType.scala:56-96)."""
     ct = CellType.parse(cell_type)
 
-    @pandas_udf(TILE_SCHEMA)
-    def udf(t: pd.DataFrame) -> pd.DataFrame:
-        tiles = decode_struct_pdf(t)
-        out = []
-        for tl in tiles:
-            if tl is None:
-                out.append(None)
-            else:
-                out.append(Tile(tl.masked(), ct))
-        return tiles_to_struct_pdf(out)
+    @tile_udf(TILE_SCHEMA)
+    def udf(tl: Tile) -> Tile:
+        return Tile(tl.masked(), ct)
 
     return udf(col_or_name(tile))
 
@@ -529,17 +481,11 @@ def rf_interpret_cell_type_as(tile, cell_type: str) -> Column:
     """Reinterpret raw bits without value conversion (InterpretAs.scala:51-92)."""
     ct = CellType.parse(cell_type)
 
-    @pandas_udf(TILE_SCHEMA)
-    def udf(t: pd.DataFrame) -> pd.DataFrame:
-        tiles = decode_struct_pdf(t)
-        out = []
-        for tl in tiles:
-            if tl is None:
-                out.append(None)
-            else:
-                raw = tl.masked().data.view(ct.dtype) if tl.cell_type.dtype.itemsize == ct.dtype.itemsize else tl.masked().data.astype(ct.dtype)
-                out.append(Tile(np.ma.masked_array(raw, mask=ct.mask_of(raw)), ct))
-        return tiles_to_struct_pdf(out)
+    @tile_udf(TILE_SCHEMA)
+    def udf(tl: Tile) -> Tile:
+        data = tl.masked().data
+        raw = data.view(ct.dtype) if tl.cell_type.dtype.itemsize == ct.dtype.itemsize else data.astype(ct.dtype)
+        return Tile(np.ma.masked_array(raw, mask=ct.mask_of(raw)), ct)
 
     return udf(col_or_name(tile))
 
@@ -549,18 +495,11 @@ def rf_with_no_data(tile, nodata_value) -> Column:
     (SetNoDataValue.scala:47-82)."""
     nd = nodata_value
 
-    @pandas_udf(TILE_SCHEMA)
-    def udf(t: pd.DataFrame) -> pd.DataFrame:
-        tiles = decode_struct_pdf(t)
-        out = []
-        for tl in tiles:
-            if tl is None:
-                out.append(None)
-                continue
-            ct = CellType.from_numpy(tl.cell_type.dtype, nd)
-            a = tl.masked()
-            newmask = np.ma.getmaskarray(a) | (np.asarray(a.data) == ct.nodata)
-            out.append(Tile(np.ma.masked_array(a.data, mask=newmask), ct))
-        return tiles_to_struct_pdf(out)
+    @tile_udf(TILE_SCHEMA)
+    def udf(tl: Tile) -> Tile:
+        ct = CellType.from_numpy(tl.cell_type.dtype, nd)
+        a = tl.masked()
+        newmask = np.ma.getmaskarray(a) | (np.asarray(a.data) == ct.nodata)
+        return Tile(np.ma.masked_array(a.data, mask=newmask), ct)
 
     return udf(col_or_name(tile))

@@ -22,12 +22,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column
 
-from rasterframes_spark.tile import CellType
-from rasterframes_spark.functions._kernel import col_or_name, unary_tile_op
+from rasterframes_spark.tile import CellType, Tile, TILE_SCHEMA
+from rasterframes_spark.functions._kernel import col_or_name, tile_udf, unary_tile_op
 
 __all__ = [
     "rf_focal_mean", "rf_focal_median", "rf_focal_mode", "rf_focal_max",
@@ -315,27 +314,15 @@ def _cell_size_expr(extent_col, tile_col, buffer: int = 0):
 
 
 def _dem_op(make_result, buffer: int = 0, target: str = "all"):
-    from rasterframes_spark.functions._kernel import lazy_pandas_udf
-    from rasterframes_spark.tile import TILE_SCHEMA, decode_struct_pdf, tiles_to_struct_pdf
-    from rasterframes_spark.tile import Tile as _Tile
-
     b = int(buffer)
 
-    @lazy_pandas_udf(TILE_SCHEMA)
-    def udf(t: pd.DataFrame, cw: pd.Series, ch: pd.Series, p1: pd.Series,
-            p2: pd.Series, p3: pd.Series) -> pd.DataFrame:
-        tiles = decode_struct_pdf(t)
-        out = []
-        for i, tl in enumerate(tiles):
-            if tl is None:
-                out.append(None)
-                continue
-            res = make_result(tl.masked(), float(cw.values[i]), abs(float(ch.values[i])),
-                              float(p1.values[i]), float(p2.values[i]), float(p3.values[i]))
-            computed = np.ma.masked_array(res, mask=np.isnan(res))
-            ma = _apply_target(tl.masked(), computed, target)
-            out.append(_Tile(_slice_core(ma, b), CellType.parse("float64")))
-        return tiles_to_struct_pdf(out)
+    @tile_udf(TILE_SCHEMA)
+    def udf(tl, cw, ch, p1, p2, p3):
+        a = tl.masked()
+        res = make_result(a, float(cw), abs(float(ch)), float(p1), float(p2), float(p3))
+        computed = np.ma.masked_array(res, mask=np.isnan(res))
+        return Tile(_slice_core(_apply_target(a, computed, target), b),
+                    CellType.parse("float64"))
 
     return udf
 

@@ -16,22 +16,15 @@ Catalyst expression under ``core/.../expressions/localops/`` or
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
 
-from rasterframes_spark.tile import (
-    CellType,
-    Tile,
-    TILE_SCHEMA,
-    decode_struct_pdf,
-    tiles_to_struct_pdf,
-)
+from rasterframes_spark.tile import CellType, Tile, TILE_SCHEMA
 from rasterframes_spark.functions._kernel import (
     binary_tile_op,
     col_or_name,
     tile_to_scalar,
+    tile_udf,
     unary_tile_op,
 )
 
@@ -83,21 +76,13 @@ def rf_local_clamp(tile, lo, hi) -> Column:
 # -- rf_where (localops/Where.scala:24-90): condition ? x : y ----------------
 
 
-@pandas_udf(TILE_SCHEMA)
-def _where_udf(c: pd.DataFrame, x: pd.DataFrame, y: pd.DataFrame) -> pd.DataFrame:
-    tc, tx, ty = decode_struct_pdf(c), decode_struct_pdf(x), decode_struct_pdf(y)
-    out = []
-    for ci, xi, yi in zip(tc, tx, ty):
-        if ci is None or xi is None or yi is None:
-            out.append(None)
-            continue
-        cond = ci.masked()
-        xv, yv = _f64(xi.masked()), _f64(yi.masked())
-        res = np.ma.where(cond.filled(0) != 0, xv, yv)
-        # NoData in condition => NoData out
-        res = np.ma.masked_array(res, mask=np.ma.getmaskarray(res) | np.ma.getmaskarray(cond))
-        out.append(Tile(res, CellType.parse(_F64)))
-    return tiles_to_struct_pdf(out)
+@tile_udf(TILE_SCHEMA)
+def _where_udf(c: Tile, x: Tile, y: Tile) -> Tile:
+    cond = c.masked()
+    res = np.ma.where(cond.filled(0) != 0, _f64(x.masked()), _f64(y.masked()))
+    # NoData in condition => NoData out
+    res = np.ma.masked_array(res, mask=np.ma.getmaskarray(res) | np.ma.getmaskarray(cond))
+    return Tile(res, CellType.parse(_F64))
 
 
 def rf_where(condition, x, y) -> Column:
@@ -131,36 +116,19 @@ def rf_local_is_in(tile, values) -> Column:
     reference's python signature accepts both
     (rasterfunctions.py:398-404)."""
     if isinstance(values, (Column, str)):
-        from pyspark.sql.functions import pandas_udf
-        from rasterframes_spark.tile import (
-            CellType as _CT, Tile as _T, TILE_SCHEMA as _TS,
-            decode_struct_pdf, tiles_to_struct_pdf)
-
-        @pandas_udf(_TS)
-        def udf(t: pd.DataFrame, arr: pd.Series) -> pd.DataFrame:
-            tiles = decode_struct_pdf(t)
-            out = []
-            for i, tl in enumerate(tiles):
-                v = arr.values[i]
-                if tl is None or v is None:
-                    out.append(None)
-                    continue
-                a = tl.masked()
-                vals = np.asarray(list(v), dtype="float64")
-                res = np.isin(np.asarray(a.data, dtype="float64"),
-                              vals).astype("uint8")
-                out.append(_T(np.ma.masked_array(
-                    res, mask=np.ma.getmaskarray(a)), _CT.parse(_BOOLCT)))
-            return tiles_to_struct_pdf(out)
+        @tile_udf(TILE_SCHEMA)
+        def udf(t: Tile, arr) -> Tile:
+            vals = np.asarray(list(arr), dtype="float64")
+            return Tile(_is_in(t.masked(), vals), CellType.parse(_BOOLCT))
 
         return udf(col_or_name(tile), col_or_name(values))
     vals = np.asarray(list(values), dtype="float64")
+    return unary_tile_op(lambda a: _is_in(a, vals), out_ct=_BOOLCT)(tile)
 
-    def fn(a):
-        res = np.isin(np.asarray(a.data, dtype="float64"), vals).astype("uint8")
-        return np.ma.masked_array(res, mask=np.ma.getmaskarray(a))
 
-    return unary_tile_op(fn, out_ct=_BOOLCT)(tile)
+def _is_in(a, vals: np.ndarray):
+    res = np.isin(np.asarray(a.data, dtype="float64"), vals).astype("uint8")
+    return np.ma.masked_array(res, mask=np.ma.getmaskarray(a))
 
 
 def _nodata_fn(a):

@@ -15,7 +15,7 @@ import pandas as pd
 from pyspark.sql import Column, functions as F
 
 from rasterframes_spark.tile import CellType, Tile, TILE_SCHEMA
-from rasterframes_spark.functions._kernel import col_or_name, lazy_pandas_udf
+from rasterframes_spark.functions._kernel import col_or_name, lazy_pandas_udf, tile_udf
 from rasterframes_spark.geom import core as G
 
 __all__ = [
@@ -114,26 +114,22 @@ def rf_rasterize(geometry, bounds_extent, value, cols, rows) -> Column:
 _ASCII_RAMP = " .:oO0@"
 
 
+def _rescale(tile: Tile, top: int, fill: int = 0) -> np.ndarray:
+    """Cells stretched linearly from the tile's own [min, max] onto
+    [0, top]; NoData cells read ``fill``."""
+    a = tile.masked().astype("float64")
+    lo, hi = float(a.min()), float(a.max())
+    span = (hi - lo) or 1.0
+    return np.clip(((a - lo) / span * top).filled(fill), fill, top)
+
+
 def rf_render_ascii(tile) -> Column:
     """Coarse ASCII-art render (DebugRender.scala:56)."""
 
-    @lazy_pandas_udf("string")
-    def udf(t: pd.DataFrame) -> pd.Series:
-        from rasterframes_spark.tile import decode_struct_pdf
-
-        out = []
-        for tl in decode_struct_pdf(t):
-            if tl is None:
-                out.append(None)
-                continue
-            a = tl.masked().astype("float64")
-            lo, hi = float(a.min()), float(a.max())
-            span = (hi - lo) or 1.0
-            idx = np.clip(((a - lo) / span * (len(_ASCII_RAMP) - 1)).filled(-1), -1,
-                          len(_ASCII_RAMP) - 1).astype(int)
-            lines = ["".join("∘" if j < 0 else _ASCII_RAMP[j] for j in r) for r in idx]
-            out.append("\n".join(lines))
-        return pd.Series(out, dtype=object)
+    @tile_udf("string")
+    def udf(tl: Tile) -> str:
+        idx = _rescale(tl, len(_ASCII_RAMP) - 1, fill=-1).astype(int)
+        return "\n".join("".join("∘" if j < 0 else _ASCII_RAMP[j] for j in r) for r in idx)
 
     return udf(col_or_name(tile))
 
@@ -141,15 +137,9 @@ def rf_render_ascii(tile) -> Column:
 def rf_render_matrix(tile) -> Column:
     """Numeric matrix render (DebugRender.scala:71)."""
 
-    @lazy_pandas_udf("string")
-    def udf(t: pd.DataFrame) -> pd.Series:
-        from rasterframes_spark.tile import decode_struct_pdf
-
-        out = []
-        for tl in decode_struct_pdf(t):
-            out.append(None if tl is None else np.array2string(
-                tl.masked(), max_line_width=200, precision=4))
-        return pd.Series(out, dtype=object)
+    @tile_udf("string")
+    def udf(tl: Tile) -> str:
+        return np.array2string(tl.masked(), max_line_width=200, precision=4)
 
     return udf(col_or_name(tile))
 
@@ -158,29 +148,15 @@ def rf_rgb_composite(red, green, blue) -> Column:
     """Pack 3 tiles into one int32 0xRRGGBB tile (RGBComposite.scala:50-97);
     each band rescaled to its own [min,max] -> 8 bits."""
 
-    @lazy_pandas_udf(TILE_SCHEMA)
-    def udf(r: pd.DataFrame, g: pd.DataFrame, b: pd.DataFrame) -> pd.DataFrame:
-        from rasterframes_spark.tile import decode_struct_pdf, tiles_to_struct_pdf
-
-        rs, gs, bs = decode_struct_pdf(r), decode_struct_pdf(g), decode_struct_pdf(b)
-        out = []
-        for tr, tg, tb in zip(rs, gs, bs):
-            if tr is None or tg is None or tb is None:
-                out.append(None)
-                continue
-
-            def to8(t):
-                a = t.masked().astype("float64")
-                lo, hi = float(a.min()), float(a.max())
-                span = (hi - lo) or 1.0
-                return np.clip(((a - lo) / span * 255.0).filled(0), 0, 255).astype("int64")
-
-            packed = (to8(tr) << 16) | (to8(tg) << 8) | to8(tb)
-            mask = (np.ma.getmaskarray(tr.masked()) & np.ma.getmaskarray(tg.masked())
-                    & np.ma.getmaskarray(tb.masked()))
-            out.append(Tile(np.ma.masked_array(packed.astype("int32"), mask=mask),
-                            CellType.parse("int32raw")))
-        return tiles_to_struct_pdf(out)
+    @tile_udf(TILE_SCHEMA)
+    def udf(r: Tile, g: Tile, b: Tile) -> Tile:
+        packed = ((_rescale(r, 255).astype("int64") << 16)
+                  | (_rescale(g, 255).astype("int64") << 8)
+                  | _rescale(b, 255).astype("int64"))
+        mask = (np.ma.getmaskarray(r.masked()) & np.ma.getmaskarray(g.masked())
+                & np.ma.getmaskarray(b.masked()))
+        return Tile(np.ma.masked_array(packed.astype("int32"), mask=mask),
+                    CellType.parse("int32raw"))
 
     return udf(col_or_name(red), col_or_name(green), col_or_name(blue))
 
@@ -274,22 +250,11 @@ def rf_render_color_ramp_png(tile, ramp: str = "viridis") -> Column:
     (transformers/RenderPNG.scala:47-81 color-ramp variant)."""
     lut = _ramp_lut(ramp)
 
-    @lazy_pandas_udf("binary")
-    def udf(t: pd.DataFrame) -> pd.Series:
-        from rasterframes_spark.tile import decode_struct_pdf
+    @tile_udf("binary")
+    def udf(tl: Tile) -> bytes:
         from rasterframes_spark.sources.png import encode_png
 
-        out = []
-        for tl in decode_struct_pdf(t):
-            if tl is None:
-                out.append(None)
-                continue
-            a = tl.masked().astype("float64")
-            lo, hi = float(a.min()), float(a.max())
-            span = (hi - lo) or 1.0
-            idx = np.clip(((a - lo) / span * 255.0).filled(0), 0, 255).astype("uint8")
-            out.append(encode_png(lut[idx]))
-        return pd.Series(out, dtype=object)
+        return encode_png(lut[_rescale(tl, 255).astype("uint8")])
 
     return udf(col_or_name(tile))
 
@@ -299,26 +264,14 @@ def rf_render_png(tile, ramp: str = "grayscale") -> Column:
     (zlib deflate, no PIL): grayscale ramp, or 'rgb' to unpack 0xRRGGBB
     composites from rf_rgb_composite."""
 
-    @lazy_pandas_udf("binary")
-    def udf(t: pd.DataFrame) -> pd.Series:
-        from rasterframes_spark.tile import decode_struct_pdf
+    @tile_udf("binary")
+    def udf(tl: Tile) -> bytes:
         from rasterframes_spark.sources.png import encode_png
 
-        out = []
-        for tl in decode_struct_pdf(t):
-            if tl is None:
-                out.append(None)
-                continue
-            a = tl.masked().astype("float64")
-            if ramp == "rgb":
-                v = np.asarray(a.filled(0)).astype("int64")
-                rgb = np.stack([(v >> 16) & 0xFF, (v >> 8) & 0xFF, v & 0xFF], axis=-1)
-                out.append(encode_png(rgb.astype("uint8")))
-            else:
-                lo, hi = float(a.min()), float(a.max())
-                span = (hi - lo) or 1.0
-                gray = np.clip(((a - lo) / span * 255.0).filled(0), 0, 255).astype("uint8")
-                out.append(encode_png(gray))
-        return pd.Series(out, dtype=object)
+        if ramp == "rgb":
+            v = tl.masked().astype("float64").filled(0).astype("int64")
+            rgb = np.stack([(v >> 16) & 0xFF, (v >> 8) & 0xFF, v & 0xFF], axis=-1)
+            return encode_png(rgb.astype("uint8"))
+        return encode_png(_rescale(tl, 255).astype("uint8"))
 
     return udf(col_or_name(tile))

@@ -7,13 +7,12 @@ each function). All NoData-aware: statistics run over data cells only.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import Column, functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import Column, functions as F, types as T
 
-from rasterframes_spark.tile import decode_struct_pdf
-from rasterframes_spark.functions._kernel import lazy_pandas_udf, col_or_name, tile_to_scalar
+from rasterframes_spark.tile import Tile
+from rasterframes_spark.functions._kernel import col_or_name, tile_to_scalar, tile_udf
+from rasterframes_spark.functions.aggregates import cell_stats
 
 __all__ = [
     "rf_tile_sum", "rf_tile_mean", "rf_tile_min", "rf_tile_max",
@@ -28,8 +27,11 @@ def _none_if_masked(v):
 
 
 # tilestats/Sum.scala:43, TileMean.scala:43, TileMin.scala:43, TileMax.scala:43
-rf_tile_sum = tile_to_scalar(lambda a: _none_if_masked(float(a.sum())) if a.count() else None, "double")
-rf_tile_mean = tile_to_scalar(lambda a: float(a.mean()) if a.count() else None, "double")
+# (sum and mean accumulate in double, as the reference and rf_agg_stats do)
+rf_tile_sum = tile_to_scalar(
+    lambda a: _none_if_masked(float(a.sum(dtype="float64"))) if a.count() else None, "double")
+rf_tile_mean = tile_to_scalar(
+    lambda a: float(a.mean(dtype="float64")) if a.count() else None, "double")
 rf_tile_min = tile_to_scalar(lambda a: float(a.min()) if a.count() else None, "double")
 rf_tile_max = tile_to_scalar(lambda a: float(a.max()) if a.count() else None, "double")
 
@@ -45,34 +47,18 @@ rf_for_all = tile_to_scalar(
 rf_is_no_data_tile = tile_to_scalar(lambda a: bool(a.count() == 0), "boolean")
 
 
-_STATS_T = (
-    "struct<data_cells:bigint,no_data_cells:bigint,"
-    "min:double,max:double,mean:double,variance:double>"
-)
+_STATS_T = T.StructType(
+    [T.StructField(n, T.LongType()) for n in ("data_cells", "no_data_cells")]
+    + [T.StructField(n, T.DoubleType()) for n in ("min", "max", "mean", "variance")])
 
 
-@lazy_pandas_udf(_STATS_T)
-def _tile_stats_udf(t: pd.DataFrame) -> pd.DataFrame:
-    tiles = decode_struct_pdf(t)
-    rows = []
-    for tile in tiles:
-        if tile is None:
-            rows.append((None,) * 6)
-            continue
-        a = tile.masked()
-        n = int(a.count())
-        nd = int(np.ma.getmaskarray(a).sum())
-        if n == 0:
-            rows.append((0, nd, None, None, None, None))
-        else:
-            af = a.astype("float64")
-            s = float(af.sum())
-            ssq = float((af * af).sum())
-            mean = s / n
-            rows.append((n, nd, float(af.min()), float(af.max()), mean, ssq / n - mean * mean))
-    return pd.DataFrame(
-        rows, columns=["data_cells", "no_data_cells", "min", "max", "mean", "variance"]
-    )
+@tile_udf(_STATS_T)
+def _tile_stats_udf(tile: Tile) -> tuple:
+    n, nd, mn, mx, sm, ssq = cell_stats(tile.masked())
+    if n == 0:
+        return (0, nd, None, None, None, None)
+    mean = sm / n
+    return (n, nd, mn, mx, mean, ssq / n - mean * mean)
 
 
 def rf_tile_stats(tile) -> Column:
@@ -96,19 +82,11 @@ def rf_cell_type(tile) -> Column:
 _HIST_T = "map<double,bigint>"
 
 
-@lazy_pandas_udf(_HIST_T)
-def _tile_hist_udf(t: pd.DataFrame) -> pd.Series:
-    tiles = decode_struct_pdf(t)
-    out = []
-    for tile in tiles:
-        if tile is None:
-            out.append(None)
-            continue
-        a = tile.masked()
-        vals = np.asarray(a.compressed(), dtype="float64")
-        uniq, counts = np.unique(vals, return_counts=True)
-        out.append({float(v): int(c) for v, c in zip(uniq, counts)})
-    return pd.Series(out, dtype=object)
+@tile_udf(_HIST_T)
+def _tile_hist_udf(tile: Tile) -> dict:
+    vals = np.asarray(tile.masked().compressed(), dtype="float64")
+    uniq, counts = np.unique(vals, return_counts=True)
+    return {float(v): int(c) for v, c in zip(uniq, counts)}
 
 
 def rf_tile_histogram(tile) -> Column:

@@ -34,6 +34,7 @@ def zonal_stats(raster: DataFrame, zones: DataFrame,
     intersects at least one tile.
     """
     import rasterframes_spark as rf
+    from rasterframes_spark.functions.aggregates import _partials
 
     for s in stats:
         if s not in _STAT_FNS:
@@ -60,6 +61,9 @@ def zonal_stats(raster: DataFrame, zones: DataFrame,
                             dims_c, dims_r),
         ).alias("__zt"),
     )
+    # every statistic reads the one per-tile cell-statistics partial, so
+    # the aggregation crosses into Python once whatever ``stats`` asks for
+    p = _partials("__zt")
     aggs = []
     for s in stats:
         if s == "mean":
@@ -67,11 +71,13 @@ def zonal_stats(raster: DataFrame, zones: DataFrame,
         elif s == "data_cells":
             aggs.append(rf.rf_agg_data_cells("__zt").alias("data_cells"))
         elif s == "min":
-            aggs.append(F.min(rf.rf_tile_min("__zt")).alias("min"))
+            aggs.append(F.min(p.getField("mn")).alias("min"))
         elif s == "max":
-            aggs.append(F.max(rf.rf_tile_max("__zt")).alias("max"))
+            aggs.append(F.max(p.getField("mx")).alias("max"))
         elif s == "sum":
-            aggs.append(F.sum(rf.rf_tile_sum("__zt")).alias("sum"))
+            # tiles without data cells add nothing, so an empty zone is null
+            aggs.append(F.sum(F.when(p.getField("cnt") > 0, p.getField("sm")))
+                        .alias("sum"))
         elif s == "stats":
             aggs.append(rf.rf_agg_stats("__zt").alias("stats"))
     return burned.groupBy(zone_id).agg(*aggs)

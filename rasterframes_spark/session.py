@@ -105,12 +105,7 @@ def register_sql_functions(spark: SparkSession) -> None:
         "rf_exists": ts.rf_exists, "rf_for_all": ts.rf_for_all,
         "rf_is_no_data_tile": ts.rf_is_no_data_tile,
     }.items():
-        # tile_to_scalar ops close over a lazy udf in __closure__
-        for cell in op.__closure__ or []:
-            c = cell.cell_contents
-            if callable(c) and hasattr(c, "returnType"):
-                reg(name, c)
-                break
+        reg(name, op.udf)
 
     reg("rf_tile_stats", ts._tile_stats_udf)
     reg("rf_tile_histogram", ts._tile_hist_udf)
@@ -349,32 +344,24 @@ def _register_sql_aggregates(spark: SparkSession) -> None:
     scalar components; the DataFrame-level ``rf_agg_stats``/
     ``rf_agg_approx_histogram`` compositions remain the scale path (per-
     tile partials combined by Spark built-ins)."""
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    from rasterframes_spark.tile import Tile
-
-    def tiles_of(s: pd.Series):
-        for v in s.values:
-            if v is None or v.get("cells") is None:
-                continue
-            yield Tile.from_parts(v["cell_type"], int(v["cols"]), int(v["rows"]),
-                                  bytes(v["cells"]))
+    from rasterframes_spark.functions.aggregates import cell_stats
+    from rasterframes_spark.functions.constructors import _tiles_from_dict_series
 
     def stats_of(s: pd.Series):
         tot = tot2 = 0.0
         n = nd = 0
-        mn, mx = np.inf, -np.inf
-        for t in tiles_of(s):
-            m = t.masked().astype("float64")
-            c = int(m.count())
+        mn, mx = float("inf"), float("-inf")
+        for t in _tiles_from_dict_series(s):
+            if t is None:
+                continue
+            c, tnd, tmn, tmx, sm, ssq = cell_stats(t.masked())
             if c:
-                tot += float(m.sum())
-                tot2 += float((m.astype("float64") ** 2).sum())
-                mn = min(mn, float(m.min()))
-                mx = max(mx, float(m.max()))
+                tot, tot2 = tot + sm, tot2 + ssq
+                mn, mx = min(mn, tmn), max(mx, tmx)
             n += c
-            nd += int(np.ma.getmaskarray(m).sum())
+            nd += tnd
         return n, nd, mn, mx, tot, tot2
 
     def agg_mean(t: pd.Series) -> float:

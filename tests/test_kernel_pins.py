@@ -1,0 +1,216 @@
+"""Output pins for the per-row tile kernels.
+
+Every kernel runs on the same four rows: an ordinary uint16 tile, an
+int32 tile with NoData cells, an all-NoData tile and a null tile.  Each
+output value is reduced to a canonical JSON form (Rows as dicts, bytes as
+a sha256 prefix, floats by ``repr``) and compared against the digest
+pinned below, so any change in values, cell types, NoData masks or
+null-in behaviour fails here.  ``rf_tile_stats`` is pinned field by field:
+its mean and variance are compared at rel 1e-12, the rest exactly.
+
+When a kernel's output is *meant* to change, re-pin it from
+``_canon`` / ``_digest`` below and say why in the change log.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import json
+
+import numpy as np
+import pytest
+
+from pyspark.sql import Row, functions as F
+
+NC, NR = 8, 6
+
+
+def _inputs():
+    from rasterframes_spark.tile import CellType, Tile
+
+    n = NC * NR
+    u16 = (np.arange(n) * 1237 % 60000 + 1).astype("uint16").reshape(NR, NC)
+    i32 = (5000 - np.arange(n) * 977).astype("int32").reshape(NR, NC)
+    i32_mask = (np.arange(n) % 5 == 2).reshape(NR, NC)
+    return [
+        Tile(np.ma.masked_array(u16), CellType.parse("uint16")),
+        Tile(np.ma.masked_array(i32, mask=i32_mask), CellType.parse("int32")),
+        Tile(np.ma.masked_array(np.zeros((NR, NC), "uint16"), mask=True),
+             CellType.parse("uint16")),
+        None,
+    ]
+
+
+def _companion():
+    from rasterframes_spark.tile import CellType, Tile
+
+    u = np.arange(NC * NR, dtype="float64").reshape(NR, NC) / 7.0 - 2.0
+    return Tile(np.ma.masked_array(u, mask=(u == u[1, 3])), CellType.parse("float64"))
+
+
+def _kernels():
+    import rasterframes_spark as rf
+
+    t = "t"
+    f64 = rf.rf_convert_cell_type(t, "float64")
+    return {
+        "where": rf.rf_where(t, "u", t),
+        "local_is_in_array": rf.rf_local_is_in(t, F.col("arr")),
+        "array_to_tile": rf.rf_array_to_tile(
+            rf.rf_tile_to_array_double(t), NC, NR, "float32"),
+        "tile_to_array_double": rf.rf_tile_to_array_double(t),
+        "tile_to_array_int": rf.rf_tile_to_array_int(t),
+        "convert_cell_type": rf.rf_convert_cell_type(t, "float32"),
+        "interpret_cell_type_as": rf.rf_interpret_cell_type_as(t, "int16"),
+        "with_no_data": rf.rf_with_no_data(t, 5000),
+        "tile_histogram": rf.rf_tile_histogram(t),
+        "slope": rf.rf_slope(f64, "ext"),
+        "aspect": rf.rf_aspect(f64, "ext"),
+        "hillshade": rf.rf_hillshade(f64, "ext", z_factor=0.01),
+        "render_ascii": rf.rf_render_ascii(t),
+        "render_matrix": rf.rf_render_matrix(f64),
+        "rgb_composite": rf.rf_rgb_composite(t, "u", t),
+        "render_png": rf.rf_render_png(t),
+        "render_png_rgb": rf.rf_render_png(rf.rf_rgb_composite(t, "u", t), "rgb"),
+        "render_color_ramp_png": rf.rf_render_color_ramp_png(t, "magma"),
+        "tile_sum": rf.rf_tile_sum(t),
+        "tile_mean": rf.rf_tile_mean(t),
+        "tile_min": rf.rf_tile_min(t),
+        "tile_max": rf.rf_tile_max(t),
+        "data_cells": rf.rf_data_cells(t),
+        "no_data_cells": rf.rf_no_data_cells(t),
+        "exists": rf.rf_exists(t),
+        "for_all": rf.rf_for_all(t),
+        "is_no_data_tile": rf.rf_is_no_data_tile(t),
+        "fused_tile": rf.rf_local_multiply(rf.rf_local_add(t, 3), "u"),
+        "fused_column_scalar": rf.rf_local_add.scalar(t, F.col("k")),
+        "fused_scalar": rf.rf_tile_sum(rf.rf_local_add(t, 3)),
+        "tile_stats": rf.rf_tile_stats(t),
+    }
+
+
+def _canon(v):
+    if isinstance(v, Row):
+        return {k: _canon(x) for k, x in v.asDict().items()}
+    if isinstance(v, (bytes, bytearray)):
+        return "sha256:" + hashlib.sha256(bytes(v)).hexdigest()[:16]
+    if isinstance(v, dict):
+        return [[_canon(k), _canon(x)] for k, x in sorted(v.items())]
+    if isinstance(v, (list, tuple)):
+        return [_canon(x) for x in v]
+    if isinstance(v, float):
+        return repr(v)
+    return v
+
+
+def _digest(v) -> str:
+    return hashlib.sha256(json.dumps(_canon(v)).encode()).hexdigest()[:12]
+
+
+@pytest.fixture(scope="module")
+def outputs(spark):
+    from pyspark.sql.types import (ArrayType, DoubleType, IntegerType,
+                                   StructField, StructType)
+    from rasterframes_spark.tile import TILE_SCHEMA
+
+    ext_t = StructType([StructField(f, DoubleType()) for f in
+                        ("xmin", "ymin", "xmax", "ymax")])
+    schema = StructType([
+        StructField("id", IntegerType()), StructField("t", TILE_SCHEMA),
+        StructField("u", TILE_SCHEMA), StructField("arr", ArrayType(DoubleType())),
+        StructField("ext", ext_t), StructField("k", DoubleType())])
+    u = _companion().to_row()
+    rows = [(i, None if t is None else t.to_row(), u, [1.0, 5000.0, -18448.0],
+             (0.0, 0.0, 30.0 * NC, 30.0 * NR), 2.5)
+            for i, t in enumerate(_inputs())]
+    df = spark.createDataFrame(rows, schema)
+    ks = _kernels()
+    got = df.select("id", *[c.alias(n) for n, c in ks.items()]).orderBy("id").collect()
+    assert [r["id"] for r in got] == [0, 1, 2, 3]
+    return {n: [r[n] for r in got] for n in ks}
+
+
+# name -> digests of the outputs for (uint16, int32 with NoData, all-NoData, null)
+PINS = {
+    "array_to_tile": ["382595dc29d6", "730ea8a5dd1f", "62365b85b676", "56fe6f601975"],
+    "aspect": ["ad85ec843ede", "7715c626991c", "0893b1da78ac", "56fe6f601975"],
+    "convert_cell_type": ["382595dc29d6", "730ea8a5dd1f", "62365b85b676", "56fe6f601975"],
+    "data_cells": ["98010bd9270f", "aea92132c4cb", "5feceb66ffc8", "74234e98afe7"],
+    "exists": ["b5bea41b6c62", "b5bea41b6c62", "fcbcf165908d", "74234e98afe7"],
+    "for_all": ["b5bea41b6c62", "fcbcf165908d", "fcbcf165908d", "74234e98afe7"],
+    "fused_column_scalar": ["83c6142e9c98", "9894f4a60074", "0893b1da78ac", "56fe6f601975"],
+    "fused_scalar": ["fff31adc6263", "ba5a27a26d92", "74234e98afe7", "74234e98afe7"],
+    "fused_tile": ["5c74f14e377d", "7365da2d3b9a", "0893b1da78ac", "56fe6f601975"],
+    "hillshade": ["6cc9f5cdbc51", "9449844c0eb9", "0893b1da78ac", "56fe6f601975"],
+    "interpret_cell_type_as": ["56e7f0503ae1", "4d5fa2a4485c", "c20cd013bb98", "56fe6f601975"],
+    "is_no_data_tile": ["fcbcf165908d", "fcbcf165908d", "b5bea41b6c62", "74234e98afe7"],
+    "local_is_in_array": ["b705ecacc820", "3cd52f5db43d", "5e48ee5c067e", "56fe6f601975"],
+    "no_data_cells": ["5feceb66ffc8", "4a44dc153642", "98010bd9270f", "74234e98afe7"],
+    "render_ascii": ["c33aa20ef407", "c114faafdb21", "8339492499dc", "74234e98afe7"],
+    "render_color_ramp_png": ["b005db4c8270", "99ca143b73d9", "2cf4b337b357", "74234e98afe7"],
+    "render_matrix": ["341d3a331643", "f2ba99c2a30c", "757818c2a08d", "74234e98afe7"],
+    "render_png": ["8db74727efbe", "25eea45daa68", "91aad98d5d70", "74234e98afe7"],
+    "render_png_rgb": ["7de9b2366b68", "062be35eaa49", "ccb17409d9ec", "74234e98afe7"],
+    "rgb_composite": ["57d5da83e9ec", "43a49c43a69f", "ffe0d966a86e", "56fe6f601975"],
+    "slope": ["5408cc843bfb", "a4593688f638", "0893b1da78ac", "56fe6f601975"],
+    "tile_histogram": ["5c5180bdaff1", "0b8028e5d1f6", "4f53cda18c2b", "74234e98afe7"],
+    "tile_max": ["d0919cbd08bb", "c70d005e147b", "74234e98afe7", "74234e98afe7"],
+    "tile_mean": ["96a3a523a2e5", "ae037d0b30dd", "74234e98afe7", "74234e98afe7"],
+    "tile_min": ["a51162aeeb05", "a05aae5d596e", "74234e98afe7", "74234e98afe7"],
+    "tile_sum": ["2e3e0335c0f9", "77633260342b", "74234e98afe7", "74234e98afe7"],
+    "tile_to_array_double": ["33868b462600", "2abc074bc4d1", "6c381433aa5e", "74234e98afe7"],
+    "tile_to_array_int": ["26527225b00a", "f022e00343ab", "1a34f420d438", "74234e98afe7"],
+    "where": ["1fcc8f6036b0", "29529246b1fe", "0893b1da78ac", "56fe6f601975"],
+    "with_no_data": ["a1b2ea001723", "e63aca21a95d", "c8a8b3f7020c", "56fe6f601975"],
+}
+
+# (data_cells, no_data_cells, min, max, mean, variance) per input row
+STATS_PINS = [
+    (48, 0, 1.0, 58140.0, 29070.5, 293664933.91666675),
+    (38, 10, -39942.0, 5000.0, -17702.394736842107, 179272312.55470908),
+    (0, 48, None, None, None, None),
+]
+
+
+@pytest.mark.parametrize("name", sorted(PINS))
+def test_kernel_output_pinned(outputs, name):
+    assert [_digest(v) for v in outputs[name]] == PINS[name], \
+        json.dumps(_canon(outputs[name]))[:2000]
+
+
+def test_null_tile_gives_all_null_struct(outputs):
+    for name in ("where", "convert_cell_type", "slope", "rgb_composite", "fused_tile"):
+        assert outputs[name][3] == Row(cell_type=None, cols=None, rows=None, cells=None)
+    assert outputs["tile_stats"][3] == Row(
+        data_cells=None, no_data_cells=None, min=None, max=None, mean=None, variance=None)
+
+
+def test_tile_stats_pinned(outputs):
+    got = outputs["tile_stats"]
+    for row, pin in zip(got[:3], STATS_PINS):
+        vals = tuple(row)
+        assert vals[:4] == pin[:4]
+        for g, p in zip(vals[4:], pin[4:]):
+            assert g == (None if p is None else pytest.approx(p, rel=1e-12))
+
+
+def test_tile_sum_mean_accumulate_float32_in_float64(spark):
+    """A float32 tile sums in float64, fused or not, like ``rf_agg_stats``
+    and the reference (float32 accumulation gives 32783808.0 here)."""
+    import rasterframes_spark as rf
+    from rasterframes_spark.tile import Tile
+    from tests.conftest import make_tile_df
+
+    a = (np.random.default_rng(1).random((256, 256)) * 1000).astype("float32")
+    exact = float(a.astype("float64").sum())
+    assert exact == pytest.approx(32783808.4677, abs=1e-3)
+    df = make_tile_df(spark, [Tile(a, "float32")])
+    fused = rf.rf_local_add("tile", 0.0)
+    r = df.select(rf.rf_tile_sum("tile").alias("s"), rf.rf_tile_mean("tile").alias("m"),
+                  rf.rf_tile_sum(fused).alias("fs"),
+                  rf.rf_tile_mean(fused).alias("fm")).head()
+    agg = df.agg(rf.rf_agg_stats("tile").alias("a")).head()["a"]
+    for s in (r["s"], r["fs"], agg["mean"] * a.size):
+        assert s == pytest.approx(exact, rel=1e-12)
+    for m in (r["m"], r["fm"], agg["mean"]):
+        assert m == pytest.approx(exact / a.size, rel=1e-12)
