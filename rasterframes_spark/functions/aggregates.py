@@ -30,6 +30,8 @@ from rasterframes_spark.tile import (
     tiles_to_struct_pdf,
 )
 from rasterframes_spark.functions._kernel import col_or_name, lazy_pandas_udf
+from rasterframes_spark.functions.constructors import _tiles_from_dict_series
+from rasterframes_spark.functions.proj_raster import extent_bounds, overlay, paint
 
 __all__ = [
     "rf_agg_stats", "rf_agg_mean", "rf_agg_data_cells", "rf_agg_no_data_cells",
@@ -90,14 +92,14 @@ def rf_agg_stats(tile) -> Column:
     nd = F.sum(p.getField("nd"))
     sm = F.sum(p.getField("sm"))
     ssq = F.sum(p.getField("ssq"))
-    mean = sm / cnt
+    mean = F.try_divide(sm, cnt)  # all NoData: null, not DIVIDE_BY_ZERO
     return F.struct(
         cnt.alias("data_cells"),
         nd.alias("no_data_cells"),
         F.min(p.getField("mn")).alias("min"),
         F.max(p.getField("mx")).alias("max"),
         mean.alias("mean"),
-        (ssq / cnt - mean * mean).alias("variance"),
+        (F.try_divide(ssq, cnt) - mean * mean).alias("variance"),
     )
 
 
@@ -105,7 +107,7 @@ def rf_agg_mean(tile) -> Column:
     """Mean of all cells — pure built-ins over the per-tile partial
     (aggregates/CellMeanAggregate.scala:44-80)."""
     p = _partials(tile)
-    return F.sum(p.getField("sm")) / F.sum(p.getField("cnt"))
+    return F.try_divide(F.sum(p.getField("sm")), F.sum(p.getField("cnt")))
 
 
 def rf_agg_data_cells(tile) -> Column:
@@ -711,84 +713,46 @@ def rf_agg_overview_raster(df: DataFrame, tile: str, extent: str, crs: str,
     what the driver collects to <= merge_partitions canvases — at cluster
     scale tens of thousands of partition canvases (float64 + mask, ~2-3 MB
     each) would otherwise make the driver merge a multi-GB sink."""
-    from rasterframes_spark.geom import proj as P
-
-    dxmin, dymin, dxmax, dymax = dest_extent
     nc, nr = int(cols), int(rows)
     src = df.select(col_or_name(tile).alias("t"), col_or_name(extent).alias("e"),
                     col_or_name(crs).alias("c"))
 
+    def blank():
+        return np.zeros((nr, nc), dtype="float64"), np.ones((nr, nc), dtype=bool)
+
+    def overlay_all(canvas, mask, canvases, masks):
+        for cb, mb in zip(canvases, masks):
+            overlay(canvas, mask, np.frombuffer(cb, dtype="float64").reshape(nr, nc),
+                    np.frombuffer(mb, dtype=bool).reshape(nr, nc))
+
+    def emit(canvas, mask):
+        return pd.DataFrame({"canvas": [canvas.tobytes()], "mask": [mask.tobytes()]})
+
     def partial(iterator):
-        canvas = np.zeros((nr, nc), dtype="float64")
-        mask = np.ones((nr, nc), dtype=bool)
-        pw = (dxmax - dxmin) / nc
-        ph = (dymax - dymin) / nr
-        cx = dxmin + (np.arange(nc) + 0.5) * pw
-        cy = dymax - (np.arange(nr) + 0.5) * ph
-        gx, gy = np.meshgrid(cx, cy)
+        canvas, mask = blank()
         painted = False
         for pdf in iterator:
-            structs = pd.DataFrame([
-                t if t is not None else {"cell_type": None, "cols": None, "rows": None, "cells": None}
-                for t in pdf["t"]
-            ])
-            tiles = decode_struct_pdf(structs)
-            for i, tl in enumerate(tiles):
-                if tl is None:
-                    continue
-                e = pdf["e"].values[i]
-                rcrs = str(pdf["c"].values[i])
-                tx, ty = P.transform_points(gx.ravel(), gy.ravel(), dest_crs, rcrs)
-                rxmin, rymin, rxmax, rymax = (float(e["xmin"]), float(e["ymin"]),
-                                              float(e["xmax"]), float(e["ymax"]))
-                rpw = (rxmax - rxmin) / tl.cols
-                rph = (rymax - rymin) / tl.rows
-                ci = np.floor((tx - rxmin) / rpw).astype("int64")
-                ri = np.floor((rymax - ty) / rph).astype("int64")
-                valid = (ci >= 0) & (ci < tl.cols) & (ri >= 0) & (ri < tl.rows)
-                if not valid.any():
-                    continue
-                vals = tl.masked().astype("float64")
-                sample = np.zeros(ci.shape, dtype="float64")
-                smask = ~valid
-                sv = vals[ri[valid], ci[valid]]
-                sample[valid] = np.asarray(sv.filled(0))
-                smask[valid] |= np.ma.getmaskarray(sv)
-                sample = sample.reshape(nr, nc)
-                smask = smask.reshape(nr, nc)
-                fill = mask & ~smask
-                canvas[fill] = sample[fill]
-                mask &= ~fill
-                painted = True
+            for tl, e, c in zip(_tiles_from_dict_series(pdf["t"]), pdf["e"].values,
+                                pdf["c"].values):
+                if tl is not None:
+                    painted |= paint(canvas, mask, dest_extent, dest_crs, tl,
+                                     extent_bounds(e), str(c))
         if painted:
-            yield pd.DataFrame({"canvas": [canvas.tobytes()], "mask": [mask.tobytes()]})
+            yield emit(canvas, mask)
 
     def merge_pass(iterator):
-        canvas = np.zeros((nr, nc), dtype="float64")
-        mask = np.ones((nr, nc), dtype=bool)
+        canvas, mask = blank()
         merged = False
         for pdf in iterator:
-            for cb, mb in zip(pdf["canvas"].values, pdf["mask"].values):
-                pc = np.frombuffer(cb, dtype="float64").reshape(nr, nc)
-                pm = np.frombuffer(mb, dtype=bool).reshape(nr, nc)
-                fill = mask & ~pm
-                canvas[fill] = pc[fill]
-                mask &= ~fill
-                merged = True
+            overlay_all(canvas, mask, pdf["canvas"].values, pdf["mask"].values)
+            merged = merged or len(pdf) > 0
         if merged:
-            yield pd.DataFrame({"canvas": [canvas.tobytes()],
-                                "mask": [mask.tobytes()]})
+            yield emit(canvas, mask)
 
     parts = _overview_partials(src, partial, merge_pass,
                                merge_partitions).collect()
-    canvas = np.zeros((nr, nc), dtype="float64")
-    mask = np.ones((nr, nc), dtype=bool)
-    for row in parts:
-        pc = np.frombuffer(row["canvas"], dtype="float64").reshape(nr, nc)
-        pm = np.frombuffer(row["mask"], dtype=bool).reshape(nr, nc)
-        fill = mask & ~pm
-        canvas[fill] = pc[fill]
-        mask &= ~fill
+    canvas, mask = blank()
+    overlay_all(canvas, mask, [r["canvas"] for r in parts], [r["mask"] for r in parts])
     return Tile(np.ma.masked_array(canvas, mask=mask), CellType.parse("float64"))
 
 

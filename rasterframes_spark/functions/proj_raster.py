@@ -16,7 +16,7 @@ from pyspark.sql import Column, functions as F
 
 from rasterframes_spark.tile import CellType, Tile, TILE_SCHEMA
 from rasterframes_spark.functions._kernel import col_or_name, lazy_pandas_udf, tile_udf
-from rasterframes_spark.geom import core as G
+from rasterframes_spark.geom import core as G, proj as P
 
 __all__ = [
     "rf_proj_raster", "rf_tile", "rf_extent", "rf_crs", "rf_geometry",
@@ -56,6 +56,89 @@ def rf_geometry(proj_raster) -> Column:
     from rasterframes_spark.geom.functions import st_geometry
 
     return st_geometry(col_or_name(proj_raster).getField("extent"))
+
+
+# ---------------------------------------------------------------------------
+# warp-and-merge: the reproject-and-merge kernel (functions/package.scala:
+# 102-137) that raster_join, the overview raster and the slippy export share
+# ---------------------------------------------------------------------------
+
+RESAMPLING = ("nearest", "bilinear")
+
+
+def extent_bounds(extent) -> tuple:
+    """(xmin, ymin, xmax, ymax) floats of an extent struct (dict or Row)."""
+    return tuple(float(extent[k]) for k in ("xmin", "ymin", "xmax", "ymax"))
+
+
+def overlay(canvas: np.ndarray, mask: np.ndarray, src: np.ndarray,
+            src_mask: np.ndarray) -> None:
+    """Same-grid merge in place: ``src`` fills the ``canvas`` cells still
+    set in ``mask`` wherever ``src_mask`` is unset — the first value that
+    is not NoData wins (GeoTrellis merge) — and those cells leave ``mask``."""
+    fill = mask & ~src_mask
+    canvas[fill] = src[fill]
+    mask &= ~fill
+
+
+def paint(canvas: np.ndarray, mask: np.ndarray, dest_extent, dest_crs: str,
+          tile: Tile, src_extent, src_crs: str,
+          resampling: str = "nearest") -> bool:
+    """Warp ``tile`` (over ``src_extent`` in ``src_crs``) onto the float64
+    ``canvas`` (a north-up grid over ``dest_extent`` in ``dest_crs``) and
+    :func:`overlay` it there. Each destination pixel centre is transformed
+    into ``src_crs`` and sampled nearest or bilinear (one of
+    :data:`RESAMPLING`); centres off the tile stay NoData. Extents are
+    (xmin, ymin, xmax, ymax). True when any centre falls on the tile."""
+    rows, cols = canvas.shape
+    dxmin, dymin, dxmax, dymax = dest_extent
+    pw = (dxmax - dxmin) / cols
+    ph = (dymax - dymin) / rows
+    gx, gy = np.meshgrid(dxmin + (np.arange(cols) + 0.5) * pw,
+                         dymax - (np.arange(rows) + 0.5) * ph)
+    tx, ty = P.transform_points(gx.ravel(), gy.ravel(), dest_crs, src_crs)
+    sxmin, symin, sxmax, symax = src_extent
+    spw = (sxmax - sxmin) / tile.cols
+    sph = (symax - symin) / tile.rows
+    fc = (tx - sxmin) / spw
+    fr = (symax - ty) / sph
+    sample = _bilinear if resampling == "bilinear" else _nearest
+    values, vmask, on_tile = sample(tile, fc, fr)
+    overlay(canvas, mask, values.reshape(rows, cols), vmask.reshape(rows, cols))
+    return bool(on_tile.any())
+
+
+def _nearest(tile: Tile, fc: np.ndarray, fr: np.ndarray):
+    """Sample of the cell holding each fractional pixel coordinate:
+    (values, NoData mask, on-tile mask)."""
+    ci = np.floor(fc).astype("int64")
+    ri = np.floor(fr).astype("int64")
+    valid = (ci >= 0) & (ci < tile.cols) & (ri >= 0) & (ri < tile.rows)
+    values = np.zeros(ci.shape, dtype="float64")
+    vmask = ~valid
+    if valid.any():
+        sv = tile.masked().astype("float64")[ri[valid], ci[valid]]
+        values[valid] = sv.filled(0)
+        vmask[valid] |= np.ma.getmaskarray(sv)
+    return values, vmask, valid
+
+
+def _bilinear(tile: Tile, fc: np.ndarray, fr: np.ndarray):
+    """Bilinear sample at fractional pixel coords (pixel-center convention):
+    (values, NoData mask, on-tile mask)."""
+    filled = tile.masked().astype("float64").filled(np.nan)
+    x = fc - 0.5
+    y = fr - 0.5
+    x0 = np.clip(np.floor(x).astype("int64"), 0, tile.cols - 1)
+    y0 = np.clip(np.floor(y).astype("int64"), 0, tile.rows - 1)
+    x1 = np.clip(x0 + 1, 0, tile.cols - 1)
+    y1 = np.clip(y0 + 1, 0, tile.rows - 1)
+    wx = np.clip(x - x0, 0, 1)
+    wy = np.clip(y - y0, 0, 1)
+    values = (filled[y0, x0] * (1 - wx) * (1 - wy) + filled[y0, x1] * wx * (1 - wy)
+              + filled[y1, x0] * (1 - wx) * wy + filled[y1, x1] * wx * wy)
+    inside = (fc >= 0) & (fc <= tile.cols) & (fr >= 0) & (fr <= tile.rows)
+    return values, ~inside | np.isnan(values), inside
 
 
 # ---------------------------------------------------------------------------

@@ -23,8 +23,11 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from rasterframes_spark.tile import CellType, Tile, TILE_SCHEMA
+from rasterframes_spark.tile import (
+    CellType, Tile, TILE_SCHEMA, decode_struct_pdf, tiles_to_struct_pdf)
 from rasterframes_spark.functions._kernel import lazy_pandas_udf
+from rasterframes_spark.functions.proj_raster import (
+    RESAMPLING, extent_bounds, overlay, paint)
 from rasterframes_spark.geom import proj as P
 from rasterframes_spark.geom.functions import rf_spatial_grid_cells
 
@@ -45,109 +48,36 @@ def _extent_to_4326_udf(e: pd.DataFrame, crs: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=["xmin", "ymin", "xmax", "ymax"])
 
 
-def _merge_kernel(resampling: str):
-    @lazy_pandas_udf(TILE_SCHEMA)
-    def udf(ltile: pd.DataFrame, lext: pd.DataFrame, lcrs: pd.Series,
-            rtiles: pd.Series) -> pd.DataFrame:
-        from rasterframes_spark.tile import decode_struct_pdf, tiles_to_struct_pdf
-
-        left_tiles = decode_struct_pdf(ltile)
-        out = []
-        for i in range(len(ltile)):
-            lt = left_tiles[i]
-            matches = rtiles.values[i]
-            if lt is None:
-                out.append(None)
-                continue
-            rows_, cols_ = lt.rows, lt.cols
-            le = lext.iloc[i]
-            lxmin, lymin, lxmax, lymax = (float(le["xmin"]), float(le["ymin"]),
-                                          float(le["xmax"]), float(le["ymax"]))
-            lcrs_s = str(lcrs.values[i])
-            # dest pixel centers in left CRS (north-up grid)
-            pw = (lxmax - lxmin) / cols_
-            ph = (lymax - lymin) / rows_
-            cx = lxmin + (np.arange(cols_) + 0.5) * pw
-            cy = lymax - (np.arange(rows_) + 0.5) * ph
-            gx, gy = np.meshgrid(cx, cy)
-
-            dest = None
-            dest_mask = np.ones((rows_, cols_), dtype=bool)
-            dest_ct = None
-            if matches is not None:
-                for m in matches:
-                    rt = m["tile"]
-                    if rt is None or rt["cells"] is None:
-                        continue
-                    tile = Tile.from_parts(rt["cell_type"], rt["cols"], rt["rows"],
-                                           bytes(rt["cells"]))
-                    re_ = m["extent"]
-                    rcrs = str(m["crs"])
-                    rxmin, rymin, rxmax, rymax = (float(re_["xmin"]), float(re_["ymin"]),
-                                                  float(re_["xmax"]), float(re_["ymax"]))
-                    tx, ty = P.transform_points(gx.ravel(), gy.ravel(), lcrs_s, rcrs)
-                    rpw = (rxmax - rxmin) / tile.cols
-                    rph = (rymax - rymin) / tile.rows
-                    fc = (tx - rxmin) / rpw
-                    fr = (rymax - ty) / rph
-                    if resampling in ("bilinear",):
-                        sample, smask = _bilinear(tile, fc, fr)
-                    else:
-                        ci = np.floor(fc).astype("int64")
-                        ri = np.floor(fr).astype("int64")
-                        valid = (ci >= 0) & (ci < tile.cols) & (ri >= 0) & (ri < tile.rows)
-                        sample = np.zeros(ci.shape, dtype="float64")
-                        smask = ~valid
-                        if valid.any():
-                            vals = tile.masked().astype("float64")
-                            sv = vals[ri[valid], ci[valid]]
-                            sample[valid] = np.asarray(sv.filled(0))
-                            smask[valid] |= np.ma.getmaskarray(sv)
-                    sample = sample.reshape(rows_, cols_)
-                    smask = smask.reshape(rows_, cols_)
-                    if dest is None:
-                        dest = np.zeros((rows_, cols_), dtype="float64")
-                        dest_ct = tile.cell_type
-                    # merge: first non-NoData wins (GeoTrellis merge semantics)
-                    fill = dest_mask & ~smask
-                    dest[fill] = sample[fill]
-                    dest_mask &= ~fill
-            if dest is None:
-                dest = np.zeros((rows_, cols_), dtype="float64")
-                dest_ct = lt.cell_type
-            ct = dest_ct if dest_ct.has_nodata else CellType.from_numpy(dest_ct.dtype, "default")
-            out.append(Tile(np.ma.masked_array(dest.astype(ct.dtype), mask=dest_mask), ct))
-        return tiles_to_struct_pdf(out)
-
-    return udf
+def _canvas_tile(canvas: np.ndarray, mask: np.ndarray, ct: CellType) -> Tile:
+    """A merged float64 canvas as a tile of ``ct``, changed to a cell type
+    that can hold NoData."""
+    if not ct.has_nodata:
+        ct = CellType.from_numpy(ct.dtype, "default")
+    return Tile(np.ma.masked_array(canvas.astype(ct.dtype), mask=mask), ct)
 
 
-def _bilinear(tile: Tile, fc: np.ndarray, fr: np.ndarray):
-    """Bilinear sample at fractional pixel coords (pixel-center convention)."""
-    vals = tile.masked().astype("float64")
-    filled = vals.filled(np.nan)
-    x = fc - 0.5
-    y = fr - 0.5
-    x0 = np.clip(np.floor(x).astype("int64"), 0, tile.cols - 1)
-    y0 = np.clip(np.floor(y).astype("int64"), 0, tile.rows - 1)
-    x1 = np.clip(x0 + 1, 0, tile.cols - 1)
-    y1 = np.clip(y0 + 1, 0, tile.rows - 1)
-    wx = np.clip(x - x0, 0, 1)
-    wy = np.clip(y - y0, 0, 1)
-    v00 = filled[y0, x0]
-    v01 = filled[y0, x1]
-    v10 = filled[y1, x0]
-    v11 = filled[y1, x1]
-    sample = (v00 * (1 - wx) * (1 - wy) + v01 * wx * (1 - wy)
-              + v10 * (1 - wx) * wy + v11 * wx * wy)
-    inside = (fc >= 0) & (fc <= tile.cols) & (fr >= 0) & (fr <= tile.rows)
-    smask = ~inside | np.isnan(sample)
-    return np.where(smask, 0.0, sample), smask
-
-
-_PAYLOAD_DDL = ("struct<tile:struct<cell_type:string,cols:int,rows:int,cells:binary>,"
-                "extent:struct<xmin:double,ymin:double,xmax:double,ymax:double>,"
-                "crs:string>")
+@lazy_pandas_udf(TILE_SCHEMA)
+def _overlay_partials(ltile: pd.DataFrame, partials: pd.Series) -> pd.DataFrame:
+    """Final merge: each left tile's chunk partials, already on its grid,
+    overlaid in chunk order; the result takes the first partial's cell
+    type. A row without partials is all NoData in the left cell type."""
+    out = []
+    for lt, parts in zip(decode_struct_pdf(ltile), partials.values):
+        if lt is None:
+            out.append(None)
+            continue
+        canvas = np.zeros((lt.rows, lt.cols), dtype="float64")
+        mask = np.ones((lt.rows, lt.cols), dtype=bool)
+        ct = lt.cell_type
+        for i, p in enumerate(parts if parts is not None else ()):
+            part = Tile.from_parts(p["cell_type"], p["cols"], p["rows"],
+                                   bytes(p["cells"]))
+            if i == 0:
+                ct = part.cell_type
+            m = part.masked()
+            overlay(canvas, mask, m.data, np.ma.getmaskarray(m))
+        out.append(_canvas_tile(canvas, mask, ct))
+    return tiles_to_struct_pdf(out)
 
 
 _MERGE_TARGET_BYTES = 16 * 1024 * 1024  # per merge-shuffle partition
@@ -277,12 +207,12 @@ def _merge_shuffle_partitions(L, R, right_tiles,
     return min(n, _MERGE_MAX_PARTITIONS)
 
 
-def _chunked_premerge(L, matched, kernel, right_tiles, left_tile, left_extent,
-                      left_crs, max_fan_in: int, n_merge: int | None = None):
+def _chunked_premerge(L, matched, right_tiles, left_tile, left_extent,
+                      left_crs, resampling: str, max_fan_in: int,
+                      n_merge: int | None = None):
     """Two-level bounded merge: (lid, chunk) partial canvases on the left
-    grid (each grouped task holds ≤ max_fan_in right tiles), then chunk-
-    ordered partial list per lid. Output schema matches the single-pass
-    grouped aggregate (__lid, __rl_<band> array<payload>)."""
+    grid (each grouped task holds ≤ max_fan_in right tiles), then the
+    chunk-ordered partial list per lid (__lid, __rl_<band> array<tile>)."""
     from pyspark.sql import Window
 
     lmeta = L.select(
@@ -300,35 +230,31 @@ def _chunked_premerge(L, matched, kernel, right_tiles, left_tile, left_extent,
         .join(lmeta, ["__lid", "__lid2"])
     )
     mid_schema = "__lid long, __lid2 long, __chunk long, " + ", ".join(
-        f"__rp_{rt} {_PAYLOAD_DDL}" for rt in right_tiles)
-    kfn = kernel.fn
+        f"__rp_{rt} {TILE_SCHEMA.simpleString()}" for rt in right_tiles)
 
     def premerge(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        from rasterframes_spark.tile import tiles_to_struct_pdf
-
         pdf = pdf.sort_values(["__rid", "__rid2", "__rid3"])
         r0 = pdf.iloc[0]
-        lext_d = dict(r0["__lext"])
-        ct = CellType.parse(str(r0["__lct"]))
-        canvas = Tile(
-            np.ma.masked_array(
-                np.zeros((int(r0["__lrows"]), int(r0["__lcols"])), dtype=ct.dtype),
-                mask=True),
-            ct)
-        ltile_pdf = tiles_to_struct_pdf([canvas])
-        lext_pdf = pd.DataFrame([{k: float(lext_d[k])
-                                  for k in ("xmin", "ymin", "xmax", "ymax")}])
-        lcrs_series = pd.Series([str(r0["__lcrs"])])
         out = {"__lid": [key[0]], "__lid2": [key[1]], "__chunk": [int(key[2])]}
+        if r0["__lct"] is None:  # a null left tile merges to null
+            return pd.DataFrame(out | {f"__rp_{rt}": [None] for rt in right_tiles})
+        lext, lcrs = extent_bounds(r0["__lext"]), str(r0["__lcrs"])
+        shape = (int(r0["__lrows"]), int(r0["__lcols"]))
         for rt in right_tiles:
-            matches = pd.Series([list(pdf[f"__rp_{rt}"])], dtype=object)
-            res = kfn(ltile_pdf, lext_pdf, lcrs_series, matches)
-            out[f"__rp_{rt}"] = [{
-                "tile": {c: res[c].iloc[0] for c in
-                         ("cell_type", "cols", "rows", "cells")},
-                "extent": lext_d,
-                "crs": str(r0["__lcrs"]),
-            }]
+            canvas = np.zeros(shape, dtype="float64")
+            mask = np.ones(shape, dtype=bool)
+            ct = None
+            for p in pdf[f"__rp_{rt}"]:
+                t = p["tile"]
+                if t is None or t["cells"] is None:
+                    continue
+                tile = Tile.from_parts(t["cell_type"], t["cols"], t["rows"],
+                                       bytes(t["cells"]))
+                ct = ct or tile.cell_type
+                paint(canvas, mask, lext, lcrs, tile, extent_bounds(p["extent"]),
+                      str(p["crs"]), resampling)
+            ct = ct or CellType.parse(str(r0["__lct"]))
+            out[f"__rp_{rt}"] = [_canvas_tile(canvas, mask, ct).to_row()]
         return pd.DataFrame(out)
 
     partials = chunked.groupBy("__lid", "__lid2", "__chunk").applyInPandas(
@@ -359,7 +285,7 @@ def raster_join(
     right_crs: str = "crs",
     resampling: str = "nearest",
     cell_size_deg: float | None = None,
-    max_fan_in: int | None = 256,
+    max_fan_in: int = 256,
     cache_inputs: bool = True,
     merge_partitions: int | str | None = "auto",
 ) -> DataFrame:
@@ -368,19 +294,23 @@ def raster_join(
     Returns left's columns plus, for each right tile column, a tile merged
     onto the left grid (same column name; NoData where no coverage).
 
-    ``max_fan_in`` (default 256) bounds how many matched right tiles one
-    task ever buffers — without it a deep temporal stack (thousands of
-    scenes over one left tile) OOMs the merge task. Bounded mode is a
-    chunked two-level merge: right tiles pre-merge onto the left grid in
-    rid-ordered chunks of ≤N per grouped task, then the (few) partial
-    canvases merge in chunk order. Value-identical to the single-pass
-    aggregate (first-non-NoData-wins in the same rid order; the final pass
-    resamples identity-grid partials exactly), measured +10% on small
-    footprint joins — the price of the hard memory bound.
-    ``max_fan_in=None`` opts into the single-pass aggregate (fastest when
-    fan-in is known small). ``cache_inputs=False`` skips the persists
-    when the caller manages caching or inputs are already materialized
-    tables.
+    Each right tile is warped once onto the left grid by
+    :func:`~rasterframes_spark.functions.proj_raster.paint`, sampling the
+    left pixel centres ``"nearest"`` (default) or ``"bilinear"``; where
+    right tiles overlap, the first one that is not NoData wins, in a
+    deterministic right-row order.
+
+    ``max_fan_in`` (default 256, a positive int) bounds how many matched
+    right tiles one task ever buffers — without it a deep temporal stack
+    (thousands of scenes over one left tile) OOMs the merge task. Right
+    tiles merge onto the left grid in ordered chunks of ≤N per grouped
+    task; each left row then overlays its chunk partials, already on its
+    grid, in chunk order. A partial takes the cell type of its chunk's
+    first non-null right tile and the result that of its first partial,
+    each changed to a type that can hold NoData; a left row with no
+    coverage gets all NoData in the left tile's cell type; a null left
+    tile gives null. ``cache_inputs=False`` skips the persists when the
+    caller manages caching or inputs are already materialized tables.
 
     ``merge_partitions`` sizes the merge-stage shuffles: ``"auto"``
     (default) first bounds the payload with Catalyst's free sizeInBytes
@@ -410,6 +340,13 @@ def raster_join(
     materialized (written / collected / re-cached), or pass
     ``cache_inputs=False``.
     """
+    if resampling not in RESAMPLING:
+        raise ValueError(
+            f"resampling must be one of {RESAMPLING}, got {resampling!r}")
+    if (not isinstance(max_fan_in, int) or isinstance(max_fan_in, bool)
+            or max_fan_in < 1):
+        raise ValueError(
+            f"max_fan_in must be a positive int, got {max_fan_in!r}")
     right_tiles = right_tiles or ["tile"]
 
     # DETERMINISTIC row ids (128-bit content hashes), not
@@ -506,8 +443,7 @@ def raster_join(
     # third sort key: full-payload hash, computed ONLY on the payload
     # branch (post-join, where cells are read anyway) — it breaks merge-
     # order ties among right rows that share extent/shape metadata (deep
-    # stacks) identically in both the single-pass and chunked paths,
-    # without the metadata pass ever touching cell data
+    # stacks) without the metadata pass ever touching cell data
     r_payload = r_payload.withColumn(
         "__rid3", F.xxhash64(*[F.col(f"__rp_{rt}") for rt in right_tiles]))
     # volume-scaled merge shuffles (None = session default, plan as-is)
@@ -537,47 +473,17 @@ def raster_join(
         matched = matched.repartition(n_merge, "__lid", "__lid2")
     else:
         matched = pairs.join(r_payload, ["__rid", "__rid2"])
-    kernel = _merge_kernel(resampling)
-
-    def _single_pass(m):
-        # rid-ordered merge list: collect_list order is arrival order
-        # (nondeterministic under retries/partitioning); sorting by __rid
-        # makes first-non-NoData-wins deterministic and identical to the
-        # chunked max_fan_in path
-        return m.groupBy("__lid", "__lid2").agg(
-            *[F.transform(
-                F.array_sort(F.collect_list(
-                    F.struct(F.col("__rid").alias("r"),
-                             F.col("__rid2").alias("r2"),
-                             F.col("__rid3").alias("r3"),
-                             F.col(f"__rp_{rt}").alias("p")))),
-                lambda s: s["p"]).alias(f"__rl_{rt}")
-              for rt in right_tiles]
-        )
-
-    if max_fan_in is None:
-        grouped = _single_pass(matched)
-    else:
-        # Every row takes the chunked pre-merge. Measured on a 64-row
-        # footprint join (fan-in 2, min-of-3, local[8]): single-pass
-        # 3.32 s, chunked-for-all 3.66 s (+10%) — a hybrid that filtered
-        # small fan-ins to the single-pass aggregate cost 5.74 s (+73%)
-        # because the branch duplicates the whole spatial-prejoin subtree
-        # and exchange reuse never fires (monotonically_increasing_id is
-        # nondeterministic, so the branches never canonicalize equal).
-        # 10% on small joins buys a hard per-task memory bound.
-        grouped = _chunked_premerge(
-            L, matched, kernel, right_tiles, left_tile, left_extent,
-            left_crs, int(max_fan_in), n_merge=n_merge)
+    grouped = _chunked_premerge(
+        L, matched, right_tiles, left_tile, left_extent, left_crs,
+        resampling, max_fan_in, n_merge=n_merge)
 
     joined = L.join(grouped, ["__lid", "__lid2"], "left")
     out_cols = [c for c in left.columns]
     merged = joined.select(
         *out_cols,
         *[
-            kernel(
-                F.col(left_tile), F.col(left_extent), F.col(left_crs), F.col(f"__rl_{rt}")
-            ).alias(rt if rt not in out_cols else f"{rt}_right")
+            _overlay_partials(F.col(left_tile), F.col(f"__rl_{rt}")).alias(
+                rt if rt not in out_cols else f"{rt}_right")
             for rt in right_tiles
         ],
     )

@@ -285,7 +285,8 @@ def write_slippy(df: DataFrame, directory: str, zoom: int = 4,
                  crs_col: str = "crs") -> None:
     """z/x/y PNG pyramid export (DataFrameSlippyExport.scala:33-170),
     single level, EPSG:4326 inputs gridded onto WebMercator tiles via
-    the raster-join merge kernel semantics (nearest)."""
+    the raster-join merge kernel (nearest)."""
+    from rasterframes_spark.functions.proj_raster import extent_bounds, paint
     from rasterframes_spark.geom import proj as P
 
     rows = df.select(tile_col, extent_col, crs_col).collect()
@@ -299,13 +300,11 @@ def write_slippy(df: DataFrame, directory: str, zoom: int = 4,
     for r in rows:
         t = Tile.from_parts(r[tile_col]["cell_type"], r[tile_col]["cols"],
                             r[tile_col]["rows"], bytes(r[tile_col]["cells"]))
-        a = t.masked().astype("float64")
+        a = t.masked()
         if a.count():
             lo = min(lo, float(a.min()))
             hi = max(hi, float(a.max()))
-        e = r[extent_col]
-        srcs.append((a, (float(e["xmin"]), float(e["ymin"]),
-                         float(e["xmax"]), float(e["ymax"])), r[crs_col]))
+        srcs.append((t, extent_bounds(r[extent_col]), r[crs_col]))
     span = ((hi - lo) or 1.0) if hi >= lo else 1.0
 
     # per-slippy-tile canvases: each z/x/y tile samples the SOURCE at ITS
@@ -313,43 +312,21 @@ def write_slippy(df: DataFrame, directory: str, zoom: int = 4,
     # every covered tile), and overlapping source rows MERGE
     # first-non-NoData instead of overwriting
     canvases = {}
-    for a, (sxmin, symin, sxmax, symax), crs in srcs:
-        merc = P.transform_extent((sxmin, symin, sxmax, symax), crs,
-                                  "EPSG:3857")
+    for t, bounds, crs in srcs:
+        merc = P.transform_extent(bounds, crs, "EPSG:3857")
         x0 = max(0, int((merc[0] + world) / (2 * world) * n))
         x1 = min(n - 1, int((merc[2] + world) / (2 * world) * n))
         y0 = max(0, int((world - merc[3]) / (2 * world) * n))
         y1 = min(n - 1, int((world - merc[1]) / (2 * world) * n))
-        spw = (sxmax - sxmin) / a.shape[1]
-        sph = (symax - symin) / a.shape[0]
         for zx in range(x0, x1 + 1):
             for zy in range(y0, y1 + 1):
                 txmin = -world + zx * step
                 tymax = world - zy * step
-                mx = txmin + (np.arange(256) + 0.5) * step / 256
-                my = tymax - (np.arange(256) + 0.5) * step / 256
-                gx, gy = np.meshgrid(mx, my)
-                sx, sy = P.transform_points(gx.ravel(), gy.ravel(),
-                                            "EPSG:3857", crs)
-                ci = np.floor((sx - sxmin) / spw).astype("int64")
-                ri = np.floor((symax - sy) / sph).astype("int64")
-                valid = ((ci >= 0) & (ci < a.shape[1])
-                         & (ri >= 0) & (ri < a.shape[0]))
-                if not valid.any():
-                    continue
-                sample = np.zeros(ci.shape, dtype="float64")
-                smask = ~valid
-                sv = a[ri[valid], ci[valid]]
-                sample[valid] = np.asarray(sv.filled(0))
-                smask[valid] |= np.ma.getmaskarray(sv)
-                sample = sample.reshape(256, 256)
-                smask = smask.reshape(256, 256)
-                canvas, cmask = canvases.setdefault(
-                    (zx, zy), (np.zeros((256, 256)),
-                               np.ones((256, 256), dtype=bool)))
-                fill = cmask & ~smask
-                canvas[fill] = sample[fill]
-                cmask &= ~fill
+                canvas, cmask = canvases.get((zx, zy)) or (
+                    np.zeros((256, 256)), np.ones((256, 256), dtype=bool))
+                if paint(canvas, cmask, (txmin, tymax - step, txmin + step, tymax),
+                         "EPSG:3857", t, bounds, crs):
+                    canvases[(zx, zy)] = (canvas, cmask)
 
     for (zx, zy), (canvas, cmask) in canvases.items():
         d = os.path.join(directory, str(zoom), str(zx))

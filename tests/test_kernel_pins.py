@@ -214,3 +214,147 @@ def test_tile_sum_mean_accumulate_float32_in_float64(spark):
         assert s == pytest.approx(exact, rel=1e-12)
     for m in (r["m"], r["fm"], agg["mean"]):
         assert m == pytest.approx(exact / a.size, rel=1e-12)
+
+
+# ---------------------------------------------------------------------------
+# Warp-and-merge pins: raster_join, the overview raster and the slippy export
+# all sample tiles at another grid's pixel centres, first non-NoData wins.
+# ---------------------------------------------------------------------------
+
+RJ_SCHEMA = ("id int, tile struct<cell_type:string,cols:int,rows:int,cells:binary>, "
+             "extent struct<xmin:double,ymin:double,xmax:double,ymax:double>, crs string")
+
+
+def _rj_df(spark, rows, num_slices=None):
+    data = [(i, None if t is None else t.to_row(),
+             dict(zip(("xmin", "ymin", "xmax", "ymax"), map(float, e))), crs)
+            for i, t, e, crs in rows]
+    if num_slices is None:
+        return spark.createDataFrame(data, RJ_SCHEMA)
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(data, num_slices), RJ_SCHEMA)
+
+
+def _masked_tile(a, mask, ct):
+    from rasterframes_spark.tile import Tile
+
+    return Tile(np.ma.masked_array(a, mask=mask), ct)
+
+
+def _joined_digests(out):
+    return [_digest([r["id"], r["tile_right"]]) for r in out.orderBy("id").collect()]
+
+
+def test_raster_join_cross_crs_pinned(spark):
+    """uint16 EPSG:4326 right tiles (one raw, one null) merged nearest onto
+    an int16 EPSG:32617 left grid: overlapping, edge, uncovered and null
+    left rows."""
+    from rasterframes_spark.geom import proj as P
+    from rasterframes_spark.operators import raster_join
+    from rasterframes_spark.tile import Tile
+
+    e, n = (float(v[0]) for v in P.transform_points([-78.5], [38.0],
+                                                    "EPSG:4326", "EPSG:32617"))
+    lt = Tile(np.zeros((16, 16), "int16"), "int16")
+    left = _rj_df(spark, [
+        (0, lt, (e - 800, n - 800, e, n), "EPSG:32617"),
+        (1, lt, (e, n - 800, e + 800, n), "EPSG:32617"),
+        (2, lt, (e - 800, n, e, n + 800), "EPSG:32617"),
+        (3, lt, (e + 5000, n + 5000, e + 5800, n + 5800), "EPSG:32617"),
+        (4, None, (e + 9000, n + 9000, e + 9800, n + 9800), "EPSG:32617"),
+    ])
+    rng = np.random.default_rng(11)
+    rights = []
+    for i, (x0, y0, ct) in enumerate([(-78.512, 37.990, "uint16"),
+                                      (-78.503, 37.996, "uint16raw"),
+                                      (-78.507, 37.986, "uint16")]):
+        a = rng.integers(0, 60000, (12, 12)).astype("uint16")
+        a[rng.random((12, 12)) < 0.15] = 0
+        rights.append((10 + i, Tile(a, ct), (x0, y0, x0 + 0.011, y0 + 0.009),
+                       "EPSG:4326"))
+    rights.append((20, None, (-78.51, 37.99, -78.49, 38.01), "EPSG:4326"))
+    out = raster_join(left, _rj_df(spark, rights))
+    assert _joined_digests(out) == [
+        "91d5ac30b741", "f56b7c60ac4f", "9945ac939baa", "4e703cdf610c", "d14797f4f6a0"]
+
+
+def test_raster_join_same_crs_partial_pinned(spark):
+    """float64 right tiles with NaN holes over a float32 EPSG:4326 left grid,
+    off the left pixel grid and covering only part of it."""
+    from rasterframes_spark.operators import raster_join
+    from rasterframes_spark.tile import Tile
+
+    lt = Tile(np.zeros((10, 10), "float32"), "float32")
+    left = _rj_df(spark, [(0, lt, (0, 0, 10, 10), "EPSG:4326"),
+                          (1, lt, (10, 0, 20, 10), "EPSG:4326")])
+    rng = np.random.default_rng(12)
+    rights = []
+    for i, (x0, y0) in enumerate([(1.3, 2.7), (6.45, -1.2), (8.9, 5.05)]):
+        a = rng.random((7, 7)) * 100
+        a[rng.random((7, 7)) < 0.2] = np.nan
+        rights.append((i, Tile(a, "float64"), (x0, y0, x0 + 5.6, y0 + 4.9),
+                       "EPSG:4326"))
+    out = raster_join(left, _rj_df(spark, rights))
+    assert _joined_digests(out) == ["33cdbf29de33", "741867770086"]
+
+
+def test_raster_join_chunked_stack_pinned(spark):
+    """40 overlapping right tiles over one left tile with max_fan_in=8: five
+    chunk partials overlay in chunk order."""
+    from rasterframes_spark.operators import raster_join
+    from rasterframes_spark.tile import Tile
+
+    lt = Tile(np.zeros((12, 12), "float64"), "float64")
+    left = _rj_df(spark, [(0, lt, (0, 0, 12, 12), "EPSG:4326")])
+    rng = np.random.default_rng(13)
+    rights = []
+    for i in range(40):
+        x0, y0 = rng.random(2) * 8
+        mask = rng.random((4, 4)) < 0.25
+        rights.append((i, _masked_tile(np.full((4, 4), i + 1, "uint8"), mask, "uint8"),
+                       (x0, y0, x0 + 4.5, y0 + 4.5), "EPSG:4326"))
+    out = raster_join(left, _rj_df(spark, rights), max_fan_in=8)
+    assert _joined_digests(out) == ["2259c4ff73e1"]
+
+
+def test_overview_raster_pinned(spark):
+    """Six EPSG:4326 float32 tiles with NoData, in three partitions, painted
+    onto an EPSG:3857 canvas that covers part of them."""
+    import rasterframes_spark as rf
+    from rasterframes_spark.geom import proj as P
+
+    rng = np.random.default_rng(14)
+    rows = []
+    for i in range(6):
+        x0, y0 = -80.0 + (i % 3) * 0.5, 37.0 + (i // 3) * 0.5
+        a = (rng.random((9, 9)) * 50).astype("float32")
+        rows.append((i, _masked_tile(a, rng.random((9, 9)) < 0.2, "float32"),
+                     (x0, y0, x0 + 0.5, y0 + 0.5), "EPSG:4326"))
+    df = _rj_df(spark, rows, num_slices=3)
+    dest = P.transform_extent((-79.9, 37.1, -78.7, 37.95), "EPSG:4326", "EPSG:3857")
+    ov = rf.rf_agg_overview_raster(df, "tile", "extent", "crs", 40, 30, dest,
+                                   dest_crs="EPSG:3857", merge_partitions=2)
+    m = ov.masked()
+    assert _digest([ov.cell_type.name, m.data.tobytes(),
+                    np.ma.getmaskarray(m).tobytes()]) == "d260364a4653"
+
+
+def test_write_slippy_pinned(spark, tmp_path):
+    """Overlapping EPSG:4326 tiles and one EPSG:3857 tile exported at zoom 2."""
+    from rasterframes_spark.sources.sinks import write_slippy
+
+    rng = np.random.default_rng(15)
+    world = 2 * 3.141592653589793 * 6378137.0 / 2
+    rows = []
+    for i, (x0, y0) in enumerate([(-100.0, 10.0), (-60.0, 30.0), (20.0, -50.0)]):
+        a = rng.random((16, 20)) * 1000
+        a[rng.random((16, 20)) < 0.1] = np.nan
+        rows.append((i, _masked_tile(a, np.isnan(a), "float64"),
+                     (x0, y0, x0 + 70.0, y0 + 40.0), "EPSG:4326"))
+    a = rng.integers(1, 500, (8, 8)).astype("int32")
+    rows.append((3, _masked_tile(a, a % 7 == 0, "int32"),
+                 (-world / 3, -world / 5, world / 6, world / 4), "EPSG:3857"))
+    out = tmp_path / "slippy"
+    write_slippy(_rj_df(spark, rows), str(out), zoom=2)
+    files = sorted(p for p in out.rglob("*.png"))
+    assert _digest([[str(p.relative_to(out)), p.read_bytes()] for p in files]) == "24174aa7bd31"

@@ -68,6 +68,17 @@ def test_partial_coverage_and_multi_merge(spark, left_df):
     assert float(a[:, :4].mean()) == 1.0 and float(a[:, 4:].mean()) == 2.0
 
 
+def test_null_left_tile_with_coverage_gives_null(spark):
+    rt = Tile(np.full((8, 8), 7.0), "float64")
+    left = spark.createDataFrame(
+        [{"id": 0, "tile": None, "extent": ext(0, 0, 8, 8), "crs": "EPSG:4326"},
+         row(1, rt, ext(0, 0, 8, 8))], schema=SCHEMA)
+    right = spark.createDataFrame([row(0, rt, ext(0, 0, 8, 8))], schema=SCHEMA)
+    rows = raster_join(left, right).orderBy("id").collect()
+    assert rows[0]["tile_right"]["cells"] is None
+    assert get_tile({"tile": rows[1]["tile_right"]}) == rt
+
+
 def test_cross_crs_merge(spark):
     # left in UTM 17N around (-78.5, 38.0); right the same square in 4326
     e, n = P.transform_points([-78.5], [38.0], "EPSG:4326", "EPSG:32617")
@@ -101,11 +112,80 @@ def test_bilinear_resampling(spark):
     assert a[0, 0] < a[-1, -1]
 
 
+def _bilinear_reference(a, src_ext, dst_ext, rows, cols):
+    """Per-pixel loop: sample ``a`` (float64, NaN = NoData) laid over
+    ``src_ext`` at the pixel centres of a rows x cols grid over ``dst_ext``,
+    both in one CRS. Bilinear between the four nearest source centres,
+    clamped at the edges; NaN where a neighbour is NoData or the centre
+    falls off the source."""
+    import math
+
+    sxmin, symin, sxmax, symax = src_ext
+    dxmin, dymin, dxmax, dymax = dst_ext
+    h, w = a.shape
+    pw, ph = (dxmax - dxmin) / cols, (dymax - dymin) / rows
+    spw, sph = (sxmax - sxmin) / w, (symax - symin) / h
+    out = np.full((rows, cols), np.nan)
+    for r in range(rows):
+        for c in range(cols):
+            fc = (dxmin + (c + 0.5) * pw - sxmin) / spw
+            fr = (symax - (dymax - (r + 0.5) * ph)) / sph
+            if not (0 <= fc <= w and 0 <= fr <= h):
+                continue
+            x, y = fc - 0.5, fr - 0.5
+            x0 = min(max(math.floor(x), 0), w - 1)
+            y0 = min(max(math.floor(y), 0), h - 1)
+            x1, y1 = min(x0 + 1, w - 1), min(y0 + 1, h - 1)
+            wx, wy = min(max(x - x0, 0.0), 1.0), min(max(y - y0, 0.0), 1.0)
+            out[r, c] = (a[y0, x0] * (1 - wx) * (1 - wy) + a[y0, x1] * wx * (1 - wy)
+                         + a[y1, x0] * (1 - wx) * wy + a[y1, x1] * wx * wy)
+    return out
+
+
+def test_bilinear_equals_one_warp(spark):
+    """A bilinear join of one uint16 and one float64 band equals a single
+    warp of each right tile onto the left grid: no second resampling of
+    the merged result (which truncated uint16 cells and nudged floats)."""
+    rng = np.random.default_rng(21)
+    u16 = rng.integers(1, 60000, (40, 40)).astype("uint16")
+    u16[rng.random((40, 40)) < 0.05] = 0  # NoData of uint16
+    f64 = rng.random((40, 40)) * 1000
+    f64[rng.random((40, 40)) < 0.05] = np.nan
+    src_ext, dst_ext = (0.0, 0.0, 10.0, 10.0), (-0.3, 0.21, 9.7, 10.21)
+    lt = Tile(np.zeros((50, 50), "float64"), "float64")
+    left = spark.createDataFrame([row(0, lt, ext(*dst_ext))], schema=SCHEMA)
+    right = spark.createDataFrame(
+        [{"id": 0, "u16": Tile(u16, "uint16").to_row(),
+          "f64": Tile(f64, "float64").to_row(), "extent": ext(*src_ext),
+          "crs": "EPSG:4326"}],
+        schema=f"id int, u16 {TILE_T}, f64 {TILE_T}, extent {EXT_T}, crs string")
+    out = raster_join(left, right, right_tiles=["u16", "f64"],
+                      resampling="bilinear").head()
+    for band, src, ct in (("u16", np.where(u16 == 0, np.nan, u16), "uint16"),
+                          ("f64", f64, "float64")):
+        want = _bilinear_reference(src.astype("float64"), src_ext, dst_ext, 50, 50)
+        got = get_tile({"tile": out[band]})
+        assert got.cell_type.name == ct
+        m = got.masked()
+        assert np.array_equal(np.ma.getmaskarray(m), np.isnan(want))
+        assert 0 < m.count() < m.size
+        ok = ~np.isnan(want)
+        assert np.array_equal(m.data[ok], want[ok].astype(ct))
+
+
+@pytest.mark.parametrize("kw", [{"max_fan_in": None}, {"max_fan_in": 0},
+                                {"max_fan_in": -4}, {"max_fan_in": 2.5},
+                                {"resampling": "cubic"}])
+def test_raster_join_rejects_bad_arguments(left_df, kw):
+    with pytest.raises(ValueError):
+        raster_join(left_df, left_df, **kw)
+
+
 def test_deep_stack_bounded_fan_in(spark, left_df):
     """500 right tiles over ONE left tile. The DEFAULT (max_fan_in=256)
     must route this >256-fan-in row through the chunked pre-merge (each
     grouped task buffers <= N payloads) and produce a result identical to
-    both the forced single-pass path (None) and a tighter bound (32)."""
+    both a single chunk (1000) and a tighter bound (32)."""
     rng = np.random.default_rng(5)
     rows = []
     # 500 quarter-tiles scattered over the left extent; distinct values so
@@ -117,7 +197,7 @@ def test_deep_stack_bounded_fan_in(spark, left_df):
         rows.append(row(i, t, ext(x0, y0, x0 + 4, y0 + 4)))
     right = spark.createDataFrame(rows, schema=SCHEMA)
 
-    unbounded = raster_join(left_df, right, max_fan_in=None).orderBy("id").collect()
+    unbounded = raster_join(left_df, right, max_fan_in=1000).orderBy("id").collect()
     default = raster_join(left_df, right).orderBy("id").collect()
     bounded = raster_join(left_df, right, max_fan_in=32).orderBy("id").collect()
     assert len(unbounded) == len(default) == len(bounded) == 2
@@ -169,8 +249,8 @@ def test_zonal_stats_operator(spark):
 def test_zonal_stats_single_cell_stats_site(spark):
     """min/max/sum come from the same per-tile cell-statistics partial as
     mean/data_cells: asking for them adds no Python site, and a zone whose
-    cells are all NoData keeps a null sum (its mean, 0/0, is left out: it
-    raises DIVIDE_BY_ZERO under ANSI)."""
+    cells are all NoData keeps a null sum (its null mean is checked by
+    test_all_nodata_mean_is_null)."""
     import rasterframes_spark as rf
     from rasterframes_spark import sources as S
 
@@ -202,6 +282,39 @@ def test_zonal_stats_single_cell_stats_site(spark):
         assert out[zid]["data_cells"] == v.size
         assert out[zid]["sum"] == pytest.approx(v.sum(), rel=1e-12)
         assert (out[zid]["min"], out[zid]["max"]) == (v.min(), v.max())
+
+
+def test_all_nodata_mean_is_null(spark):
+    """Under ANSI, a group or zone whose cells are all NoData gets a null
+    mean and variance, not DIVIDE_BY_ZERO."""
+    import rasterframes_spark as rf
+    from rasterframes_spark import sources as S
+
+    nd = Tile(np.ma.masked_array(np.zeros((4, 4)), mask=True), "float64")
+    full = Tile(np.full((4, 4), 2.0), "float64")
+    df = spark.createDataFrame(
+        [(1, nd.to_row()), (1, nd.to_row()), (2, full.to_row())],
+        schema=f"g int, tile {TILE_T}")
+    got = {r["g"]: r for r in df.groupBy("g").agg(
+        rf.rf_agg_mean("tile").alias("mean"),
+        rf.rf_agg_stats("tile").alias("stats")).collect()}
+    assert got[1]["mean"] is None
+    s = got[1]["stats"]
+    assert (s["data_cells"], s["no_data_cells"]) == (0, 32)
+    assert s["mean"] is None and s["variance"] is None
+    assert got[2]["mean"] == 2.0 and got[2]["stats"]["variance"] == 0.0
+
+    arr = np.full((64, 64), 5.0)
+    arr[:32, :32] = np.nan
+    raster = S.raster_from_array(spark, arr, (0.0, 0.0, 16.0, 16.0),
+                                 tile_dimensions=(32, 32))
+    zones = spark.createDataFrame([
+        {"zone_id": 1, "wkt": "POLYGON ((1 9, 7 9, 7 15, 1 15, 1 9))"},
+        {"zone_id": 2, "wkt": "POLYGON ((9 1, 15 1, 15 7, 9 7, 9 1))"},
+    ]).select("zone_id", rf.st_geom_from_wkt("wkt").alias("geom"))
+    out = {r["zone_id"]: r for r in rf.zonal_stats(raster, zones).collect()}
+    assert out[1]["mean"] is None and out[1]["data_cells"] == 0
+    assert out[2]["mean"] == 5.0
 
 
 def test_merge_shuffle_partitions_scale_with_volume(spark, left_df):

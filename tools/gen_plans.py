@@ -80,13 +80,11 @@ def main():
     add("raster_join (grid-cell equi-prejoin + merge, bounded fan-in)",
         "**Equi-join on grid cell id** (shuffle hash join, AQE skew-split "
         "applies) + bbox post-filter — never a BroadcastNestedLoopJoin. "
-        "max_fan_in defaults to 256: rid-ordered chunks of <=N pre-merge "
-        "onto the left grid per grouped task, partial canvases merge in "
-        "chunk order — a hard per-task memory bound measured at +10% over "
-        "the single-pass aggregate on small footprint joins (a "
-        "branch-per-fan-in hybrid cost +73%: the spatial-prejoin subtree "
-        "duplicates and exchange reuse never fires over nondeterministic "
-        "row ids).",
+        "max_fan_in (default 256) bounds the merge: rid-ordered chunks of "
+        "<=N right tiles are painted onto the left grid per grouped task "
+        "(proj_raster.paint, one warp per right tile), then the final "
+        "projection overlays each left row's partials in chunk order — a "
+        "hard per-task memory bound, and no second warp of the partials.",
         e._q_raster_join(spark, sf))
 
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
