@@ -750,9 +750,10 @@ def _q_overview(spark, sf_dir):
 
 
 def _q_zonal_stats(spark, sf_dir):
-    """First-class zonal_stats operator (zones broadcast -> rasterize ->
-    mask -> per-zone agg; reference python/docs/zonal-algebra.pymd
-    workflow) on an 8x8 mosaic of the synthesized tiles; the oracle is a
+    """First-class zonal_stats operator (zones broadcast -> bbox-overlap
+    join -> one per-(tile, zone) cell-statistics partial -> per-zone agg;
+    the reference python/docs/zonal-algebra.pymd workflow without its mask
+    tile) on an 8x8 mosaic of the synthesized tiles; the oracle is a
     pixel-center point-in-rectangle filter + group-by in SQL."""
     t = _tiles_df(spark, sf_dir)
     gx = (F.col("grp") % 8).cast("double")

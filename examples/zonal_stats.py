@@ -1,6 +1,6 @@
 """Zonal statistics — the reference's zonal-algebra docs workflow
 (python/docs/zonal-algebra.pymd analog): vector zones x raster tiles,
-rasterize each zone onto the intersecting tiles, aggregate per zone.
+aggregate the cells whose centres fall in each zone, per zone.
 
 Run: python examples/zonal_stats.py
 """

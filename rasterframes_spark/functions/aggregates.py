@@ -51,6 +51,9 @@ __all__ = [
 _PARTIAL_T = (
     "struct<cnt:bigint,nd:bigint,mn:double,mx:double,sm:double,ssq:double>"
 )
+_PARTIAL_FIELDS = ["cnt", "nd", "mn", "mx", "sm", "ssq"]
+# the partial of a null tile: no cells at all
+_NO_CELLS = (0, 0, None, None, 0.0, 0.0)
 
 
 def cell_stats(a: np.ma.MaskedArray) -> tuple:
@@ -72,9 +75,9 @@ def cell_stats(a: np.ma.MaskedArray) -> tuple:
 @lazy_pandas_udf(_PARTIAL_T)
 def _partial_udf(t: pd.DataFrame) -> pd.DataFrame:
     # a null tile is an empty partial (zero counts), not a null one
-    rows = [(0, 0, None, None, 0.0, 0.0) if tile is None else cell_stats(tile.masked())
+    rows = [_NO_CELLS if tile is None else cell_stats(tile.masked())
             for tile in decode_struct_pdf(t)]
-    return pd.DataFrame(rows, columns=["cnt", "nd", "mn", "mx", "sm", "ssq"])
+    return pd.DataFrame(rows, columns=_PARTIAL_FIELDS)
 
 
 def _partials(tile) -> Column:
@@ -87,7 +90,11 @@ def rf_agg_stats(tile) -> Column:
 
     Use as ``df.agg(rf_agg_stats("tile").alias("stats"))``. Population variance.
     """
-    p = _partials(tile)
+    return stats_of_partials(_partials(tile))
+
+
+def stats_of_partials(p: Column) -> Column:
+    """``rf_agg_stats``' struct from a column of ``_PARTIAL_T`` partials."""
     cnt = F.sum(p.getField("cnt"))
     nd = F.sum(p.getField("nd"))
     sm = F.sum(p.getField("sm"))
@@ -106,7 +113,11 @@ def rf_agg_stats(tile) -> Column:
 def rf_agg_mean(tile) -> Column:
     """Mean of all cells — pure built-ins over the per-tile partial
     (aggregates/CellMeanAggregate.scala:44-80)."""
-    p = _partials(tile)
+    return mean_of_partials(_partials(tile))
+
+
+def mean_of_partials(p: Column) -> Column:
+    """``rf_agg_mean`` from a column of ``_PARTIAL_T`` partials."""
     return F.try_divide(F.sum(p.getField("sm")), F.sum(p.getField("cnt")))
 
 

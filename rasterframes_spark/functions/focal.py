@@ -289,7 +289,7 @@ def rf_focal_moransi(tile, neighborhood="square-1", buffer: int = 0,
 
 def _horn_gradients(a: np.ma.MaskedArray, cw: float, ch: float):
     """dz/dx, dz/dy via Horn 1981 3x3 weights (edge-replicated)."""
-    filled = np.asarray(a.filled(np.nan), dtype="float64")
+    filled = a.astype("float64").filled(np.nan)  # integer DEMs fill too
     p = np.pad(filled, 1, mode="edge")
     # neighborhood shorthand (z1..z9, row-major from top-left)
     z1 = p[:-2, :-2]; z2 = p[:-2, 1:-1]; z3 = p[:-2, 2:]

@@ -170,17 +170,10 @@ def rf_rasterize(geometry, bounds_extent, value, cols, rows) -> Column:
                 continue
             nc, nr = int(ncs.values[i]), int(nrs.values[i])
             shape = G.wkb_loads(bytes(g))
-            xmin, ymin, xmax, ymax = (float(ext["xmin"].values[i]), float(ext["ymin"].values[i]),
-                                      float(ext["xmax"].values[i]), float(ext["ymax"].values[i]))
+            bounds = (float(ext["xmin"].values[i]), float(ext["ymin"].values[i]),
+                      float(ext["xmax"].values[i]), float(ext["ymax"].values[i]))
             v = int(val.values[i])
-            pw, ph = (xmax - xmin) / nc, (ymax - ymin) / nr
-            cx = xmin + (np.arange(nc) + 0.5) * pw
-            cy = ymax - (np.arange(nr) + 0.5) * ph
-            gx, gy = np.meshgrid(cx, cy)
-            inside = np.zeros(nr * nc, dtype=bool)
-            for rings in G._polygons(shape):
-                inside |= G.points_in_polygon_vec(gx.ravel(), gy.ravel(), rings)
-            inside = inside.reshape(nr, nc)
+            inside = G.pixel_centres_in(shape, bounds, nc, nr)
             arr = np.where(inside, v, 0).astype("int32")
             out.append(Tile(np.ma.masked_array(arr, mask=~inside), CellType.parse("int32")))
         return tiles_to_struct_pdf(out)
@@ -222,7 +215,15 @@ def rf_render_matrix(tile) -> Column:
 
     @tile_udf("string")
     def udf(tl: Tile) -> str:
-        return np.array2string(tl.masked(), max_line_width=200, precision=4)
+        m = tl.masked()
+        mask = np.ma.getmaskarray(m)
+        if not mask.any():
+            return np.array2string(m, max_line_width=200, precision=4)
+        # NoData cells print as "--", data cells rounded to 4 places
+        cells = (np.round(m.data.astype("float64"), 4) if m.dtype.kind == "f"
+                 else m.data).astype(object)
+        cells[mask] = "--"
+        return np.array2string(cells, max_line_width=200, formatter={"all": str})
 
     return udf(col_or_name(tile))
 

@@ -478,24 +478,46 @@ def point_in_ring(pt, ring) -> bool:
     return inside
 
 
-def points_in_polygon_vec(px: np.ndarray, py: np.ndarray, rings) -> np.ndarray:
-    """Vectorized even-odd test for many points against one polygon
-    (boundary behavior: pure ray-cast, boundary points unspecified — use
-    point_in_polygon for boundary-inclusive single-point tests)."""
-
-    def in_ring(ring):
-        a = np.asarray(ring, dtype="float64")
-        x1, y1 = a[:-1, 0], a[:-1, 1]
-        x2, y2 = a[1:, 0], a[1:, 1]
-        cond = (y1[None, :] > py[:, None]) != (y2[None, :] > py[:, None])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xs = x1[None, :] + (py[:, None] - y1[None, :]) * (x2 - x1)[None, :] / (y2 - y1)[None, :]
-        return ((cond & (xs > px[:, None])).sum(axis=1) % 2) == 1
-
-    inside = in_ring(rings[0])
-    for hole in rings[1:]:
-        inside &= ~in_ring(hole)
+def pixel_centres_in(geom, bounds, cols: int, rows: int) -> np.ndarray:
+    """(rows, cols) bool grid: which pixel centres of the north-up grid
+    over ``bounds`` (xmin, ymin, xmax, ymax) lie in ``geom``'s polygons by
+    the even-odd rule — holes subtracted, the polygons of a multipolygon
+    ORed.  A scanline fill: each pixel row sorts its edge crossings once
+    and takes every column's parity with ``searchsorted``, so the cost is
+    rows x edges, not cells x edges.  Centres on a boundary are
+    unspecified (use point_in_polygon for boundary-inclusive tests)."""
+    xmin, ymin, xmax, ymax = bounds
+    pw, ph = (xmax - xmin) / cols, (ymax - ymin) / rows
+    cx = xmin + (np.arange(cols) + 0.5) * pw
+    cy = ymax - (np.arange(rows) + 0.5) * ph
+    inside = np.zeros((rows, cols), dtype=bool)
+    for rings in _polygons(geom):
+        if rings:
+            part = _ring_rows(rings[0], cx, cy)
+            for hole in rings[1:]:
+                part &= ~_ring_rows(hole, cx, cy)
+            inside |= part
     return inside
+
+
+def _ring_rows(ring, cx, cy) -> np.ndarray:
+    a = np.asarray(ring, dtype="float64").reshape(-1, 2)
+    x1, y1, x2, y2 = a[:-1, 0], a[:-1, 1], a[1:, 0], a[1:, 1]
+    if cy.size:
+        # an edge outside the rows' y range is crossed by no row
+        keep = (np.maximum(y1, y2) > cy.min()) & (np.minimum(y1, y2) <= cy.max())
+        x1, y1, x2, y2 = x1[keep], y1[keep], x2[keep], y2[keep]
+    py = cy[:, None]
+    cond = (y1 > py) != (y2 > py)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        xs = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
+    xs = np.sort(np.where(cond, xs, np.inf), axis=1)
+    n = cond.sum(axis=1)
+    out = np.empty((cy.size, cx.size), dtype=bool)
+    for i in range(cy.size):
+        # crossings strictly right of each centre: odd means inside
+        out[i] = (n[i] - np.searchsorted(xs[i], cx, side="right")) % 2 == 1
+    return out
 
 
 # cap on the elements of one (points x edges) intermediate inside
@@ -515,9 +537,7 @@ def points_in_polygon_vec_exact(px: np.ndarray, py: np.ndarray,
     boundary-counts-inside rule, same FIRST-hole-decides order for
     degenerate overlapping holes).  Vectorizes over POINTS — the
     st_join exact phase evaluates ~millions of candidate points against
-    a handful of broadcast polygons, the transpose of
-    ``points_in_polygon_vec``'s many-vertices orientation (whose pure
-    ray-cast leaves boundary behavior unspecified).  Memory is bounded:
+    a handful of broadcast polygons.  Memory is bounded:
     points are processed in chunks sized so each (points x edges)
     intermediate stays under ``_PIP_VEC_BUDGET`` elements."""
     px = np.asarray(px, dtype="float64")

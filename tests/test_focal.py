@@ -200,3 +200,46 @@ def test_moransi_honors_neighborhood_footprint(spark, focal_df):
                     vals.append(z[y, x])
             exp[i, j] = z[i, j] * np.mean(vals) / var
     np.testing.assert_allclose(a_ne, exp, rtol=1e-12)
+
+
+def test_dem_ops_on_integer_tile(spark):
+    """rf_slope, rf_aspect and rf_hillshade accept an int16 DEM with NoData
+    and give the same tiles as the float64 copy of it."""
+    z = (np.arange(36).reshape(6, 6) * 7 % 23 * 3).astype("int16")
+    nd = np.zeros((6, 6), bool)
+    nd[2, 3] = True
+    dem = Tile(np.ma.masked_array(z, mask=nd), "int16")
+    df = spark.createDataFrame(
+        [{"i": dem.to_row(),
+          "extent": {"xmin": 0.0, "ymin": 0.0, "xmax": 60.0, "ymax": 60.0}}],
+        schema=f"i {TILE_T}, extent {EXT_T}",
+    ).withColumn("f", rf.rf_convert_cell_type("i", "float64"))
+    for op in (rf.rf_slope, rf.rf_aspect, rf.rf_hillshade):
+        got = one_tile(df.select(op("i", "extent").alias("r")), "r").masked()
+        want = one_tile(df.select(op("f", "extent").alias("r")), "r").masked()
+        assert np.array_equal(np.ma.getmaskarray(got), np.ma.getmaskarray(want))
+        assert np.ma.allequal(got, want)
+        assert np.isfinite(got.compressed()).any()
+
+
+def test_render_matrix_shows_nodata(spark):
+    """rf_render_matrix prints NoData cells as ``--`` for integer and float
+    tiles alike."""
+    mask = np.zeros((2, 3), bool)
+    mask[0, 1] = True
+    tiles = {
+        "i": Tile(np.ma.masked_array(np.arange(6, dtype="int32").reshape(2, 3),
+                                     mask=mask), "int32"),
+        "u": Tile(np.ma.masked_array(np.arange(1, 7, dtype="uint8").reshape(2, 3),
+                                     mask=mask), "uint8"),
+        "f": Tile(np.ma.masked_array(np.arange(6.0).reshape(2, 3) / 3, mask=mask),
+                  "float64"),
+        "n": Tile(np.ma.masked_array(np.zeros((2, 3)), mask=True), "float32"),
+    }
+    df = spark.createDataFrame([{k: t.to_row() for k, t in tiles.items()}],
+                               schema=", ".join(f"{k} {TILE_T}" for k in tiles))
+    got = df.select(*[rf.rf_render_matrix(k).alias(k) for k in tiles]).head()
+    assert got["i"] == "[[0 -- 2]\n [3 4 5]]"
+    assert got["u"] == "[[1 -- 3]\n [4 5 6]]"
+    assert got["f"] == "[[0.0 -- 0.6667]\n [1.0 1.3333 1.6667]]"
+    assert got["n"] == "[[-- -- --]\n [-- -- --]]"

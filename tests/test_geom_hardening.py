@@ -382,3 +382,54 @@ def test_envelope_fast_path_nan_x_matches_general_path():
         assert row2[0] == 3.0 and row2[2] == 3.0         # x kept
         assert row2[1] != row2[1] and row2[3] != row2[3]  # NaN y stays null
         assert all(v is None or v != v for v in got.iloc[3])
+
+
+# ---------------------------------------------------------------------------
+# pixel_centres_in: the scanline fill rf_rasterize and zonal_stats share
+# ---------------------------------------------------------------------------
+
+def _ray_cast(x, y, ring):
+    """Even-odd test of one point by the crossing expression the scanline
+    fill uses, one edge at a time."""
+    inside = False
+    for (x1, y1), (x2, y2) in zip(ring[:-1], ring[1:]):
+        if (y1 > y) != (y2 > y) and x1 + (y - y1) * (x2 - x1) / (y2 - y1) > x:
+            inside = not inside
+    return inside
+
+
+def test_pixel_centres_in_matches_per_point_ray_cast():
+    """Random star polygons, with holes, as multipolygons and with integer
+    vertices: the scanline grid equals the per-centre ray cast cell for
+    cell (holes subtracted, polygons ORed)."""
+    rng = np.random.default_rng(23)
+
+    def ring(cx, cy, r, k, integer):
+        ang = np.sort(rng.random(k) * 2 * np.pi)
+        rad = r * (0.3 + rng.random(k))
+        pts = np.c_[cx + rad * np.cos(ang), cy + rad * np.sin(ang)]
+        pts = [tuple(map(float, p)) for p in (np.round(pts) if integer else pts)]
+        return pts + [pts[0]]
+
+    for t in range(40):
+        polys = []
+        for _ in range(1 + t % 2):
+            c = rng.random(2) * 20
+            rings = [ring(c[0], c[1], 8, int(rng.integers(3, 25)), t % 3 == 0)]
+            if t % 4 == 1:
+                rings.append(ring(c[0], c[1], 2, int(rng.integers(3, 8)), t % 3 == 0))
+            polys.append(rings)
+        geom = ("MultiPolygon", polys) if len(polys) > 1 else ("Polygon", polys[0])
+        nc, nr = int(rng.integers(1, 24)), int(rng.integers(1, 24))
+        bounds = (-5.0, -5.0, 30.0, 30.0)
+        got = G.pixel_centres_in(geom, bounds, nc, nr)
+        pw, ph = 35.0 / nc, 35.0 / nr
+        want = np.array([[any(_ray_cast(-5.0 + (c + 0.5) * pw, 30.0 - (r + 0.5) * ph,
+                                        rings[0])
+                              and not any(_ray_cast(-5.0 + (c + 0.5) * pw,
+                                                    30.0 - (r + 0.5) * ph, h)
+                                          for h in rings[1:])
+                              for rings in polys)
+                          for c in range(nc)] for r in range(nr)])
+        assert np.array_equal(got, want), t
+    assert not G.pixel_centres_in(("Polygon", []), (0.0, 0.0, 1.0, 1.0), 2, 2).any()

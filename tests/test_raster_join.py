@@ -267,7 +267,7 @@ def test_zonal_stats_single_cell_stats_site(spark):
     full = rf.zonal_stats(raster, zones,
                           stats=("mean", "data_cells", "min", "max", "sum"))
     sites = udf_sites(full)
-    assert sites["_partial_udf"] == 1
+    assert sites["_zone_partial_udf"] == 1
     assert sites == udf_sites(rf.zonal_stats(raster, zones))
     out = {r["zone_id"]: r for r in rf.zonal_stats(
         raster, zones, stats=("data_cells", "min", "max", "sum")).collect()}
@@ -282,6 +282,45 @@ def test_zonal_stats_single_cell_stats_site(spark):
         assert out[zid]["data_cells"] == v.size
         assert out[zid]["sum"] == pytest.approx(v.sum(), rel=1e-12)
         assert (out[zid]["min"], out[zid]["max"]) == (v.min(), v.max())
+
+
+def test_zonal_stats_edge_tiles_without_build_job(spark):
+    """A 100x100 raster in 64x64 tiles has 36-wide edge tiles: each tile's
+    pixel centres come from its own dims, so the zone matches the numpy
+    pixel-centre oracle.  Building the query runs no Spark job, each (tile, zone) pair
+    crosses into Python once, and an empty raster gives an empty frame of
+    the same schema."""
+    import rasterframes_spark as rf
+    from rasterframes_spark import sources as S
+
+    arr = np.random.default_rng(8).random((100, 100)) * 100
+    raster = S.raster_from_array(spark, arr, (0.0, 0.0, 100.0, 100.0),
+                                 tile_dimensions=(64, 64))
+    zones = spark.createDataFrame([(1, "POLYGON ((50.2 10.2, 90.2 10.2, "
+                                       "90.2 40.2, 50.2 40.2, 50.2 10.2))")],
+                                  "zone_id int, wkt string") \
+        .select("zone_id", rf.st_geom_from_wkt("wkt").alias("geom"))
+    sc = spark.sparkContext
+    group = "zonal-stats-build"
+    sc.setJobGroup(group, "plan build")
+    try:
+        q = rf.zonal_stats(raster, zones, stats=("data_cells", "sum", "min", "max"))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+    X, Y = np.meshgrid(np.arange(100) + 0.5, 100.0 - (np.arange(100) + 0.5))
+    v = arr[(X > 50.2) & (X < 90.2) & (Y > 10.2) & (Y < 40.2)]
+    assert v.size == 1200
+    (r,) = q.collect()
+    assert r["data_cells"] == 1200
+    assert r["sum"] == pytest.approx(v.sum(), rel=1e-12)
+    assert (r["min"], r["max"]) == (v.min(), v.max())
+    sites = udf_sites(q)
+    assert (sites["_zone_partial_udf"], sites["_envelope_udf"]) == (1, 1)
+    assert not {"udf", "_intersects", "_partial_udf"} & set(sites)
+    empty = rf.zonal_stats(raster.where(F.lit(False)), zones,
+                           stats=("data_cells", "sum", "min", "max"))
+    assert empty.schema == q.schema and empty.collect() == []
 
 
 def test_all_nodata_mean_is_null(spark):

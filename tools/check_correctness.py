@@ -4,6 +4,7 @@ schema (column names), and order-insensitive values."""
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
@@ -11,7 +12,7 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None

@@ -17,10 +17,11 @@ geotiff_stream_det / write_geojson_det / write_tiles_det.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None

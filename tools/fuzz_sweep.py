@@ -20,13 +20,14 @@ hdf5 heap strings).  The r12 sweep covered the image/video containers
 """
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 
 OK = (ValueError, NotImplementedError)
 # zlib/zipfile raise their own error types for corrupt streams; parsers
