@@ -577,8 +577,8 @@ def main():
     from rasterframes_spark.operators import st_join, st_knn_join
 
     run("semantic_dedup", lambda: P.semantic_dedup(
-        emb, "vec_id", "embedding", n_clusters=64, threshold=0.97,
-        pairs_method="blas").where("kept").count(), repeat=3)
+        emb, "vec_id", "embedding", n_clusters=64, threshold=0.97)
+        .where("kept").count(), repeat=3)
     # r13: corpus-wide line dedup (pure Catalyst, the span_removal
     # two-keyed-shuffles posture)
     run("line_dedup", lambda: P.remove_duplicated_lines(
@@ -1176,8 +1176,7 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
          sf01_cell="minhash_dedup", repeat=3)
     cell("semantic_dedup",
          lambda: P.semantic_dedup(emb10, "vec_id", "embedding",
-                                  n_clusters=64, threshold=0.97,
-                                  pairs_method="blas")
+                                  n_clusters=64, threshold=0.97)
          .where("kept").count(),
          sf01_cell="semantic_dedup", repeat=3)
     cell("decontaminate",

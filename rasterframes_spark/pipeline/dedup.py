@@ -600,12 +600,54 @@ def _round_half_up6(a):
     return np.sign(a) * np.floor(np.abs(a) * 1e6 + 0.5) / 1e6
 
 
+_GRAM_TILE = 4096  # gram tile rows: one 4096^2 float64 tile is 128 MB
+
+
+def _gram_input(df: DataFrame, id_col: str, vec_col: str, *rest) -> DataFrame:
+    """(``__id``, ``__v``, ``*rest``) for a gram kernel.  A null id crosses as
+    a typed 0 with a null vector, so it pairs with nothing and the ids
+    stay exact (pandas makes an integer column holding a null float64)."""
+    i = F.col(id_col)
+    return df.select(
+        F.coalesce(i, F.lit(0).cast(df.schema[id_col].dataType)).alias("__id"),
+        F.when(i.isNotNull(), F.col(vec_col)).alias("__v"), *rest)
+
+
+def _gram_pairs(ids, vecs, thr: float, step: int = _GRAM_TILE):
+    """One block's near-duplicate pairs as row positions ``(a, b, cos)``:
+    ``ids[a] < ids[b]`` and the cosine, rounded HALF_UP to 6 decimals, is
+    >= ``thr``.  Rows of one id never pair; a null or zero vector has no
+    cosine and pairs with nothing.  Tiling the gram matrix ``step`` rows
+    at a time bounds memory to one tile; the pairs do not depend on it."""
+    rows = np.flatnonzero(~pd.isna(vecs))
+    rows = rows[np.argsort(ids[rows], kind="stable")]
+    out_a, out_b, out_c = [rows[:0]], [rows[:0]], [np.empty(0)]
+    if len(rows) < 2:
+        return out_a[0], out_b[0], out_c[0]
+    x = np.stack([np.asarray(vecs[r], dtype="float64") for r in rows])
+    norms = np.linalg.norm(x, axis=1)
+    ok = norms > 0
+    rows, x = rows[ok], x[ok] / norms[ok, None]
+    sid, n = ids[rows], len(rows)
+    for i0 in range(0, n, step):
+        xi = x[i0:i0 + step]
+        for j0 in range(i0, n, step):
+            sims = _round_half_up6(xi @ x[j0:j0 + step].T)
+            ii, jj = np.nonzero(sims >= thr)
+            gi, gj = ii + i0, jj + j0
+            m = (gi < gj) & (sid[gi] != sid[gj])
+            out_a.append(rows[gi[m]])
+            out_b.append(rows[gj[m]])
+            out_c.append(sims[ii[m], jj[m]])
+    return np.concatenate(out_a), np.concatenate(out_b), np.concatenate(out_c)
+
+
 def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str = "embedding",
                             block_cols: list[str] | None = None,
                             threshold: float = 0.95,
                             allow_unblocked: bool = False,
                             method: str = "sql",
-                            gram_chunk_rows: int = 4096) -> DataFrame:
+                            gram_chunk_rows: int = _GRAM_TILE) -> DataFrame:
     """Pairs with cosine ≥ threshold within blocking keys (e.g. an LSH
     bucket or a label). All-pairs requires ``allow_unblocked=True``
     (quadratic; use hyperplane LSH buckets as blocks at scale).
@@ -621,20 +663,12 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str = "embeddin
     cosines to 6 decimals HALF_UP before thresholding and agree
     pair-for-pair (tests/test_semantic_dedup.py parity test).
 
-    ``gram_chunk_rows`` bounds the blas path's per-tile memory: the
-    gram matrix is computed in ``chunk x chunk`` tiles (default 4096 ->
-    128 MB float64 per tile), so one skewed mega-cluster costs time,
-    never an OOM-killed executor — 200k rows in a single block would
-    otherwise build a 320 GB matrix in one task. Tiling is exact: the
-    same pairs leave regardless of chunk size (parity pytest)."""
+    ``gram_chunk_rows`` is the blas path's gram tile (``_gram_pairs``):
+    a skewed mega-cluster costs time, never an OOM-killed executor."""
     _check_blocked(block_cols, allow_unblocked, "embedding_neardup_pairs")
     if method not in ("sql", "blas"):
         raise ValueError(f"embedding_neardup_pairs: unknown method {method!r}")
     bcols = list(block_cols or [])
-    cols = [F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")] + [
-        F.col(c) for c in bcols
-    ]
-    t = df.select(*cols)
     if method == "blas":
         if not bcols:
             raise ValueError(
@@ -642,44 +676,18 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str = "embeddin
                 " (one gram matrix per block)")
         id_t = df.schema[id_col].dataType.simpleString()
         thr = float(threshold)
-
         step = max(int(gram_chunk_rows), 1)
 
         def gram(pdf):
-            pdf = pdf.sort_values("__id", kind="mergesort")
             ids = pdf["__id"].to_numpy()
-            keep = [i for i, v in enumerate(pdf["__v"]) if v is not None]
-            if len(keep) < 2:
-                return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
-            ids = ids[keep]
-            x = np.stack([np.asarray(v, dtype="float64")
-                          for v in pdf["__v"].iloc[keep]])
-            norms = np.linalg.norm(x, axis=1)
-            ok = norms > 0                 # zero-norm: no cosine (SQL
-            ids, x, norms = ids[ok], x[ok], norms[ok]   # path -> NULL)
-            n = len(ids)
-            if n < 2:
-                return pd.DataFrame({"id_a": [], "id_b": [], "cos": []})
-            xn = x / norms[:, None]
-            # tile the gram product: peak extra memory is one
-            # step x step float64 tile, whatever the block size
-            out_a, out_b, out_c = [], [], []
-            for i0 in range(0, n, step):
-                xi = xn[i0:i0 + step]
-                for j0 in range(i0, n, step):
-                    sims = _round_half_up6(xi @ xn[j0:j0 + step].T)
-                    ii, jj = np.nonzero(sims >= thr)
-                    gi, gj = ii + i0, jj + j0
-                    m = (gi < gj) & (ids[gi] != ids[gj])
-                    out_a.append(ids[gi[m]])
-                    out_b.append(ids[gj[m]])
-                    out_c.append(sims[ii[m], jj[m]])
-            return pd.DataFrame({"id_a": np.concatenate(out_a),
-                                 "id_b": np.concatenate(out_b),
-                                 "cos": np.concatenate(out_c)})
+            a, b, cos = _gram_pairs(ids, pdf["__v"].to_numpy(), thr, step)
+            return pd.DataFrame({"id_a": ids[a], "id_b": ids[b], "cos": cos})
 
-        return t.groupBy(*bcols).applyInPandas(
+        return _gram_input(df, id_col, vec_col, *bcols).groupBy(
+            *bcols).applyInPandas(
             gram, schema=f"id_a {id_t}, id_b {id_t}, cos double")
+    t = df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
+                  *bcols)
     a, b = t.alias("a"), t.alias("b")
     cond = F.col("a.__id") < F.col("b.__id")
     for c in bcols:
@@ -696,11 +704,30 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str = "embeddin
     )
 
 
+def _min_id_labels(ids, a, b) -> np.ndarray:
+    """Each row's component label, its min id, for rows joined by the edges
+    ``(a, b)`` or a shared id: a union-find over the sorted distinct ids
+    that links the larger root under the smaller."""
+    uniq, pos = np.unique(ids, return_inverse=True)
+    parent = list(range(len(uniq)))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for x, y in zip(pos[a].tolist(), pos[b].tolist()):
+        rx, ry = find(x), find(y)
+        parent[max(rx, ry)] = min(rx, ry)
+    return uniq[[find(p) for p in pos.tolist()]]
+
+
 def semantic_dedup(df: DataFrame, id_col: str, vec_col: str = "embedding",
                    n_clusters: int = 16, threshold: float = 0.95,
                    centroids=None, sample_size: int = 2048, seed: int = 42,
-                   keep: str = "farthest", corpus_rows: int | None = None,
-                   max_iter: int = 25, pairs_method: str = "sql") -> DataFrame:
+                   keep: str = "farthest",
+                   corpus_rows: int | None = None) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): embedding-space
     semantic deduplication. K-means the embeddings into ``n_clusters``,
     find near-duplicate pairs WITHIN each cluster (cosine >= threshold),
@@ -718,17 +745,20 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str = "embedding",
     centroid, ``sem_cluster`` the duplicate-group label (min id in the
     group; a document with no near-duplicate is its own group),
     ``kept`` the survival verdict. ``df.join(out.where('kept'), id)``
-    is the deduplicated corpus.
+    is the deduplicated corpus. A null embedding is dropped, a zero
+    vector is its own group, and a null id gets a null ``sem_cluster``
+    and ``kept``. Rows of one id in one cluster share a group.
 
     Scale: this IS the paper's algorithm — within-cluster all-pairs,
-    O((N/k)^2 * k) comparisons. ``n_clusters`` is the knob: size it so
-    N/k per cluster stays tractable (the paper uses 50k clusters for
-    LAION-440M; pairs never cross clusters, an accepted approximation).
-    The pair join is the blocked ``embedding_neardup_pairs`` — all-pairs
-    without a blocking key is refused there. Centroids train on a seeded
-    driver-side sample (see ``_train_unit_centroids``) or inject
-    ``centroids=`` for reproducible/oracle-testable assignment; the
-    component step is O(group diameter) rounds of ``dedup_clusters``."""
+    O((N/k)^2 * k) comparisons; pairs never cross clusters (the paper's
+    accepted approximation; it uses 50k clusters for LAION-440M). So
+    each cluster is ONE ``applyInPandas`` kernel: gram pairs, a
+    union-find labelling each group with its min id, the keeper pick. A
+    task holds one cluster plus one 4096^2 gram tile, so ``n_clusters``
+    is the size knob: size it so N/k stays tractable. Centroids train
+    on a seeded driver-side sample (``_train_unit_centroids``, the only
+    jobs run while building) or inject ``centroids=`` for
+    reproducible/oracle-testable assignment."""
     if keep not in ("farthest", "min_id"):
         raise ValueError("semantic_dedup: keep must be 'farthest' or "
                          f"'min_id' (got {keep!r})")
@@ -761,38 +791,36 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str = "embedding",
 
     # .once: the `sem_list >= 0` filter below would be pushed under this
     # projection
-    base = df.select(F.col(id_col).alias("__sid"),
-                     F.col(vec_col).alias("__sv"),
-                     assign.once(F.col(vec_col)).alias("__a"))
+    base = _gram_input(df, id_col, vec_col,
+                       assign.once(F.col(vec_col)).alias("__a"))
     base = base.select(
-        "__sid", "__sv", F.col("__a.l").alias("sem_list"),
+        "__id", "__v", F.col("__a.l").alias("sem_list"),
         F.round(F.col("__a.c"), 9).alias("cent_cos"),
     ).where(F.col("sem_list") >= 0)
-    base = base.localCheckpoint(eager=False)
-    # pairs_method='blas' swaps the Catalyst pair join for the per-
-    # cluster gram-matrix path (same rounded cosines, vectors cross the
-    # wire once) — the scale posture; 'sql' stays the oracle default
-    pairs = embedding_neardup_pairs(base, "__sid", "__sv",
-                                    block_cols=["sem_list"],
-                                    threshold=threshold,
-                                    method=pairs_method)
-    comps = dedup_clusters(pairs, max_iter=max_iter).withColumnRenamed(
-        "id", "__sid").withColumnRenamed("cluster_id", "sem_cluster")
-    out = base.drop("__sv").join(comps, "__sid", "left")
-    out = out.withColumn(
-        "sem_cluster", F.coalesce("sem_cluster", F.col("__sid")))
-    if keep == "min_id":
-        kept = F.col("__sid") == F.col("sem_cluster")
-        out = out.withColumn("kept", kept)
-    else:
-        from pyspark.sql import Window
+    thr = float(threshold)
 
-        w = Window.partitionBy("sem_cluster").orderBy(
-            F.asc("cent_cos"), F.asc("__sid"))
-        out = out.withColumn(
-            "kept", F.row_number().over(w) == 1)
-    return out.select(F.col("__sid").alias(id_col), "sem_list",
-                      "cent_cos", "sem_cluster", "kept")
+    def block(pdf):
+        # a null vector here is a null id (null embeddings are filtered
+        # above): it pairs with nothing and gets no label and no verdict
+        live = pdf["__v"].notna()
+        out = pdf[live].drop(columns="__v").reset_index(drop=True)
+        ids = out["__id"].to_numpy()
+        a, b, _ = _gram_pairs(ids, pdf["__v"][live].to_numpy(), thr)
+        out["sem_cluster"] = _min_id_labels(ids, a, b)
+        if keep == "min_id":
+            out["kept"] = ids == out["sem_cluster"]
+        else:  # the first row of each group by (cent_cos, id)
+            out["kept"] = ~out.sort_values(
+                ["cent_cos", "__id"], kind="mergesort").duplicated("sem_cluster")
+        if not live.all():
+            out = pd.concat([out.astype(object),
+                             pdf.loc[~live, ["sem_list", "cent_cos"]]])
+        return out.rename(columns={"__id": id_col})
+
+    id_t = df.schema[id_col].dataType.simpleString()
+    return base.groupBy("sem_list").applyInPandas(
+        block, schema=f"`{id_col}` {id_t}, sem_list int, cent_cos double, "
+                      f"sem_cluster {id_t}, kept boolean")
 
 
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b",

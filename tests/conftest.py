@@ -1,3 +1,4 @@
+import uuid
 from collections import Counter
 
 import numpy as np
@@ -24,11 +25,16 @@ def rng():
     return np.random.default_rng(42)
 
 
+_PANDAS_FUNC_NODES = ("FlatMapGroupsInPandasExec", "MapInPandasExec",
+                      "FlatMapCoGroupsInPandasExec")
+
+
 def udf_sites(df) -> Counter:
     """Python UDF evaluation sites in ``df``'s executed plan, counted by UDF
-    name: one per UDF on each ``*EvalPythonExec`` node.  Walks into AQE
-    plans, query stages and cached relations; a node reached twice (a
-    cache read by several scans) counts once."""
+    name: one per UDF on each ``*EvalPythonExec`` node, and one per
+    ``applyInPandas`` / ``mapInPandas`` / cogrouped node by its function's
+    name.  Walks into AQE plans, query stages and cached relations; a node
+    reached twice (a cache read by several scans) counts once."""
     jvm = df.sparkSession._jvm
     seen: set[int] = set()
     sites: Counter = Counter()
@@ -50,9 +56,24 @@ def udf_sites(df) -> Counter:
             it = p.udfs().iterator()
             while it.hasNext():
                 sites[it.next().name()] += 1
+        elif cls in _PANDAS_FUNC_NODES:
+            sites[p.func().name()] += 1
         ch = p.children()
         todo.extend(ch.apply(i) for i in range(ch.size()))
     return sites
+
+
+def count_jobs(spark, fn):
+    """Run ``fn()`` in a job group of its own; return its result and the
+    number of Spark jobs it ran."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def make_tile_df(spark, tiles, extra=None):

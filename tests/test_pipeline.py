@@ -1286,15 +1286,14 @@ def test_scan_row_bound_and_sized_spread(spark, docs):
     assert [r.asDict() for r in a] == [r.asDict() for r in b]
 
 
-def test_ann_corpus_kernels_single_eval(spark, emb, monkeypatch):
+def test_ann_corpus_kernels_single_eval(spark, emb):
     """r15 (§4.4): the corpus-side bucketing kernels (IVF centroid
     assignment, LSH hyperplane bucket, semantic_dedup assignment)
     evaluate exactly ONCE over the corpus — the bucket equi-join's
     inferred isnotnull (resp. the sem_list >= 0 filter) otherwise
     pushes below the projection and duplicates the matmul.  Plan-
-    asserted per operator (semantic_dedup on the frame it checkpoints,
-    since the final plan reads the checkpoint); semantic_dedup results
-    pinned against the same call's kept-count invariants."""
+    asserted per operator; semantic_dedup results pinned against the
+    same call's kept-count invariants."""
     q = emb.limit(4).select(F.col("vec_id").alias("query_id"), "embedding")
     cents = np.eye(8, 64)
 
@@ -1307,17 +1306,9 @@ def test_ann_corpus_kernels_single_eval(spark, emb, monkeypatch):
     plan = lsh._jdf.queryExecution().executedPlan().toString()
     assert udf_sites(lsh) == {"udf": 2}, plan
 
-    checkpointed = []
-    local_checkpoint = type(emb).localCheckpoint
-
-    def capture(df, *args, **kwargs):
-        checkpointed.append(df)
-        return local_checkpoint(df, *args, **kwargs)
-
-    monkeypatch.setattr(type(emb), "localCheckpoint", capture)
     sd = P.semantic_dedup(emb, "vec_id", n_clusters=8, threshold=0.97,
-                          pairs_method="blas", centroids=cents)
-    assert udf_sites(checkpointed[0])["assign"] == 1
+                          centroids=cents)
+    assert udf_sites(sd)["assign"] == 1
     rows = sd.collect()
     ids = {r["vec_id"] for r in rows}
     assert len(rows) == len(ids) == emb.count()

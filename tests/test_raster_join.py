@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from rasterframes_spark.tile import Tile
 from rasterframes_spark.operators import raster_join
 from rasterframes_spark.geom import proj as P
-from tests.conftest import udf_sites
+from tests.conftest import count_jobs, udf_sites
 
 TILE_T = "struct<cell_type:string,cols:int,rows:int,cells:binary>"
 EXT_T = "struct<xmin:double,ymin:double,xmax:double,ymax:double>"
@@ -300,14 +300,9 @@ def test_zonal_stats_edge_tiles_without_build_job(spark):
                                        "90.2 40.2, 50.2 40.2, 50.2 10.2))")],
                                   "zone_id int, wkt string") \
         .select("zone_id", rf.st_geom_from_wkt("wkt").alias("geom"))
-    sc = spark.sparkContext
-    group = "zonal-stats-build"
-    sc.setJobGroup(group, "plan build")
-    try:
-        q = rf.zonal_stats(raster, zones, stats=("data_cells", "sum", "min", "max"))
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    finally:
-        sc._jsc.clearJobGroup()
+    q, jobs = count_jobs(spark, lambda: rf.zonal_stats(
+        raster, zones, stats=("data_cells", "sum", "min", "max")))
+    assert jobs == 0
     X, Y = np.meshgrid(np.arange(100) + 0.5, 100.0 - (np.arange(100) + 0.5))
     v = arr[(X > 50.2) & (X < 90.2) & (Y > 10.2) & (Y < 40.2)]
     assert v.size == 1200

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from rasterframes_spark.pipeline.dedup import semantic_dedup
+from tests.conftest import count_jobs, udf_sites
 
 
 def _unit(v):
@@ -21,6 +22,7 @@ def _unit(v):
 
 
 CENTS = np.eye(4)[:, :4]  # 4 orthogonal centroids in R^4
+BIG = 2 ** 60  # ids >= 2**53 have no exact float64
 
 
 def _planted(spark):
@@ -135,9 +137,8 @@ def test_brute_force_parity(spark):
 
 def test_blas_pair_method_matches_sql(spark):
     """method='blas' (per-cluster gram matrix, the 100 TB pair path)
-    must agree pair-for-pair and verdict-for-verdict with the default
-    Catalyst self-join — both round cosines to 6 decimals before
-    thresholding."""
+    must agree pair-for-pair with the default Catalyst self-join — both
+    round cosines to 6 decimals before thresholding."""
     from rasterframes_spark.pipeline.dedup import embedding_neardup_pairs
 
     rng = np.random.default_rng(11)
@@ -145,7 +146,6 @@ def test_blas_pair_method_matches_sql(spark):
     base = rng.standard_normal((k, d))
     vecs = [_unit(base[i % k] + 0.4 * rng.standard_normal(d))
             for i in range(n)]
-    cents = rng.standard_normal((k, d))
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
         "vec_id long, embedding array<double>")
@@ -157,13 +157,15 @@ def test_blas_pair_method_matches_sql(spark):
         blocked, "vec_id", block_cols=["blk"], threshold=thr,
         method="blas").collect()}
     assert p_sql and p_sql == p_blas
-    # operator-level parity (assignment + groups + keep rule downstream)
-    a = semantic_dedup(df, "vec_id", centroids=cents, threshold=thr)
-    b = semantic_dedup(df, "vec_id", centroids=cents, threshold=thr,
-                       pairs_method="blas")
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
+    # a null id pairs with nothing, and ids past 2**53 stay exact
+    big = spark.createDataFrame(
+        [(BIG + 1, [1.0, 0.0], 0), (BIG + 3, [1.0, 0.002], 0),
+         (None, [1.0, 0.001], 0)],
+        "vec_id long, embedding array<double>, blk int")
+    for method in ("sql", "blas"):
+        assert [tuple(r) for r in embedding_neardup_pairs(
+            big, "vec_id", block_cols=["blk"], threshold=thr,
+            method=method).collect()] == [(BIG + 1, BIG + 3, 0.999998)]
     # the blas path refuses to go quadratic without a blocking key
     with pytest.raises(ValueError, match="block"):
         embedding_neardup_pairs(df, "vec_id", method="blas",
@@ -235,3 +237,129 @@ def test_bad_keep_mode_raises(spark):
     with pytest.raises(ValueError, match="keep must be"):
         semantic_dedup(_planted(spark), "vec_id", centroids=CENTS,
                        keep="latest")
+
+
+def _edge_rows(spark):
+    """Two centroid blocks (e0, e1 of CENTS) with duplicate ids, ids past
+    2**53 that collide as float64, a null embedding and two zero
+    vectors."""
+    e = np.eye(4)
+    rows = [
+        # block 0: a pair of big ids (float64 rounds both to 2**60)
+        (BIG + 1, e[0] + 0.01 * e[2]),
+        (BIG + 3, e[0] + 0.02 * e[2]),
+        # id 7 twice, with different vectors; both pair with 8, not with
+        # each other
+        (7, e[0] + 0.5 * e[3]),
+        (7, e[0] + 0.505 * e[3]),
+        (8, e[0] + 0.495 * e[3]),
+        # id 9 twice, the same vector
+        (9, e[0] + 0.3 * e[1]),
+        (9, e[0] + 0.3 * e[1]),
+        # zero vectors: no cosine, each its own group
+        (60, 0 * e[0]),
+        (61, 0 * e[0]),
+        # block 1: a small-id pair, and a big id labelled by a small one
+        (100, e[1] + 0.01 * e[2]),
+        (101, e[1] + 0.012 * e[2]),
+        (102, e[1] + 0.5 * e[3]),
+        (BIG + 5, e[1] + 0.502 * e[3]),
+    ]
+    data = [(i, [float(x) for x in v]) for i, v in rows]
+    data.append((50, None))  # null embedding: dropped
+    return spark.createDataFrame(data, "vec_id long, embedding array<double>"), rows
+
+
+@pytest.mark.parametrize("keep", ["farthest", "min_id"])
+def test_edge_rows_pinned(spark, keep):
+    df, rows = _edge_rows(spark)
+    got = sorted((r.vec_id, r.cent_cos, r.sem_list, r.sem_cluster, r.kept)
+                 for r in semantic_dedup(df, "vec_id", centroids=CENTS,
+                                         threshold=0.99, keep=keep).collect())
+    far = keep == "farthest"
+    # (id, sem_list, sem_cluster, kept), ordered by (id, cent_cos, kept)
+    assert [g[:1] + g[2:] for g in got] == [
+        (7, 0, 7, True),           # the id-7 row farther from e0
+        (7, 0, 7, not far),
+        (8, 0, 7, False),
+        (9, 0, 9, not far),        # farthest keeps one of the twins
+        (9, 0, 9, True),
+        (60, 0, 60, True),
+        (61, 0, 61, True),
+        (100, 1, 100, not far),
+        (101, 1, 100, far),
+        (102, 1, 102, not far),
+        (BIG + 1, 0, BIG + 1, not far),
+        (BIG + 3, 0, BIG + 1, far),
+        (BIG + 5, 1, 102, far),
+    ]
+    cent_cos = sorted((i, np.max(v @ CENTS.T) / max(np.linalg.norm(v), 1e-12))
+                      for i, v in rows)
+    assert [g[1] for g in got] == pytest.approx([c for _, c in cent_cos],
+                                                abs=1e-9)
+
+
+@pytest.mark.parametrize("keep", ["farthest", "min_id"])
+def test_null_id_rows_get_no_verdict(spark, keep):
+    """A row with a null id pairs with nothing and gets a null sem_cluster
+    and a null kept, under both keep rules, even when its vector equals
+    another row's."""
+    df = spark.createDataFrame(
+        [(None, [1.0, 0.0]), (None, [1.0, 0.01]), (None, [0.0, 1.0]),
+         (BIG + 1, [1.0, 0.0]), (BIG + 3, [1.0, 0.001])],
+        "vec_id long, embedding array<double>")
+    got = sorted(((r.vec_id is None, r.vec_id, r.sem_list, r.sem_cluster,
+                   r.kept) for r in semantic_dedup(
+        df, "vec_id", centroids=np.eye(2), threshold=0.99,
+        keep=keep).collect()), key=lambda t: (t[0], t[1] or 0, t[2]))
+    far = keep == "farthest"
+    assert got == [(False, BIG + 1, 0, BIG + 1, not far),
+                   (False, BIG + 3, 0, BIG + 1, far),
+                   (True, None, 0, None, None),
+                   (True, None, 0, None, None),
+                   (True, None, 1, None, None)]
+
+
+def test_long_chain_is_one_component(spark):
+    """40 unit vectors 2 degrees apart from -40 to 38 degrees: neighbours
+    match at threshold 0.999 (cos 2deg ~ 0.99939), vectors two steps apart
+    do not (cos 4deg ~ 0.99756).  The chain is one component however long,
+    labelled with its min id; the farthest keeper is the -40 degree end."""
+    ang = np.radians(np.arange(-40, 40, 2))
+    ids = 1000 - np.arange(len(ang))  # min id at the +38 degree end
+    df = spark.createDataFrame(
+        [(int(i), [float(np.cos(a)), float(np.sin(a))])
+         for i, a in zip(ids, ang)], "vec_id long, embedding array<double>")
+    cents = [[1.0, 0.0], [-1.0, 0.0]]
+    for keep, keeper in (("farthest", 1000), ("min_id", 961)):
+        rows = semantic_dedup(df, "vec_id", centroids=cents, threshold=0.999,
+                              keep=keep).collect()
+        assert len(rows) == 40
+        assert {r.sem_cluster for r in rows} == {961}
+        assert [r.vec_id for r in rows if r.kept] == [keeper]
+
+
+def test_build_jobs_and_sites(spark, tmp_path):
+    """Building the operator runs no Spark job with injected centroids and
+    only the centroid trainer's jobs without; the plan holds one
+    assignment site and one per-block kernel."""
+    from rasterframes_spark.pipeline.similarity import _train_unit_centroids
+
+    df, _ = _edge_rows(spark)
+    sd, jobs = count_jobs(spark, lambda: semantic_dedup(
+        df, "vec_id", centroids=CENTS, threshold=0.99))
+    assert jobs == 0
+    assert udf_sites(sd) == {"assign": 1, "block": 1}
+    # trained centroids: the trainer's jobs and no other (on this
+    # RDD-backed frame, a two-job count under AQE and the sample)
+    _, trainer = count_jobs(spark, lambda: _train_unit_centroids(
+        df, "embedding", 2, 2048, 42, None, caller="semantic_dedup"))
+    _, jobs = count_jobs(spark, lambda: semantic_dedup(
+        df, "vec_id", n_clusters=2, threshold=0.99))
+    assert jobs == trainer == 3
+    df.write.parquet(str(tmp_path / "emb"))
+    scan = spark.read.parquet(str(tmp_path / "emb"))
+    sd, jobs = count_jobs(spark, lambda: semantic_dedup(
+        scan, "vec_id", n_clusters=2, threshold=0.99))
+    assert jobs == 1  # the sample; the row count is the parquet footer
+    assert udf_sites(sd) == {"assign": 1, "block": 1}

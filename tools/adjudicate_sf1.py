@@ -59,8 +59,7 @@ wall = time.time() - t0
 emb10 = _emb10(spark, sf_dir)
 t0 = time.time()
 n = P.semantic_dedup(emb10, "vec_id", "embedding", n_clusters=64,
-                     threshold=0.97, pairs_method="blas") \\
-    .where("kept").count()
+                     threshold=0.97).where("kept").count()
 wall = time.time() - t0
 """,
     "ivf_ann": """

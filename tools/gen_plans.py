@@ -272,28 +272,18 @@ def main():
         "this is a map-only pass whose cost is the scan itself.",
         P.gopher_quality_filter(P.c4_clean(docs)))
 
-    add("semantic_dedup pair stage (SemDeDup, blocked within clusters, r7)",
-        "Candidate pairs come from a self-equi-join on the centroid "
-        "assignment (sem_list) — the shuffle key is one int, the "
-        "quadratic work is bounded per cluster by n_clusters, and no "
-        "BroadcastNestedLoopJoin appears. The verdict/keeper pass joins "
-        "16-byte ids and windows per duplicate group.",
+    add("semantic_dedup (SemDeDup, one kernel per centroid block)",
+        "One centroid-assignment site, then ONE applyInPandas kernel per "
+        "cluster: the only Exchange keys on the one-int cluster id "
+        "(sem_list), vectors cross the wire once per row, and the kernel "
+        "finds the block's gram pairs, labels each duplicate group with "
+        "its min id (union-find) and picks the keeper. Pairs never cross "
+        "clusters, so there is no pair join, no label-propagation round "
+        "and no keeper window; a task holds one cluster plus one 4096^2 "
+        "gram tile, so n_clusters is the size knob.",
         P.semantic_dedup(
             spark.read.parquet(f"{sf}/embeddings.parquet"),
             "vec_id", centroids=e._ivf_cents(), threshold=0.98))
-
-    add("semantic_dedup pair stage, BLAS path (r8)",
-        "pairs_method='blas' replaces the pair self-join with ONE "
-        "applyInPandas gram matrix per cluster: vectors cross the wire "
-        "once per row (the SQL join ships both ~1 KB payloads with "
-        "every candidate pair), pairs leave as three scalars, and the "
-        "only Exchange keys on the one-int cluster id. The r8 sf1 "
-        "rehearsal measured 153 s -> 3.7 s on a 20k x d=64 corpus; "
-        "pair output is parity-tested against the SQL path.",
-        P.semantic_dedup(
-            spark.read.parquet(f"{sf}/embeddings.parquet"),
-            "vec_id", centroids=e._ivf_cents(), threshold=0.98,
-            pairs_method="blas"))
 
     from rasterframes_spark.sources.warc import read_warc, write_warc
     wd = tempfile.mkdtemp()
