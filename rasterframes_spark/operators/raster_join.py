@@ -80,136 +80,15 @@ def _overlay_partials(ltile: pd.DataFrame, partials: pd.Series) -> pd.DataFrame:
     return tiles_to_struct_pdf(out)
 
 
-_MERGE_TARGET_BYTES = 16 * 1024 * 1024  # per merge-shuffle partition
-_MERGE_MAX_PARTITIONS = 4096
-# Safety multiplier on Catalyst's free sizeInBytes estimate when it is
-# used to SKIP the eager volume jobs: covers the estimate reading
-# compressed bytes (parquet zstd on natural rasters ~1-4x) where the
-# vol() jobs price uncompressed cell volume.  Inputs compressed harder
-# than this (constant/smooth synthetic tiles) can slip past the gate —
-# the consequence is the pre-r14 plan (session-default merge
-# partitions, graceful sort-spill), not wrongness; force sizing with an
-# int merge_partitions when that matters.
-_PLAN_STAT_INFLATION = 4.0
-
-
-def _plan_size_bytes(df) -> float | None:
-    """Catalyst's estimated sizeInBytes of the optimized logical plan —
-    driver-side only, NO Spark jobs.  Accurate for materialized caches,
-    localCheckpoints and file scans (file bytes); unknown sources
-    default to Long.MaxValue, which callers must treat as 'huge'."""
-    try:
-        return float(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — estimate only; None = unknown
-        return None
-
-
-_STAT_TRUSTED_NODES = frozenset({
-    "Project", "Filter", "SubqueryAlias", "Repartition",
-    "RepartitionByExpression", "Sort", "InMemoryRelation",
-    "LocalRelation", "LogicalRelation", "Relation"})
-# LogicalRDD is deliberately NOT trusted: a localCheckpoint inherits its
-# ORIGIN plan's stats, so a checkpointed UDF-generated tile frame reads
-# ~1000x under its real payload (measured: 1.6 KB stat for a 1.6 MB
-# mapInPandas payload), and createDataFrame frames read Long.MaxValue.
-
-
-def _stat_trustworthy(df) -> bool:
-    """True when Catalyst's sizeInBytes for this plan prices the bytes
-    that actually flow: materialized caches (exact), file scans (file
-    bytes) and local data, under narrow projections only.
-    Python-eval, Generate, Join, Aggregate or Range nodes can
-    put the real payload orders of magnitude past the estimate (binary
-    columns price at schema-default width through them — a UDF-decoded
-    tile frame reads as KBs), so their presence disqualifies the
-    free skip and the precise metadata estimate runs instead.  An
-    InMemoryRelation counts only once materialized — before that its
-    stats are the (possibly opaque) child's."""
-    try:
-        def walk(jp):
-            name = jp.nodeName()
-            if name not in _STAT_TRUSTED_NODES:
-                return False
-            if name == "InMemoryRelation":
-                return bool(
-                    jp.cacheBuilder().isCachedColumnBuffersLoaded())
-            ch = jp.children()
-            return all(walk(ch.apply(i)) for i in range(ch.size()))
-        return walk(df._jdf.queryExecution().optimizedPlan())
-    except Exception:  # noqa: BLE001 — unknown shape = untrusted
-        return False
-
-
-def _merge_shuffle_partitions(L, R, right_tiles,
-                              left_tile) -> int | None:
-    """Size the merge-stage shuffles from estimated TILE VOLUME instead
-    of inheriting the session default (r13 100x rehearsal: an 8 GB
-    payload shuffle over 32 session partitions spilled 13 GB of disk in
-    the premerge sort — graceful, but partition count must scale with
-    data, VERDICT r13 #2).
-
-    One metadata-only aggregate per side prices rows x cols x rows x
-    dtype-width (width parsed from the cell_type's bit count; widthless
-    names price at the 8-byte upper bound).  Each payload byte crosses
-    ~2 merge shuffles (payload join + premerge, partials + final join),
-    so the estimate is 2x(L + R) over a 16 MiB/partition target — small
-    relative to Spark's usual 100-200 MB because the pandas merge
-    kernel inflates Arrow payloads ~2-4x in worker memory and the
-    premerge window-sort buffers whole groups (the 32 MiB form still
-    memory-spilled ~5 GB against local[32]'s 8g execution pool).  Returns
-    None (leave every plan untouched — the common small-join case) when
-    the sized count does not exceed the session default; capped at 4096
-    (beyond that, raise the session default — the cap is an AQE-era
-    sanity bound, not a tuning point)."""
-    spark = L.sparkSession
-    try:
-        default = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        default = 200
-
-    # Free short-circuit (r15, VERDICT r14 #1): the eager metadata
-    # aggregates priced EVERY "auto" call — two plan-time Spark jobs
-    # even for trivially small joins where the sized count then changed
-    # nothing.  When both plans' Catalyst size stats price the real
-    # payload (_stat_trustworthy) and even an inflated reading cannot
-    # push the sized count past the session default (n > default ⟺
-    # est > default x target), return None without launching anything.
-    # Untrusted shapes and unknown/huge stats fall through to the
-    # precise estimate — the conservative direction.
-    if _stat_trustworthy(L) and _stat_trustworthy(R):
-        szL, szR = _plan_size_bytes(L), _plan_size_bytes(R)
-        if szL is not None and szR is not None:
-            bound = _PLAN_STAT_INFLATION * 2.0 * (szL + szR)
-            if bound <= float(default) * _MERGE_TARGET_BYTES:
-                return None
-
-    def vol(df, tile_cols):
-        try:
-            per_row = None
-            for tc in tile_cols:
-                width_bytes = F.coalesce(
-                    F.nullif(F.regexp_extract(
-                        F.col(f"{tc}.cell_type"), r"(\d+)", 1),
-                        F.lit("")).cast("long"),
-                    F.lit(64)) / F.lit(8)
-                b = (F.col(f"{tc}.cols").cast("long")
-                     * F.col(f"{tc}.rows").cast("long") * width_bytes)
-                per_row = b if per_row is None else per_row + b
-            return float(df.agg(F.sum(per_row)).head()[0] or 0.0)
-        except Exception:  # noqa: BLE001 — lazy-ref/odd schemas: no scaling
-            return 0.0
-
-    est = 2.0 * (vol(L, [left_tile]) + vol(R, right_tiles))
-    n = int(est // _MERGE_TARGET_BYTES) + 1
-    if n <= default:
-        return None
-    return min(n, _MERGE_MAX_PARTITIONS)
+# Initial partition count of the merge-stage rebalance shuffles.  AQE
+# coalesces a rebalance exchange to the bytes it measures at run time
+# (``spark.sql.adaptive.advisoryPartitionSizeInBytes``), so this is only
+# the ceiling a merge stage can spread over.
+_MERGE_PARTITIONS = 4096
 
 
 def _chunked_premerge(L, matched, right_tiles, left_tile, left_extent,
-                      left_crs, resampling: str, max_fan_in: int,
-                      n_merge: int | None = None):
+                      left_crs, resampling: str, max_fan_in: int):
     """Two-level bounded merge: (lid, chunk) partial canvases on the left
     grid (each grouped task holds ≤ max_fan_in right tiles), then the
     chunk-ordered partial list per lid (__lid, __rl_<band> array<tile>)."""
@@ -257,13 +136,12 @@ def _chunked_premerge(L, matched, right_tiles, left_tile, left_extent,
             out[f"__rp_{rt}"] = [_canvas_tile(canvas, mask, ct).to_row()]
         return pd.DataFrame(out)
 
+    # partial canvases re-shuffle for the chunk-order agg; the rebalance
+    # on (lid,lid2) satisfies the agg's clustering, so it REPLACES (not
+    # adds to) the agg's exchange
     partials = chunked.groupBy("__lid", "__lid2", "__chunk").applyInPandas(
-        premerge, schema=mid_schema)
-    if n_merge:
-        # partial canvases re-shuffle for the chunk-order agg; sized
-        # hash partitioning on (lid,lid2) satisfies the agg's clustering
-        # so this REPLACES (not adds to) its exchange
-        partials = partials.repartition(n_merge, "__lid", "__lid2")
+        premerge, schema=mid_schema).hint(
+            "rebalance", _MERGE_PARTITIONS, "__lid", "__lid2")
     return partials.groupBy("__lid", "__lid2").agg(
         *[F.transform(
             F.array_sort(F.collect_list(
@@ -287,7 +165,6 @@ def raster_join(
     cell_size_deg: float | None = None,
     max_fan_in: int = 256,
     cache_inputs: bool = True,
-    merge_partitions: int | str | None = "auto",
 ) -> DataFrame:
     """Left-outer spatial join + reproject-merge (RasterJoin.scala:68-133).
 
@@ -312,24 +189,10 @@ def raster_join(
     tile gives null. ``cache_inputs=False`` skips the persists when the
     caller manages caching or inputs are already materialized tables.
 
-    ``merge_partitions`` sizes the merge-stage shuffles: ``"auto"``
-    (default) first bounds the payload with Catalyst's free sizeInBytes
-    estimate — joins that provably cannot exceed the session default's
-    budget plan with ZERO eager work (r15; the common small-join case)
-    — and only past that bound estimates tile volume with one
-    metadata-only aggregate per side AT PLAN TIME (two small eager
-    jobs; with ``cache_inputs=True`` they just move cache
-    materialization earlier, with ``cache_inputs=False`` they recompute
-    upstream lineage once — see :func:`_merge_shuffle_partitions`); an
-    ``int`` pins the count
-    with no estimate job; ``None`` disables sizing entirely — combined
-    with ``cache_inputs=False`` the operator builds its plan with ZERO
-    eager work, the pre-r14 contract.  Joins whose payload exceeds the
-    session default's ~16 MiB/partition budget get sized explicit hash
-    partitioning on the join keys and the left id instead of inheriting
-    ``spark.sql.shuffle.partitions`` — at 100x the sf1 leg that bound
-    cut the premerge sort's 13 GB disk spill to zero; small joins keep
-    their exact unsized plans.
+    The merge-stage shuffles are ``rebalance`` hints, so AQE sizes them
+    from the bytes each stage actually writes
+    (``spark.sql.adaptive.advisoryPartitionSizeInBytes``); building the
+    plan runs no job unless ``cell_size_deg`` is None.
 
     Cache lifetime: the persisted stamped inputs stay alive as long as the
     returned DataFrame may be recomputed (Spark evicts them LRU / spills
@@ -446,36 +309,22 @@ def raster_join(
     # stacks) without the metadata pass ever touching cell data
     r_payload = r_payload.withColumn(
         "__rid3", F.xxhash64(*[F.col(f"__rp_{rt}") for rt in right_tiles]))
-    # volume-scaled merge shuffles (None = session default, plan as-is)
-    if merge_partitions == "auto":
-        n_merge = _merge_shuffle_partitions(L, R, right_tiles, left_tile)
-    elif merge_partitions is None:
-        n_merge = None
-    else:
-        n_merge = max(1, int(merge_partitions))
-    if n_merge:
-        # The payload join is where the r13 100x spill actually lived
-        # (per-stage attribution, PLANS.md r14): AQE coalesces the
-        # join's reduce partitions from the KB-scale pairs side, so the
-        # GB-scale payload sort-merge collapsed into ONE task that
-        # sort-spilled ~6 GB.  Sized explicit repartitioning of BOTH
-        # join inputs pins the parallelism (user repartitions are
-        # exempt from AQE coalescing), and the shuffle_hash hint builds
-        # on the small pairs side so the payload side is never sorted
-        # at all — sort spill cannot occur by construction.
-        pairs = pairs.repartition(n_merge, "__rid", "__rid2")
-        r_payload = r_payload.repartition(n_merge, "__rid", "__rid2")
-        matched = pairs.hint("shuffle_hash").join(
-            r_payload, ["__rid", "__rid2"])
-        # sized hash partitioning on the left id satisfies the window /
-        # premerge / final-agg clustering downstream, so this REPLACES
-        # the exchange those stages would insert anyway
-        matched = matched.repartition(n_merge, "__lid", "__lid2")
-    else:
-        matched = pairs.join(r_payload, ["__rid", "__rid2"])
+    # Rebalancing BOTH payload-join inputs lets AQE size the join from
+    # the bytes both sides write (sized from the KB-scale pairs side
+    # alone, a GB payload once collapsed into one spilling task); the
+    # shuffle_hash hint builds on the pairs side, so the payload is never
+    # sorted and never broadcast (a localCheckpointed payload's size
+    # statistic can read KBs for GBs).
+    pairs = pairs.hint("rebalance", _MERGE_PARTITIONS, "__rid", "__rid2")
+    r_payload = r_payload.hint(
+        "rebalance", _MERGE_PARTITIONS, "__rid", "__rid2")
+    matched = pairs.hint("shuffle_hash").join(r_payload, ["__rid", "__rid2"])
+    # the left-id rebalance satisfies the window / premerge clustering
+    # downstream, so it REPLACES the exchange those stages would insert
+    matched = matched.hint("rebalance", _MERGE_PARTITIONS, "__lid", "__lid2")
     grouped = _chunked_premerge(
         L, matched, right_tiles, left_tile, left_extent, left_crs,
-        resampling, max_fan_in, n_merge=n_merge)
+        resampling, max_fan_in)
 
     joined = L.join(grouped, ["__lid", "__lid2"], "left")
     out_cols = [c for c in left.columns]

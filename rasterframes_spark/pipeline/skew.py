@@ -139,6 +139,42 @@ def _scan_row_count_exact(df: DataFrame) -> int | None:
         return None
 
 
+_NARROW = frozenset({"Project", "Filter", "SubqueryAlias"})
+_SHUFFLES = frozenset({"Aggregate", "Join", "Window", "Distinct",
+                       "Deduplicate", "Repartition", "RepartitionByExpression",
+                       "RebalancePartitions"})
+
+
+def _shuffled_partitions(df: DataFrame) -> tuple[bool, int | None]:
+    """Whether ``df``'s optimized plan holds a shuffle — driver-side
+    only, NO Spark jobs — and, when a user repartition to a fixed count
+    sits at the top of the plan (AQE never coalesces it), that count.
+    Any other post-shuffle count is AQE's choice at run time (None)."""
+    try:
+        jp = df._jdf.queryExecution().optimizedPlan()
+        top = jp
+        while top.nodeName() in _NARROW:
+            top = top.children().apply(0)
+        fixed = None
+        if top.nodeName() == "Repartition" and top.shuffle():
+            fixed = int(top.numPartitions())
+        elif (top.nodeName() == "RepartitionByExpression"
+              and top.optNumPartitions().isDefined()):
+            fixed = int(str(top.optNumPartitions().get()))
+        stack = [jp]
+        while stack:
+            node = stack.pop()
+            name = node.nodeName()
+            if name in _SHUFFLES and (name != "Repartition"
+                                      or node.shuffle()):
+                return True, fixed
+            ch = node.children()
+            stack.extend(ch.apply(i) for i in range(ch.size()))
+    except Exception:  # noqa: BLE001 — unknown shape: probe instead
+        pass
+    return False, None
+
+
 def spread(df: DataFrame, rows: int | str | None = None,
            rows_per_task: int = 2000) -> DataFrame:
     """Spread a narrow input across cores before a per-row UDF pass.
@@ -165,10 +201,13 @@ def spread(df: DataFrame, rows: int | str | None = None,
     partitioning is the source's contract, and ``df.rdd`` is undefined
     for them).
 
-    Note: the ``df.rdd.getNumPartitions()`` probe materializes upstream
-    query stages under AQE when the lineage contains a shuffle — an
-    eager side effect for non-scan inputs (the engine's own call sites
-    all pass scan-rooted frames)."""
+    Building runs no Spark job for an input whose plan holds a shuffle
+    (Aggregate, Join, Window, Distinct or a repartition): probing its
+    partition count would materialize the upstream query stages under
+    AQE, so it is repartitioned straight to the target unless a user
+    repartition to at least the target count tops its plan.  Every
+    other input is probed with ``df.rdd.getNumPartitions()``, which
+    runs no job on a shuffle-free lineage."""
     if df.isStreaming:
         return df
     sc = df.sparkSession.sparkContext
@@ -177,6 +216,9 @@ def spread(df: DataFrame, rows: int | str | None = None,
         rows = _scan_row_bound(df)
     target = (cap if rows is None
               else max(2, min(cap, -(-int(rows) // rows_per_task))))
-    if df.rdd.getNumPartitions() < target:
+    shuffled, n = _shuffled_partitions(df)
+    if not shuffled:
+        n = df.rdd.getNumPartitions()
+    if n is None or n < target:
         return df.repartition(target)
     return df

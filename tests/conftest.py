@@ -29,15 +29,12 @@ _PANDAS_FUNC_NODES = ("FlatMapGroupsInPandasExec", "MapInPandasExec",
                       "FlatMapCoGroupsInPandasExec")
 
 
-def udf_sites(df) -> Counter:
-    """Python UDF evaluation sites in ``df``'s executed plan, counted by UDF
-    name: one per UDF on each ``*EvalPythonExec`` node, and one per
-    ``applyInPandas`` / ``mapInPandas`` / cogrouped node by its function's
-    name.  Walks into AQE plans, query stages and cached relations; a node
-    reached twice (a cache read by several scans) counts once."""
+def plan_nodes(df):
+    """Each node of ``df``'s executed physical plan, once.  Walks into AQE
+    plans, query stages and cached relations; a node reached twice (a
+    cache read by several scans) is yielded once."""
     jvm = df.sparkSession._jvm
     seen: set[int] = set()
-    sites: Counter = Counter()
     todo = [df._jdf.queryExecution().executedPlan()]
     while todo:
         p = todo.pop()
@@ -45,6 +42,7 @@ def udf_sites(df) -> Counter:
         if key in seen:
             continue
         seen.add(key)
+        yield p
         cls = p.getClass().getSimpleName()
         if cls == "AdaptiveSparkPlanExec":
             todo.append(p.executedPlan())
@@ -52,14 +50,24 @@ def udf_sites(df) -> Counter:
             todo.append(p.plan())
         elif cls == "InMemoryTableScanExec":
             todo.append(p.relation().cachedPlan())
-        elif cls.endswith("EvalPythonExec"):
+        ch = p.children()
+        todo.extend(ch.apply(i) for i in range(ch.size()))
+
+
+def udf_sites(df) -> Counter:
+    """Python UDF evaluation sites in ``df``'s executed plan, counted by UDF
+    name: one per UDF on each ``*EvalPythonExec`` node, and one per
+    ``applyInPandas`` / ``mapInPandas`` / cogrouped node by its function's
+    name (nodes from :func:`plan_nodes`)."""
+    sites: Counter = Counter()
+    for p in plan_nodes(df):
+        cls = p.getClass().getSimpleName()
+        if cls.endswith("EvalPythonExec"):
             it = p.udfs().iterator()
             while it.hasNext():
                 sites[it.next().name()] += 1
         elif cls in _PANDAS_FUNC_NODES:
             sites[p.func().name()] += 1
-        ch = p.children()
-        todo.extend(ch.apply(i) for i in range(ch.size()))
     return sites
 
 

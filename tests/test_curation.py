@@ -202,6 +202,21 @@ def test_spread_is_noop_when_wide(spark, docs):
     assert out2.rdd.getNumPartitions() > 1
 
 
+def test_spread_of_shuffled_input_runs_no_job(spark, docs):
+    """A post-shuffle input is spread without probing its partition
+    count, which would run the upstream shuffle stages at build time."""
+    from rasterframes_spark.pipeline.skew import spread
+    from tests.conftest import count_jobs
+
+    counts = docs.groupBy("source").count()
+    out, jobs = count_jobs(spark, lambda: spread(counts, rows=5000,
+                                                 rows_per_task=1000))
+    assert jobs == 0
+    assert out.rdd.getNumPartitions() == min(
+        5, spark.sparkContext.defaultParallelism)
+    assert sorted(out.collect()) == sorted(counts.collect())
+
+
 def test_write_shards_deterministic(spark, tmp_path):
     """Sharded export: membership is a pure function of (id, seed) —
     stable across runs AND input layouts; one file per shard dir; rows

@@ -351,88 +351,6 @@ def test_all_nodata_mean_is_null(spark):
     assert out[2]["mean"] == 5.0
 
 
-def test_merge_shuffle_partitions_scale_with_volume(spark, left_df):
-    """VERDICT r13 #2: merge shuffles size from estimated tile volume.
-    Small joins estimate under the session default and keep unsized
-    plans (None); metadata claiming ~8 GB of payload sizes the count
-    to ~2x(L+R)/32MiB; absurd volumes cap at 4096."""
-    from rasterframes_spark.operators.raster_join import (
-        _MERGE_TARGET_BYTES, _merge_shuffle_partitions)
-
-    # the module fixture's two 8x8 float64 tiles: far under default
-    assert _merge_shuffle_partitions(
-        left_df, left_df, ["tile"], "tile") is None
-
-    def claimed(n_rows, cols, rows, ct="uint16ud0"):
-        # metadata-only estimate: cells can stay tiny/imaginary
-        return spark.range(n_rows).select(
-            F.struct(F.lit(ct).alias("cell_type"),
-                     F.lit(cols).alias("cols"), F.lit(rows).alias("rows"),
-                     F.lit(b"").alias("cells")).alias("tile"))
-
-    big = claimed(8000, 256, 256)          # 8000 x 256^2 x 2B ~ 1 GB
-    n = _merge_shuffle_partitions(big, big, ["tile"], "tile")
-    want = int(4 * 8000 * 256 * 256 * 2 // _MERGE_TARGET_BYTES) + 1
-    assert n == want > int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    huge = claimed(4000000, 512, 512, "float64")
-    assert _merge_shuffle_partitions(
-        huge, huge, ["tile"], "tile") == 4096
-
-    # a sized join's executed plan carries the explicit partition count
-    t = Tile(np.arange(64, dtype="float64").reshape(8, 8), "float64")
-    small_real = spark.createDataFrame(
-        [row(0, t, ext(0, 0, 8, 8))], schema=SCHEMA)
-    import importlib
-    rj = importlib.import_module("rasterframes_spark.operators.raster_join")
-    orig = rj._MERGE_TARGET_BYTES
-    rj._MERGE_TARGET_BYTES = 16  # force sizing on the tiny fixture
-    try:
-        out = raster_join(small_real, small_real, cache_inputs=False)
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "REPARTITION_BY_NUM" in plan or "hashpartitioning(__lid" \
-            in plan
-        r = out.collect()[0]
-        merged = get_tile({"tile": r["tile_right"]})
-        assert float(merged.masked().sum()) == float(np.arange(64).sum())
-    finally:
-        rj._MERGE_TARGET_BYTES = orig
-
-
-def test_raster_join_lazy_and_pinned_partition_modes(spark, left_df,
-                                                     monkeypatch):
-    """merge_partitions=None + cache_inputs=False builds the plan with
-    ZERO eager jobs (the pre-r14 lazy contract, restored as an explicit
-    mode); an int pins the count without any estimate job; both produce
-    values identical to auto."""
-    from pyspark.sql import DataFrame
-
-    rt = Tile(np.full((8, 8), 7.0), "float64")
-    right = spark.createDataFrame([row(0, rt, ext(0, 0, 8, 8))],
-                                  schema=SCHEMA)
-
-    def boom(self):
-        raise AssertionError("lazy raster_join ran an eager job")
-
-    monkeypatch.setattr(DataFrame, "count", boom)
-    monkeypatch.setattr(DataFrame, "head", boom)
-    monkeypatch.setattr(DataFrame, "collect", boom)
-    lazy = raster_join(left_df, right, cache_inputs=False,
-                       merge_partitions=None, cell_size_deg=8.0)
-    pinned = raster_join(left_df, right, cache_inputs=False,
-                         merge_partitions=7, cell_size_deg=8.0)
-    assert lazy._jdf.queryExecution().analyzed() is not None
-    monkeypatch.undo()
-    vals = {}
-    for name, df in (("lazy", lazy), ("pinned", pinned),
-                     ("auto", raster_join(left_df, right,
-                                          cell_size_deg=8.0))):
-        r0 = df.orderBy("id").collect()[0]
-        t = get_tile({"tile": r0["tile_right"]})
-        vals[name] = (t.masked().count(), float(t.masked().sum()))
-    assert vals["lazy"] == vals["pinned"] == vals["auto"] == (64, 448.0)
-
-
 def test_release_raster_join_cache(spark, left_df):
     """cache_inputs=True persists stamped inputs; the release helper
     unpersists them (ADVICE r5: no silent accumulation across calls)."""
@@ -452,60 +370,6 @@ def test_release_raster_join_cache(spark, left_df):
     assert getattr(lazy, "_rf_cached_inputs", None) is None
 
 
-def test_merge_sizing_free_for_small_trusted_joins(spark, monkeypatch):
-    """r15 (VERDICT r14 #1): merge_partitions='auto' launches ZERO eager
-    jobs when both inputs' Catalyst size stats price the real payload
-    and read far under the sized threshold — the bench-cell shape
-    (cache_inputs=False over the caller's materialized caches).  The
-    sized path is untouched: UDF-derived / Range-built / checkpointed
-    frames stay untrusted and still run the metadata estimate."""
-    import pandas as pd
-
-    from pyspark.sql import DataFrame
-
-    from rasterframes_spark.operators.raster_join import _stat_trustworthy
-
-    t = Tile(np.full((8, 8), 7.0), "float64")
-    left = spark.createDataFrame(
-        [row(0, t, ext(0, 0, 8, 8))], schema=SCHEMA).cache()
-    right = spark.createDataFrame(
-        [row(0, t, ext(0, 0, 8, 8))], schema=SCHEMA).cache()
-    left.count(), right.count()   # materialize: stats become exact
-
-    def boom(self, *a, **k):
-        raise AssertionError(
-            "auto raster_join ran an eager job on a small trusted join")
-
-    monkeypatch.setattr(DataFrame, "count", boom)
-    monkeypatch.setattr(DataFrame, "head", boom)
-    monkeypatch.setattr(DataFrame, "collect", boom)
-    out = raster_join(left, right, cache_inputs=False,
-                      cell_size_deg=8.0)       # merge_partitions="auto"
-    assert out._jdf.queryExecution().analyzed() is not None
-    monkeypatch.undo()
-    r0 = out.collect()[0]
-    merged = get_tile({"tile": r0["tile_right"]})
-    assert (merged.masked().count(), float(merged.masked().sum())) \
-        == (64, 448.0)
-
-    # trust boundary: materialized cache yes; UDF projections, Range
-    # frames and localCheckpoints (origin-stats, measured ~1000x under
-    # real mapInPandas payloads) no
-    from rasterframes_spark.functions._kernel import lazy_pandas_udf
-
-    @lazy_pandas_udf("long")
-    def ident(s: pd.Series) -> pd.Series:
-        return s
-
-    assert _stat_trustworthy(left)
-    assert _stat_trustworthy(left.select("id", "tile"))
-    assert not _stat_trustworthy(
-        left.select(ident(F.col("id")).alias("id")))
-    assert not _stat_trustworthy(spark.range(4))
-    assert not _stat_trustworthy(left.localCheckpoint())
-    left.unpersist(), right.unpersist()
-
-
 def test_raster_join_single_extent_reprojection_eval(spark, left_df):
     """r15 (§4.4): each side's extent→EPSG:4326 reprojection evaluates
     exactly ONCE — the pair join's bbox-overlap condition lets Catalyst
@@ -520,3 +384,90 @@ def test_raster_join_single_extent_reprojection_eval(spark, left_df):
                       right_tiles=["tile"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert udf_sites(out)["_extent_to_4326_udf"] == 2, plan  # one per side
+
+
+def test_raster_join_build_job_budget(spark):
+    """Building the plan runs no Spark job with a given grid cell size,
+    cached inputs or not; with ``cell_size_deg=None`` it runs only the
+    percentile ``.head()`` that picks the cell size (its stages plus the
+    input cache it materializes).  Every build merges the same values."""
+    from rasterframes_spark.operators import release_raster_join_cache
+
+    # rows no other test builds, so no earlier test's materialized input
+    # cache serves the percentile pass
+    t = Tile(np.zeros((8, 8), dtype="float64"), "float64")
+    left = spark.createDataFrame(
+        [row(10, t, ext(0, 0, 8, 8)), row(11, t, ext(100, 100, 108, 108))],
+        schema=SCHEMA)
+    rt = Tile(np.full((8, 8), 7.0), "float64")
+    right = spark.createDataFrame([row(0, rt, ext(0, 0, 8, 8))],
+                                  schema=SCHEMA)
+    built = {}
+    for name, kw in (("cached", {"cell_size_deg": 8.0}),
+                     ("uncached", {"cell_size_deg": 8.0,
+                                   "cache_inputs": False}),
+                     ("grid_from_data", {})):
+        built[name] = count_jobs(
+            spark, lambda kw=kw: raster_join(left, right, **kw))
+    jobs = {name: n for name, (_, n) in built.items()}
+    assert jobs == {"cached": 0, "uncached": 0, "grid_from_data": 3}
+    for name, (df, _) in built.items():
+        r0 = df.orderBy("id").collect()[0]
+        t = get_tile({"tile": r0["tile_right"]})
+        assert (t.masked().count(), float(t.masked().sum())) \
+            == (64, 448.0), name
+        release_raster_join_cache(df)
+
+
+def _tile_frame(spark, n, shift=0.0):
+    """``n`` random 64x64 float64 tiles made by ``mapInPandas`` and
+    ``localCheckpoint``ed: Catalyst prices the checkpoint from its origin
+    plan, so the frame's size statistic reads KBs for MBs of tiles."""
+    import pandas as pd
+
+    def gen(batches):
+        # self-contained: executors do not import this test module
+        import numpy as np
+
+        for pdf in batches:
+            yield pd.DataFrame([{
+                "id": int(i),
+                "tile": {"cell_type": "float64", "cols": 64, "rows": 64,
+                         "cells": np.random.default_rng(int(i))
+                         .random((64, 64)).tobytes()},
+                "extent": {"xmin": i + shift, "ymin": 0.0,
+                           "xmax": i + shift + 1.0, "ymax": 1.0},
+                "crs": "EPSG:4326"} for i in pdf["id"]])
+
+    return (spark.range(n).repartition(4)
+            .mapInPandas(gen, schema=SCHEMA.replace("id int", "id long"))
+            .localCheckpoint())
+
+
+def test_payload_join_is_shuffled_hash_under_hostile_stats(spark):
+    """The payload join on ``__rid`` is a shuffled hash join that builds
+    the pairs side, even when the payload's size statistic reads far
+    under the broadcast threshold: a broadcast would ship the whole
+    payload to every task, and a sort-merge join would sort it."""
+    from tests.conftest import plan_nodes
+
+    left, right = _tile_frame(spark, 64), _tile_frame(spark, 64, shift=0.5)
+    stat = float(str(right._jdf.queryExecution().optimizedPlan()
+                     .stats().sizeInBytes()))
+    payload = 64 * 64 * 64 * 8  # 2 MiB of cells
+    threshold = float(spark.conf.get(
+        "spark.sql.autoBroadcastJoinThreshold").rstrip("b"))
+    assert stat * 100 < payload and stat < threshold, stat
+    out = raster_join(left, right, cell_size_deg=1.0, cache_inputs=False)
+    assert len(out.collect()) == 64  # runs out's own plan to its final form
+
+    def keys(j):
+        ks = j.leftKeys()
+        return {ks.apply(i).name() for i in range(ks.size())}
+
+    joins = [p for p in plan_nodes(out)
+             if p.getClass().getSimpleName().endswith("JoinExec")
+             and "__rid" in keys(p)]
+    kinds = [p.getClass().getSimpleName() for p in joins]
+    assert kinds == ["ShuffledHashJoinExec"], kinds
+    assert joins[0].buildSide().getClass().getSimpleName() == "BuildLeft$"

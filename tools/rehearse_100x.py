@@ -3,9 +3,9 @@
 The bench's sf1 block measures every heavy operator at 10x the sf0.1
 headline cells; this tool asks the 100 TB question one decade harder:
 the SAME operator shapes at 100x, with the same forensics (shuffle
-bytes, max/median task skew, spill, steal) and a CONTEMPORANEOUS
-sf0.1-shape control timed immediately before each leg so the x100
-ratio is steal-invariant (the bench's paired-denominator pattern).
+bytes, task counts, max/median task skew, spill, steal) and a
+CONTEMPORANEOUS sf0.1-shape control timed immediately before each leg
+so the x100 ratio is steal-invariant (the bench's paired-denominator pattern).
 
 Fixtures follow the sf1 rehearsal's honesty rules: the 100x corpus is
 100 salted replicas whose texts are pairwise distinct ACROSS replicas
@@ -91,6 +91,8 @@ def main():
              + s.get("memoryBytesSpilled", 0) > 0),
             key=lambda d: -(d["disk_mb"] + d["mem_mb"]))[:4]
         return {"shuffle_read_mb": round(tot_read / 1e6, 1),
+                "tasks": sum(s.get("numCompleteTasks", 0) for s in stages),
+                "heaviest_stage_tasks": (heavy or {}).get("numCompleteTasks"),
                 "spilled_mb": round(spill / 1e6, 1),
                 "spilled_mem_mb": round(mspill / 1e6, 1),
                 "spilled_disk_mb": round(dspill / 1e6, 1),
