@@ -19,6 +19,7 @@ Spark DataFrame/SQL primitives:
 See SURVEY.md for the full structural analysis this build follows.
 """
 
+from rasterframes_spark import _pyworker  # noqa: F401 -- first: zip cache fix (see module)
 from rasterframes_spark.tile import (  # noqa: F401
     CellType,
     CRS,

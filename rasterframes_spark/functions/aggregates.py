@@ -287,7 +287,7 @@ def rf_agg_approx_histogram(df: DataFrame, tile, num_buckets: int = 80):
 
     partials = src.mapInPandas(partial, schema="values binary, counts binary")
 
-    def final(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def final(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         vals = np.concatenate(
             [np.frombuffer(b, dtype="float64") for b in pdf["values"]])
         cnts = np.concatenate(
@@ -565,7 +565,7 @@ def agg_local(df: DataFrame, tile, which: str = "mean",
         out_schema = StructType(list(in_schema.fields) + _out_tile_fields(which))
         src = df.select(*group_cols, tile_c.alias("__t"))
 
-        def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             _, state = _accumulate_tiles(pdf["__t"])
             out = {g: [k] for g, k in zip(key_names, key)}
             if state is None:

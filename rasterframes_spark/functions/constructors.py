@@ -385,7 +385,7 @@ def assemble_tiles(df: DataFrame, group_cols: list, col_index, row_index, cell,
             *[F.col(cv).cast(xfer).alias(f"__c_{i}") for i, cv in enumerate(cvs)],
         )
 
-        def make(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        def make(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
             p = pdf["__p"].to_numpy(dtype="int64")
             out = {g: [k] for g, k in zip(key_names, key)}
             for i, name in enumerate(out_names):
@@ -444,7 +444,7 @@ def assemble_tiles(df: DataFrame, group_cols: list, col_index, row_index, cell,
 
     mid = src.mapInPandas(partial, schema=mid_schema)
 
-    def merge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pos = np.concatenate(
             [np.frombuffer(b, dtype="<i4") for b in pdf["__pos"]])
         out = {g: [k] for g, k in zip(key_names, key)}

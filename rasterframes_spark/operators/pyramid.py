@@ -52,7 +52,7 @@ def pyramid_up(layer: DataFrame, tile_col: str = "tile",
         F.col(extent_col).alias("__e"),
     )
 
-    def agg(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def agg(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         structs = pd.DataFrame([
             t if t is not None else
             {"cell_type": None, "cols": None, "rows": None, "cells": None}

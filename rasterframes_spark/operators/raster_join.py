@@ -111,7 +111,7 @@ def _chunked_premerge(L, matched, right_tiles, left_tile, left_extent,
     mid_schema = "__lid long, __lid2 long, __chunk long, " + ", ".join(
         f"__rp_{rt} {TILE_SCHEMA.simpleString()}" for rt in right_tiles)
 
-    def premerge(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def premerge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["__rid", "__rid2", "__rid3"])
         r0 = pdf.iloc[0]
         out = {"__lid": [key[0]], "__lid2": [key[1]], "__chunk": [int(key[2])]}

@@ -260,7 +260,7 @@ def pack_documents(df: DataFrame, max_tokens: int,
         "__pk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(int(nb))).cast("int"))
     schema = with_key.drop("__pk").schema.add("pack_id", "long")
 
-    def pack(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def pack(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         part = int(key[0])
         pdf = pdf.sort_values([token_col, id_col],
                               ascending=[False, True]).drop(columns="__pk")

@@ -55,6 +55,9 @@ def create_rf_spark_session(master: str | None = None, app_name: str = "rasterfr
         # (consumers normalize via timestamp_micros(nanos div 1000))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # workers fork from a daemon that has imported the package (see
+        # _pyworker): no per-task zip re-reads, no per-worker imports
+        .config("spark.python.daemon.module", "rasterframes_spark._pyworker")
     )
     # Object-store transport env reaches executor Python workers (r14):
     # RangeSource's s3:// signing and retry knobs read the standard AWS /

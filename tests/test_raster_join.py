@@ -2,6 +2,8 @@
 left row count preserved; RHS merged into LHS grid; NoData where no
 coverage; different-CRS right side reprojects correctly."""
 
+import warnings
+
 import numpy as np
 import pytest
 
@@ -417,6 +419,19 @@ def test_raster_join_build_job_budget(spark):
         assert (t.masked().count(), float(t.masked().sum())) \
             == (64, 448.0), name
         release_raster_join_cache(df)
+
+
+def test_raster_join_build_warns_nothing(spark):
+    """Every grouped-map kernel of the plan annotates all its parameters,
+    so Spark infers their eval type without a type-hint warning."""
+    t = Tile(np.zeros((8, 8), dtype="float64"), "float64")
+    left = spark.createDataFrame([row(20, t, ext(0, 0, 8, 8))], schema=SCHEMA)
+    right = spark.createDataFrame(
+        [row(0, Tile(np.full((8, 8), 7.0), "float64"), ext(0, 0, 8, 8))],
+        schema=SCHEMA)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        raster_join(left, right, cell_size_deg=8.0, cache_inputs=False)
 
 
 def _tile_frame(spark, n, shift=0.0):
