@@ -3401,7 +3401,7 @@ def oracle_sql() -> dict[str, str]:
               left join g1 p1 on p1.g = dg.g1g
               group by dg.doc_id
             )""",
-        "curation": """
+        "curation": r"""
             with newdocs as (select * from documents where doc_id % 2 = 0),
             refdocs as (select * from documents where doc_id % 3 = 0),
             ldfix as (

@@ -17,6 +17,7 @@ import os
 import shutil
 import sys
 import time
+import urllib.request
 
 import pandas as pd
 
@@ -433,68 +434,14 @@ def main():
     only = set(filter(None, os.environ.get(
         "SPARK_GRAFT_ONLY_CELLS", "").split(",")))
 
-    # r14 optimization round: SPARK_GRAFT_PROFILE=1 adds a per-cell
-    # stage-attribution JSON line on STDERR (jobs/stages/tasks, task
-    # time vs wall, shuffle bytes, Python-eval presence) from the UI
-    # REST API.  Opt-in diagnostics only — stdout record unchanged.
-    prof = os.environ.get("SPARK_GRAFT_PROFILE") == "1"
-
-    def _rest(path):
-        import urllib.request
-        sc = spark.sparkContext
-        base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-        with urllib.request.urlopen(base + path, timeout=20) as r:
-            return json.loads(r.read())
-
-    def _prof_mark():
-        try:
-            return max((s["stageId"] for s in _rest("/stages")), default=-1)
-        except Exception:   # noqa: BLE001 — diagnostics only
-            return -1
-
-    def _prof_emit(name, mark, ts):
-        try:
-            stages = [s for s in _rest("/stages")
-                      if s["stageId"] > mark
-                      and s["status"] in ("COMPLETE", "SKIPPED")]
-            out = {
-                "cell": name,
-                "secs": [round(t, 3) for t in ts],
-                "stages": len([s for s in stages
-                               if s["status"] == "COMPLETE"]),
-                "skipped": len([s for s in stages
-                                if s["status"] == "SKIPPED"]),
-                "tasks": sum(s.get("numCompleteTasks", 0) for s in stages),
-                "task_time_s": round(sum(
-                    s.get("executorRunTime", 0) for s in stages) / 1e3, 2),
-                "cpu_time_s": round(sum(
-                    s.get("executorCpuTime", 0) for s in stages) / 1e9, 2),
-                "input_mb": round(sum(
-                    s.get("inputBytes", 0) for s in stages) / 1e6, 1),
-                "shuffle_r_mb": round(sum(
-                    s.get("shuffleReadBytes", 0) for s in stages) / 1e6, 1),
-                "shuffle_w_mb": round(sum(
-                    s.get("shuffleWriteBytes", 0) for s in stages) / 1e6, 1),
-                "spill_mb": round(sum(
-                    s.get("memoryBytesSpilled", 0)
-                    + s.get("diskBytesSpilled", 0) for s in stages) / 1e6, 1),
-            }
-            print(json.dumps(out), file=sys.stderr, flush=True)
-        except Exception as e:   # noqa: BLE001 — diagnostics only
-            print(json.dumps({"cell": name, "profile_error": str(e)}),
-                  file=sys.stderr, flush=True)
-
     def run(name, fn, repeat=1):
         if only and name not in only:
             return
-        mark = _prof_mark() if prof else -1
         ts = []
         for _ in range(repeat):
             t0 = time.time()
             fn()
             ts.append(time.time() - t0)
-        if prof:
-            _prof_emit(name, mark, ts)
         ts.sort()
         # min = capability (continuity with earlier rounds); median =
         # the noise-robust series round-over-round comparisons lead with
@@ -959,6 +906,64 @@ def _docs10(spark, sf_dir):
             .localCheckpoint())
 
 
+def rest(spark, path):
+    """GET ``path`` from the session's Spark UI REST API (the UI must be
+    on) and return the parsed JSON."""
+    sc = spark.sparkContext
+    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
+    with urllib.request.urlopen(base + path, timeout=20) as r:
+        return json.loads(r.read())
+
+
+def max_stage_id(spark):
+    """Id of the latest submitted stage: the watermark for stage_metrics."""
+    return max((s["stageId"] for s in rest(spark, "/stages")), default=-1)
+
+
+def stage_metrics(spark, first_excl):
+    """Aggregate metrics of stages submitted after the watermark: total
+    shuffle read/write, tasks and spill (memory and disk, with the four
+    heaviest spilling stages), plus the max/median task shuffle-read
+    ratio of the heaviest shuffle stage."""
+    stages = [s for s in rest(spark, "/stages")
+              if s["stageId"] > first_excl
+              and s["status"] in ("COMPLETE", "SKIPPED")]
+    tot_read = sum(s.get("shuffleReadBytes", 0) for s in stages)
+    tot_write = sum(s.get("shuffleWriteBytes", 0) for s in stages)
+    mspill = sum(s.get("memoryBytesSpilled", 0) for s in stages)
+    dspill = sum(s.get("diskBytesSpilled", 0) for s in stages)
+    skew = None
+    heavy = max(stages, key=lambda s: s.get("shuffleReadBytes", 0),
+                default=None)
+    if heavy and heavy.get("shuffleReadBytes", 0) > 0:
+        q = rest(spark, f"/stages/{heavy['stageId']}/"
+                        f"{heavy.get('attemptId', 0)}/taskSummary"
+                        f"?quantiles=0.5,1.0")
+        reads = (q.get("shuffleReadMetrics") or {}).get(
+            "readBytes") or q.get("shuffleReadBytes")
+        if reads and reads[0] > 0:
+            skew = round(reads[-1] / reads[0], 2)
+    spillers = sorted(
+        ({"stage": s["stageId"],
+          "name": (s.get("name") or "")[:60],
+          "disk_mb": round(s.get("diskBytesSpilled", 0) / 1e6, 1),
+          "mem_mb": round(s.get("memoryBytesSpilled", 0) / 1e6, 1),
+          "read_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
+          "tasks": s.get("numCompleteTasks")}
+         for s in stages
+         if s.get("diskBytesSpilled", 0) + s.get("memoryBytesSpilled", 0) > 0),
+        key=lambda d: -(d["disk_mb"] + d["mem_mb"]))[:4]
+    return {"shuffle_read_mb": round(tot_read / 1e6, 1),
+            "shuffle_write_mb": round(tot_write / 1e6, 1),
+            "tasks": sum(s.get("numCompleteTasks", 0) for s in stages),
+            "heaviest_stage_tasks": (heavy or {}).get("numCompleteTasks"),
+            "spilled_mb": round((mspill + dspill) / 1e6, 1),
+            "spilled_mem_mb": round(mspill / 1e6, 1),
+            "spilled_disk_mb": round(dspill / 1e6, 1),
+            "max_over_median_task_shuffle_read": skew,
+            "top_spill_stages": spillers}
+
+
 def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
     """10x scale rehearsal: every heavy operator with an sf0.1 headline
     cell runs at 10x the data (corpus derived from sf0.1 by replication —
@@ -968,52 +973,12 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
     the heaviest shuffle stage's bytes, the max/median task shuffle-read
     ratio (the skew bound the salting work claims, target <= ~2x), and
     spill bytes (target 0)."""
-    import json as _json
-    import urllib.request
-
     from pyspark.sql import functions as F
 
     import rasterframes_spark as rf
     from rasterframes_spark import pipeline as P
     from rasterframes_spark.operators import (raster_join, st_join,
                                               st_knn_join)
-
-    sc = spark.sparkContext
-    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-
-    def rest(path):
-        with urllib.request.urlopen(base + path, timeout=20) as r:
-            return _json.loads(r.read())
-
-    def max_stage_id():
-        return max((s["stageId"] for s in rest("/stages")), default=-1)
-
-    def stage_metrics(first_excl):
-        """Aggregate metrics of stages submitted after the watermark:
-        total shuffle-read/write + spill, plus the max/median task
-        shuffle-read ratio of the heaviest shuffle stage."""
-        stages = [s for s in rest("/stages")
-                  if s["stageId"] > first_excl
-                  and s["status"] in ("COMPLETE", "SKIPPED")]
-        tot_read = sum(s.get("shuffleReadBytes", 0) for s in stages)
-        tot_write = sum(s.get("shuffleWriteBytes", 0) for s in stages)
-        spill = sum(s.get("memoryBytesSpilled", 0)
-                    + s.get("diskBytesSpilled", 0) for s in stages)
-        skew = None
-        heavy = max(stages, key=lambda s: s.get("shuffleReadBytes", 0),
-                    default=None)
-        if heavy and heavy.get("shuffleReadBytes", 0) > 0:
-            q = rest(f"/stages/{heavy['stageId']}/"
-                     f"{heavy.get('attemptId', 0)}/taskSummary"
-                     f"?quantiles=0.5,1.0")
-            reads = (q.get("shuffleReadMetrics") or {}).get(
-                "readBytes") or q.get("shuffleReadBytes")
-            if reads and reads[0] > 0:
-                skew = round(reads[-1] / reads[0], 2)
-        return {"shuffle_read_mb": round(tot_read / 1e6, 1),
-                "shuffle_write_mb": round(tot_write / 1e6, 1),
-                "spilled_mb": round(spill / 1e6, 1),
-                "max_over_median_task_shuffle_read": skew}
 
     # 10x corpora (salting rationale in _docs10; embeddings get a
     # deterministic +-50% per-component jitter — cross-replica cosine
@@ -1050,7 +1015,8 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
         'repeats degrade the session' vs 'host noise' is decidable
         from the record alone (VERDICT r11 #2)."""
         try:
-            return sum(e.get("totalGCTime", 0) for e in rest("/executors"))
+            return sum(e.get("totalGCTime", 0)
+                       for e in rest(spark, "/executors"))
         except Exception:       # noqa: BLE001 — diagnostics only
             return None
 
@@ -1086,7 +1052,7 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
                 tp = time.time()
                 pair_fn()
                 pair_w = round(time.time() - tp, 3)
-            wm = max_stage_id()
+            wm = max_stage_id(spark)
             g0, s0 = jvm_gc_ms(), _steal_ticks()
             t0 = time.time()
             fn()
@@ -1096,7 +1062,8 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
                     if g0 is not None and g1 is not None else None)
             steal_s = (round((s1 - s0) / 100.0, 1)
                        if s0 is not None and s1 is not None else None)
-            runs.append((wall, stage_metrics(wm), gc_s, steal_s, pair_w))
+            runs.append((wall, stage_metrics(spark, wm), gc_s, steal_s,
+                         pair_w))
             if repeat > 1:
                 spark.catalog.clearCache()
                 try:

@@ -73,6 +73,12 @@ def create_rf_spark_session(master: str | None = None, app_name: str = "rasterfr
                 "RASTERFRAMES_IO_TIMEOUT"):
         if var in os.environ:
             b = b.config(f"spark.executorEnv.{var}", os.environ[var])
+    # The worker daemon imports this package, so workers must find it also
+    # where only this process's sys.path does: put its parent directory on
+    # their PYTHONPATH (Spark appends the inherited one).  An explicit
+    # spark.executorEnv.PYTHONPATH in `configs` wins.
+    b = b.config("spark.executorEnv.PYTHONPATH",
+                 os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     for k, v in configs.items():
         b = b.config(k, v)
     spark = b.getOrCreate()

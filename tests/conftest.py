@@ -1,10 +1,10 @@
-import uuid
-from collections import Counter
-
 import numpy as np
 import pytest
 
 from pyspark.sql import SparkSession
+
+# plan and job views, imported by the tests from here
+from rasterframes_spark.observe import count_jobs, plan_nodes, udf_sites  # noqa: F401
 
 
 @pytest.fixture(scope="session")
@@ -23,65 +23,6 @@ def spark():
 @pytest.fixture(scope="session")
 def rng():
     return np.random.default_rng(42)
-
-
-_PANDAS_FUNC_NODES = ("FlatMapGroupsInPandasExec", "MapInPandasExec",
-                      "FlatMapCoGroupsInPandasExec")
-
-
-def plan_nodes(df):
-    """Each node of ``df``'s executed physical plan, once.  Walks into AQE
-    plans, query stages and cached relations; a node reached twice (a
-    cache read by several scans) is yielded once."""
-    jvm = df.sparkSession._jvm
-    seen: set[int] = set()
-    todo = [df._jdf.queryExecution().executedPlan()]
-    while todo:
-        p = todo.pop()
-        key = jvm.System.identityHashCode(p)
-        if key in seen:
-            continue
-        seen.add(key)
-        yield p
-        cls = p.getClass().getSimpleName()
-        if cls == "AdaptiveSparkPlanExec":
-            todo.append(p.executedPlan())
-        elif cls.endswith("QueryStageExec"):
-            todo.append(p.plan())
-        elif cls == "InMemoryTableScanExec":
-            todo.append(p.relation().cachedPlan())
-        ch = p.children()
-        todo.extend(ch.apply(i) for i in range(ch.size()))
-
-
-def udf_sites(df) -> Counter:
-    """Python UDF evaluation sites in ``df``'s executed plan, counted by UDF
-    name: one per UDF on each ``*EvalPythonExec`` node, and one per
-    ``applyInPandas`` / ``mapInPandas`` / cogrouped node by its function's
-    name (nodes from :func:`plan_nodes`)."""
-    sites: Counter = Counter()
-    for p in plan_nodes(df):
-        cls = p.getClass().getSimpleName()
-        if cls.endswith("EvalPythonExec"):
-            it = p.udfs().iterator()
-            while it.hasNext():
-                sites[it.next().name()] += 1
-        elif cls in _PANDAS_FUNC_NODES:
-            sites[p.func().name()] += 1
-    return sites
-
-
-def count_jobs(spark, fn):
-    """Run ``fn()`` in a job group of its own; return its result and the
-    number of Spark jobs it ran."""
-    sc = spark.sparkContext
-    group = f"count-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "count jobs")
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def make_tile_df(spark, tiles, extra=None):

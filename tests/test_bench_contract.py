@@ -10,10 +10,12 @@ from __future__ import annotations
 
 import json
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 from bench import STDOUT_LINE_LIMIT, compact_result_line  # noqa: E402
 
@@ -176,7 +178,7 @@ def test_bench_source_prints_compact_line_after_spark_stop():
     compact-line print must come AFTER spark.stop() (and after a
     setLogLevel call that silences the JVM), so no executor/scheduler
     thread can write past it."""
-    src = open("/root/repo/bench.py").read()
+    src = (REPO / "bench.py").read_text()
     stop_at = src.index("\n    spark.stop()")  # statement, not the comment
     print_at = src.index("print(compact_result_line(full))")
     off_at = src.index('setLogLevel("OFF")')
@@ -254,6 +256,5 @@ def test_assemble_floor_bar_statistic_is_pinned():
     # the normative form is the one under the BASELINE.md 2.2 bound
     assert d["assemble_vs_shuffle_floor"] <= 2.2
     # and BASELINE.md itself names the statistic
-    with open("/root/repo/BASELINE.md") as f:
-        text = f.read()
+    text = (REPO / "BASELINE.md").read_text()
     assert "MIN-over-MIN" in text and "min_over_min_paired" in text

@@ -14,12 +14,14 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = [
@@ -31,7 +33,7 @@ TABLES = [
 def test_spark_side_rounds_all_normalized():
     """Every Spark-side round in the driver contract goes through _r0
     (which appends +0.0); a bare F.round( reintroduces the hazard."""
-    src = open("/root/repo/__spark_entry__.py").read()
+    src = (REPO / "__spark_entry__.py").read_text()
     allowed = "return F.round(col, scale) + F.lit(0.0)"
     bare = [
         m for m in re.finditer(r"F\.round\(", src)

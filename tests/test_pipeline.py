@@ -1275,6 +1275,14 @@ def test_scan_row_bound_and_sized_spread(spark, docs):
     c2.count()
     assert _scan_row_count_exact(c2) == n
     c2.unpersist()
+    # a Limit over a scan without statistics reports the limit itself
+    # as its rowCount: 10 for this 5-row table, and so does a checkpoint
+    # of it — never an exact count
+    region = spark.read.parquet(f"{SF}/region.parquet")
+    assert region.count() == 5
+    assert _scan_row_count_exact(region.limit(10)) in (5, None)
+    assert _scan_row_count_exact(
+        region.limit(10).localCheckpoint()) in (5, None)
     assert sized.rdd.getNumPartitions() == max(
         2, min(spark.sparkContext.defaultParallelism, -(-n // 500)))
     # value identity through the sized census path

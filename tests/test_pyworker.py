@@ -4,9 +4,12 @@ it changed, and every Spark Python task runs with that fix in place."""
 
 import importlib
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -79,3 +82,30 @@ def test_every_worker_task_starts_with_the_fix(spark):
     assert len(udf_rows) == 8 and len(map_rows) == 4
     for marker, pid in udf_rows + map_rows:
         assert marker is not None and marker != pid
+
+
+def test_a_task_runs_where_only_the_driver_finds_the_package(tmp_path):
+    """A driver that imports the package only through its own
+    ``sys.path`` (a script run from outside the checkout) still runs a
+    plain Python task: the worker daemon imports the package, so the
+    workers must find it too."""
+    repo = str(Path(__file__).resolve().parents[1])
+    script = tmp_path / "driver.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from rasterframes_spark import create_rf_spark_session
+        spark = create_rf_spark_session(master="local[2]")
+        rdd = spark.sparkContext.parallelize(range(4), 2)
+        print(rdd.map(lambda x: x + 1).collect())
+        spark.stop()
+    """))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in env.get("PYTHONPATH", "").split(os.pathsep)
+        if p and os.path.realpath(p) != os.path.realpath(repo))
+    out = subprocess.run([sys.executable, str(script)], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.splitlines()[-1] == "[1, 2, 3, 4]"

@@ -36,12 +36,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main():
     only = set(sys.argv[1:]) or {"minhash", "st_join", "raster_join"}
 
-    import urllib.request
-
     from pyspark.sql import functions as F
 
     import bench
-    from bench import _steal_ticks
     import rasterframes_spark as rf
     from rasterframes_spark import create_rf_spark_session
     from rasterframes_spark import pipeline as P
@@ -50,67 +47,19 @@ def main():
     spark = create_rf_spark_session(app_name="rehearse-100x",
                                     **{"spark.ui.enabled": "true"})
     spark.sparkContext.setLogLevel("ERROR")
-    sc = spark.sparkContext
-    base = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
-
-    def rest(path):
-        with urllib.request.urlopen(base + path, timeout=20) as r:
-            return json.loads(r.read())
-
-    def max_stage_id():
-        return max((s["stageId"] for s in rest("/stages")), default=-1)
-
-    def stage_metrics(first_excl):
-        stages = [s for s in rest("/stages")
-                  if s["stageId"] > first_excl
-                  and s["status"] in ("COMPLETE", "SKIPPED")]
-        tot_read = sum(s.get("shuffleReadBytes", 0) for s in stages)
-        mspill = sum(s.get("memoryBytesSpilled", 0) for s in stages)
-        dspill = sum(s.get("diskBytesSpilled", 0) for s in stages)
-        spill = mspill + dspill
-        skew = None
-        heavy = max(stages, key=lambda s: s.get("shuffleReadBytes", 0),
-                    default=None)
-        if heavy and heavy.get("shuffleReadBytes", 0) > 0:
-            q = rest(f"/stages/{heavy['stageId']}/"
-                     f"{heavy.get('attemptId', 0)}/taskSummary"
-                     f"?quantiles=0.5,1.0")
-            reads = (q.get("shuffleReadMetrics") or {}).get(
-                "readBytes") or q.get("shuffleReadBytes")
-            if reads and reads[0] > 0:
-                skew = round(reads[-1] / reads[0], 2)
-        spillers = sorted(
-            ({"stage": s["stageId"],
-              "name": (s.get("name") or "")[:60],
-              "disk_mb": round(s.get("diskBytesSpilled", 0) / 1e6, 1),
-              "mem_mb": round(s.get("memoryBytesSpilled", 0) / 1e6, 1),
-              "read_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 1),
-              "tasks": s.get("numCompleteTasks")}
-             for s in stages
-             if s.get("diskBytesSpilled", 0)
-             + s.get("memoryBytesSpilled", 0) > 0),
-            key=lambda d: -(d["disk_mb"] + d["mem_mb"]))[:4]
-        return {"shuffle_read_mb": round(tot_read / 1e6, 1),
-                "tasks": sum(s.get("numCompleteTasks", 0) for s in stages),
-                "heaviest_stage_tasks": (heavy or {}).get("numCompleteTasks"),
-                "spilled_mb": round(spill / 1e6, 1),
-                "spilled_mem_mb": round(mspill / 1e6, 1),
-                "spilled_disk_mb": round(dspill / 1e6, 1),
-                "max_over_median_task_shuffle_read": skew,
-                "top_spill_stages": spillers}
 
     def leg(name, control_fn, fn, rows):
         # contemporaneous control: the sf0.1-shape work, timed NOW
         tc = time.time()
         control_fn()
         control = round(time.time() - tc, 3)
-        wm = max_stage_id()
-        s0 = _steal_ticks()
+        wm = bench.max_stage_id(spark)
+        s0 = bench._steal_ticks()
         t0 = time.time()
         n = fn()
         wall = round(time.time() - t0, 3)
-        s1 = _steal_ticks()
-        m = stage_metrics(wm)
+        s1 = bench._steal_ticks()
+        m = bench.stage_metrics(spark, wm)
         m.update({"leg": name, "sec": wall, "rows_in": rows, "out": n,
                   "control_sf01_sec": control,
                   "x100_paired": round(wall / (100 * control), 3),
