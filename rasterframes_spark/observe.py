@@ -53,9 +53,10 @@ def plan_nodes(df):
 
 def udf_sites(df) -> Counter:
     """Python UDF evaluation sites in ``df``'s executed plan, counted by UDF
-    name: one per UDF on each ``*EvalPythonExec`` node, and one per
-    ``applyInPandas`` / ``mapInPandas`` / cogrouped node by its function's
-    name."""
+    name: one per UDF on each ``*EvalPythonExec`` node, one per
+    grouped-aggregate pandas UDF on each ``ArrowAggregatePythonExec``
+    node, and one per ``applyInPandas`` / ``mapInPandas`` / cogrouped
+    node by its function's name."""
     sites: Counter = Counter()
     for cls, p in walk(df._jdf.queryExecution().executedPlan()):
         if cls.endswith("EvalPythonExec"):
@@ -64,6 +65,10 @@ def udf_sites(df) -> Counter:
                 sites[it.next().name()] += 1
         elif cls in _PANDAS_FUNC_NODES:
             sites[p.func().name()] += 1
+        elif cls == "ArrowAggregatePythonExec":
+            it = p.aggExpressions().iterator()
+            while it.hasNext():
+                sites[it.next().aggregateFunction().name()] += 1
     return sites
 
 

@@ -30,6 +30,7 @@ from rasterframes_spark.functions.proj_raster import (
     RESAMPLING, extent_bounds, overlay, paint)
 from rasterframes_spark.geom import proj as P
 from rasterframes_spark.geom.functions import rf_spatial_grid_cells
+from rasterframes_spark.pipeline.skew import stamp_content_id
 
 __all__ = ["raster_join", "spatial_join"]
 
@@ -212,31 +213,23 @@ def raster_join(
             f"max_fan_in must be a positive int, got {max_fan_in!r}")
     right_tiles = right_tiles or ["tile"]
 
-    # DETERMINISTIC row ids (128-bit content hashes), not
-    # monotonically_increasing_id: both sides branch into (bucket-join,
-    # payload/final-join) sub-plans that re-evaluate the id expression —
-    # with mono ids, AQE re-planning or task retries can partition the two
-    # evaluations differently and hand the SAME row DIFFERENT ids,
-    # silently mis-joining payloads (observed as a nondeterministic
-    # value-hash failure at sf0.1). Content hashes are evaluation-order
-    # independent; duplicate rows sharing an id are harmless here (the
-    # merge paints identical pixels; the final left join re-expands
-    # duplicate left rows with their shared — correct — merge result).
-    # Hash only the join-relevant METADATA (extent, crs, tile shape):
-    # the match set of a row is fully determined by its extent, and the
-    # merge canvas by its tile dims/cell type — so rows agreeing on all
-    # of these are interchangeable for every id-keyed step (shared-id
-    # rows produce identical groupings and the payload join fans each
-    # pair back out to every payload). Hashing cell DATA would force the
-    # bbox metadata pass to deserialize every tile (measured 5x slower at
-    # sf0.1, and it would defeat Parquet column pruning at scale).
+    # Content ids (pipeline/skew.py:stamp_content_id): both sides branch
+    # into (bucket-join, payload/final-join) sub-plans that re-evaluate
+    # the id expression (monotonically_increasing_id once mis-joined
+    # payloads at sf0.1).  Duplicate rows sharing an id are harmless
+    # here: the merge paints identical pixels, and the final left join
+    # re-expands duplicate left rows with their shared merge result.
+    # The key is only the join-relevant METADATA (extent, crs, tile
+    # shape): the match set of a row is fully determined by its extent,
+    # and the merge canvas by its tile dims/cell type.  Hashing cell DATA
+    # would force the bbox metadata pass to deserialize every tile
+    # (measured 5x slower at sf0.1, and it would defeat Parquet column
+    # pruning at scale).
     def _ids(df, extent_c, crs_c, tile_c, a, b):
-        key = F.struct(
+        return stamp_content_id(df, a, b, F.struct(
             F.col(extent_c), F.col(crs_c),
             F.col(f"{tile_c}.cols"), F.col(f"{tile_c}.rows"),
-            F.col(f"{tile_c}.cell_type"))
-        return (df.withColumn(a, F.xxhash64(key))
-                .withColumn(b, F.xxhash64(F.lit(7), key)))
+            F.col(f"{tile_c}.cell_type")))
 
     L = _ids(left, left_extent, left_crs, left_tile, "__lid", "__lid2")
     R = _ids(right, right_extent, right_crs, right_tiles[0],

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from rasterframes_spark.geom import functions as GF
+from rasterframes_spark.pipeline.skew import salted_join, stamp_content_id
 
 __all__ = ["st_join", "st_knn_join"]
 
@@ -105,19 +106,6 @@ def _estimate_grid(right: DataFrame, geom_right: str,
     return 1.0
 
 
-def _stamp_row_id(df: DataFrame, a: str, b: str) -> DataFrame:
-    """Deterministic 128-bit content row id (two seeded xxhash64 of the
-    full row struct).  Same rationale as raster_join's id stamping
-    (operators/raster_join.py:255): monotonically_increasing_id is not
-    stable under AQE re-planning / task retries when the frame fans into
-    multiple sub-plans, and identity-by-content is the semantics we want
-    — identical rows have identical match sets, so sharing an id is
-    harmless for matched/unmatched bookkeeping."""
-    key = F.struct(*[F.col(c) for c in df.columns])
-    return (df.withColumn(a, F.xxhash64(key))
-            .withColumn(b, F.xxhash64(F.lit(7), key)))
-
-
 def _cells(df: DataFrame, geom_col: str, g: float, side: str,
            pad: float = 0.0) -> DataFrame:
     # .once: the isNotNull filter below would be pushed under this projection
@@ -158,8 +146,8 @@ def st_join(left: DataFrame, right: DataFrame,
     ``how``: 'inner' or 'left' (unmatched left rows keep nulls on the
     right side). Right columns clashing with left names get ``rsuffix``.
 
-    ``salt`` > 1 enables HOT-CELL SALTING (same pattern as
-    ``pipeline/dedup._salted_self_pairs``): grid cells holding more than
+    ``salt`` > 1 enables HOT-CELL SALTING (``pipeline/skew.py:salted_join``,
+    shared with the dedup LSH joins): grid cells holding more than
     ``hot_cell_threshold`` left rows (the urban-cluster skew pattern —
     one dense cell funnels into one straggler task) are split ``salt``
     ways — left rows get a content-hash salt, right rows in hot cells
@@ -203,7 +191,7 @@ def st_join(left: DataFrame, right: DataFrame,
         for c in id_cols:
             if c in left.columns or c in right.columns:
                 raise ValueError(f"st_join: reserved column {c!r} in input")
-        left = _stamp_row_id(left, *id_cols)
+        left = stamp_content_id(left, *id_cols)
 
     # avoid column collisions before the join
     rmap = {c: (c + rsuffix if c in left.columns else c)
@@ -213,28 +201,10 @@ def st_join(left: DataFrame, right: DataFrame,
 
     lc = _cells(left, geom_left, g, "l", pad=d)
     rc = _cells(r, gr, g, "r")
-    if salt and int(salt) > 1:
-        s = int(salt)
-        hot = (lc.groupBy("__cx", "__cy")
-               .agg(F.count(F.lit(1)).alias("__n"))
-               .where(F.col("__n") > int(hot_cell_threshold))
-               .select("__cx", "__cy", F.lit(True).alias("__hot")))
-        lkey = F.struct(*[F.col(c) for c in lc.columns
-                          if not c.startswith("__")])
-        lc = (lc.join(F.broadcast(hot), ["__cx", "__cy"], "left")
-              .withColumn("__salt", F.when(
-                  F.col("__hot").isNotNull(),
-                  F.pmod(F.xxhash64(lkey), F.lit(s))).otherwise(F.lit(0)))
-              .drop("__hot"))
-        rc = (rc.join(F.broadcast(hot), ["__cx", "__cy"], "left")
-              .withColumn("__salt", F.explode(F.when(
-                  F.col("__hot").isNotNull(),
-                  F.sequence(F.lit(0).cast("long"), F.lit(s - 1)))
-                  .otherwise(F.array(F.lit(0).cast("long")))))
-              .drop("__hot"))
-        cand = lc.join(rc, ["__cx", "__cy", "__salt"]).drop("__salt")
-    else:
-        cand = lc.join(rc, ["__cx", "__cy"])
+    # salt by the content hash of the left row (its user columns)
+    lkey = F.struct(*[F.col(c) for c in lc.columns if not c.startswith("__")])
+    cand = salted_join(lc, rc, ["__cx", "__cy"], F.xxhash64(lkey),
+                       salt or 0, hot_cell_threshold)
 
     # reference point: keep the pair only in the cell holding the
     # top-left corner of the bbox intersection -> exact dedup, no shuffle
@@ -324,7 +294,7 @@ def st_knn_join(left: DataFrame, right: DataFrame, k: int,
     # neighbors × m copies.  The copy count arrives as a map-side-partial
     # groupBy (24 bytes/distinct-row shuffled, no payload) joined on the
     # same key the window partitions on, so the Exchange is shared.
-    stamped = _stamp_row_id(left, "__kid", "__kid2")
+    stamped = stamp_content_id(left, "__kid", "__kid2")
     copies = (stamped.groupBy("__kid", "__kid2")
               .agg(F.count(F.lit(1)).alias("__kcp")))
     # Tie-break hashes are computed ONCE PER RIGHT ROW here, before the
@@ -334,7 +304,7 @@ def st_knn_join(left: DataFrame, right: DataFrame, k: int,
     # twice per candidate was measurable window-stage work.  xxhash64
     # hashes field VALUES (names don't enter), so these columns order
     # candidates exactly as the old per-candidate struct hashes did.
-    tagged = _stamp_row_id(right, "__krh1", "__krh2")
+    tagged = stamp_content_id(right, "__krh1", "__krh2")
     # carried distance (r15, §4.4/§2.4): the dwithin filter inside
     # st_join already evaluates the exact distance for every bbox-
     # surviving candidate — carry that value out (``__kdist``) instead

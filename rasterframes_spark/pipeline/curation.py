@@ -26,6 +26,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from rasterframes_spark.pipeline.scrub import _flag_matches
+
 __all__ = [
     "doc_digest", "dedup_against_exact", "dedup_against_minhash",
     "decontaminate", "sample_mixture", "pack_documents",
@@ -60,9 +62,12 @@ def dedup_against_minhash(new: DataFrame, reference: DataFrame,
     — not a self-join of the union, so reference-internal duplicates are
     never recomputed; the exact-Jaccard verify touches candidates only.
     Filter ``new`` with a left-anti join on the returned new_id to drop
-    near-dups of the reference corpus."""
+    near-dups of the reference corpus.  ``bands`` must divide
+    ``num_perm`` (ValueError otherwise)."""
     from rasterframes_spark.pipeline.dedup import (
-        minhash_signature_text, text_jaccard)
+        _band_buckets, _check_bands, minhash_signature_text, text_jaccard)
+
+    _check_bands("dedup_against_minhash", num_perm, bands)
 
     def banded(df, tag):
         # _once here and in the verify below: the isNotNull / threshold
@@ -74,17 +79,11 @@ def dedup_against_minhash(new: DataFrame, reference: DataFrame,
                                    _once=True)
             .alias("__sig"),
         ).where(F.col("__sig").isNotNull())
-        rows_per_band = F.floor(F.size("__sig") / bands).cast("int")
         return sig.select(
             f"{tag}_id", f"__t_{tag}",
-            F.posexplode(F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda bnd: F.aggregate(
-                    F.slice(F.col("__sig"), bnd * rows_per_band + 1,
-                            rows_per_band),
-                    bnd.cast("long"),
-                    lambda acc, v: F.xxhash64(acc, v)),
-            )).alias("__band", "__bucket"),
+            F.posexplode(_band_buckets(F.col("__sig"), bands,
+                                       "dedup_against_minhash"))
+            .alias("__band", "__bucket"),
         )
 
     n = banded(new, "new")
@@ -118,7 +117,7 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
     ``normalize=True`` lowercases and strips punctuation on BOTH sides
     before shingling (the usual hardening against trivial reformatting
     of benchmark text) — still pure codegen'd regexp, no extra pass."""
-    def grams(df, col):
+    def grams(col):
         c = F.col(col)
         if normalize:
             c = F.regexp_replace(F.lower(c), r"[^\w\s]", "")
@@ -140,24 +139,9 @@ def decontaminate(docs: DataFrame, benchmark: DataFrame,
             F.transform(g, lambda s: F.xxhash64(s)),
         ).otherwise(F.array().cast("array<bigint>"))
 
-    bench = (benchmark.select(F.explode(grams(benchmark, bench_text_col))
-                              .alias("__g")).distinct())
-    # deterministic content ids, NOT monotonically_increasing_id: the id
-    # expression evaluates in two branches (gram explode + final join);
-    # nondeterministic ids can diverge between them under AQE re-planning
-    # (see raster_join). Duplicate rows sharing an id is fine — identical
-    # rows have identical contamination.
-    key = F.struct(*[F.col(c) for c in docs.columns])
-    with_id = (docs.withColumn("__did", F.xxhash64(key))
-               .withColumn("__did2", F.xxhash64(F.lit(7), key)))
-    hits = (with_id.select("__did", "__did2",
-                           F.explode(grams(with_id, text_col)).alias("__g"))
-            .join(F.broadcast(bench), "__g", "left_semi")
-            .select("__did", "__did2").distinct()
-            .withColumn("__hit", F.lit(True)))
-    out = (with_id.join(hits, ["__did", "__did2"], "left")
-           .withColumn("contaminated", F.coalesce(F.col("__hit"), F.lit(False)))
-           .drop("__did", "__did2", "__hit"))
+    bench = (benchmark.select(F.explode(grams(bench_text_col))
+                              .alias("__key")).distinct())
+    out = _flag_matches(docs, grams(text_col), bench, "contaminated")
     if mode == "drop":
         return out.where(~F.col("contaminated")).drop("contaminated")
     return out

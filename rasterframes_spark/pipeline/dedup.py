@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 from rasterframes_spark.functions._kernel import lazy_pandas_udf
 # narrow-input spreader: moved to skew.py with the other partition-layout
 # utilities (r14 review); the alias keeps this module's import path working
-from rasterframes_spark.pipeline.skew import spread as _spread
+from rasterframes_spark.pipeline.skew import salted_join, spread as _spread
 
 __all__ = [
     "dedup_exact", "exact_dup_groups", "shingles", "jaccard_sim",
@@ -226,65 +226,71 @@ def minhash_signature_text(text_col, shingle_size: int = 3,
 
 
 
-def _pair_select(joined: DataFrame, id_col: str, carry_cols: list[str]) -> DataFrame:
-    sel = [F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")]
-    for c in carry_cols:
-        sel += [F.col(f"a.{c}").alias(f"{c.lstrip('_')}_a"),
-                F.col(f"b.{c}").alias(f"{c.lstrip('_')}_b")]
-    return joined.select(*sel).dropDuplicates(["id_a", "id_b"])
-
-
 def _salted_self_pairs(banded: DataFrame, key_cols: list[str], id_col: str,
                        carry_cols: list[str],
                        hot_bucket_threshold: int = 10000,
                        hot_bucket_salts: int = 16,
                        input_rows: int | None = None) -> DataFrame:
-    """Skew-safe self-equi-join of ``banded`` on ``key_cols`` with
-    ``a.id < b.id``: buckets larger than ``hot_bucket_threshold`` rows
-    (boilerplate/empty documents are common in web corpora) are salted
-    ``s`` ways — the left side gets one id-hash salt, the right side is
-    exploded to all ``s`` salt tags — so the O(n^2) bucket spreads over
-    ``s`` join keys instead of one straggler task. Pair output is IDENTICAL
-    to the unsalted join: each qualifying pair matches on exactly one
-    (bucket, salt) key. Normal buckets pay nothing (salt 0, single tag).
-
-    Pay-as-you-go guard: when ``input_rows`` (the number of distinct source
-    rows feeding ``banded`` — each contributes at most one row per bucket
-    key, so it upper-bounds every bucket's size) is known and at or below
-    the threshold, no bucket can possibly be hot and the detection jobs
-    (groupBy count + broadcast marker join + right-side explode) are
-    skipped entirely — a plain equi-join runs instead.
+    """Distinct pairs of ``banded`` rows sharing ``key_cols``, with
+    ``a.id < b.id``: a :func:`~rasterframes_spark.pipeline.skew.salted_join`
+    of ``banded`` with itself, so a hot bucket (boilerplate or empty
+    documents are common in web corpora) spreads over
+    ``hot_bucket_salts`` tasks by an id-hash salt.  ``input_rows`` (the
+    distinct source rows feeding ``banded``; each holds at most one row
+    per bucket) bounds every bucket, so at or below the threshold the
+    plain self-join runs.
 
     Returns columns: id_a, id_b, a.carry as <c>_a, b.carry as <c>_b.
     """
-    if input_rows is not None and input_rows <= int(hot_bucket_threshold):
-        a, b = banded.alias("a"), banded.alias("b")
-        cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
-        cond.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        return _pair_select(a.join(b, cond), id_col, carry_cols)
-    s = int(hot_bucket_salts)
-    hot = (
-        banded.groupBy(*key_cols).agg(F.count("*").alias("__bn"))
-        .where(F.col("__bn") > int(hot_bucket_threshold))
-        .select(*key_cols, F.lit(True).alias("__hot"))
-    )
-    # hot buckets are few by definition — broadcast the marker join
-    marked = banded.join(F.broadcast(hot), list(key_cols), "left")
-    a = marked.withColumn(
-        "__salt",
-        F.when(F.col("__hot").isNotNull(),
-               F.pmod(F.xxhash64(F.col(id_col)), F.lit(s))).otherwise(F.lit(0)),
-    )
-    b = marked.withColumn(
-        "__salt",
-        F.explode(F.when(F.col("__hot").isNotNull(),
-                         F.sequence(F.lit(0), F.lit(s - 1)).cast("array<bigint>"))
-                  .otherwise(F.array(F.lit(0).cast("bigint")))),
-    )
-    cond = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in key_cols]
-    cond.append(F.col("a.__salt") == F.col("b.__salt"))
-    cond.append(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-    return _pair_select(a.alias("a").join(b.alias("b"), cond), id_col, carry_cols)
+    pairs = salted_join(banded.alias("a"), banded.alias("b"), key_cols,
+                        F.xxhash64(F.col(id_col)), hot_bucket_salts,
+                        hot_bucket_threshold, input_rows)
+    sel = [F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")]
+    for c in carry_cols:
+        sel += [F.col(f"a.{c}").alias(f"{c.lstrip('_')}_a"),
+                F.col(f"b.{c}").alias(f"{c.lstrip('_')}_b")]
+    return (pairs.where(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+            .select(*sel).dropDuplicates(["id_a", "id_b"]))
+
+
+def _check_bands(fn: str, num_perm: int, bands: int) -> None:
+    """Build-time half of the LSH band check (see :func:`_band_buckets`)."""
+    if bands < 1 or num_perm % bands != 0:
+        raise ValueError(
+            f"{fn}: bands ({bands}) must divide num_perm ({num_perm}) — a "
+            "remainder silently drops trailing minhash values from banding "
+            "(and bands > num_perm collapses every bucket to its band "
+            "index: all-pairs blowup)")
+
+
+def _band_buckets(sig: Column, bands: int, fn: str) -> Column:
+    """The ``bands`` LSH buckets of the minhash array ``sig``, for
+    ``posexplode`` (position = band index).  A bucket is an xxhash64
+    chain over its band's slice, seeded by the band index — all-numeric
+    (measured ~20% faster on the candidates stage than stringifying the
+    slice into concat_ws); equal slices collide exactly.
+
+    Runtime half of the band check: ``bands`` must divide the signature
+    length.  A remainder silently drops trailing values from banding,
+    and bands > length floors the band width to 0, so every bucket
+    collapses to its seed and ALL documents collide.  Such a row raises
+    instead.  :func:`_check_bands` is the build-time half, for callers
+    that know ``num_perm``."""
+    n = F.size(sig)
+    rows_per_band = F.when(
+        (n >= bands) & (n % bands == 0), F.floor(n / bands),
+    ).otherwise(
+        F.raise_error(F.concat(
+            F.lit(f"{fn}: bands must divide the signature length and be "
+                  "<= it; got bands="), F.lit(str(bands)),
+            F.lit(", len(signature)="), n.cast("string")))
+    ).cast("int")
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda bnd: F.aggregate(
+            F.slice(sig, bnd * rows_per_band + 1, rows_per_band),
+            bnd.cast("long"),
+            lambda acc, v: F.xxhash64(acc, v)))
 
 
 def minhash_lsh_candidates(df: DataFrame, id_col: str, sig_col: str = "minhash",
@@ -297,42 +303,14 @@ def minhash_lsh_candidates(df: DataFrame, id_col: str, sig_col: str = "minhash",
     ``input_rows``: known row count of ``df`` — lets the skew guard skip hot
     -bucket detection entirely when no bucket can reach the threshold.
 
-    ``bands`` must divide the signature length: a remainder silently drops
-    trailing minhash values from banding, and bands > num_perm floors the
-    band width to 0 — every band bucket collapses to its seed and ALL
-    documents collide (silent all-pairs blowup). Validated at plan build
-    via an assertion column; the common num_perm mismatch raises here."""
-    # signature length is a runtime value here (unlike minhash_dedup_pairs,
-    # which knows num_perm at build time), so the validation is embedded in
-    # the plan: any row whose signature length isn't a positive multiple of
-    # ``bands`` raises instead of silently colliding/dropping
-    rows_per_band = F.when(
-        (F.size(sig_col) >= bands) & (F.size(sig_col) % bands == 0),
-        F.floor(F.size(sig_col) / bands),
-    ).otherwise(
-        F.raise_error(F.concat(
-            F.lit("minhash_lsh_candidates: bands must divide the signature "
-                  "length and be <= it; got bands="), F.lit(str(bands)),
-            F.lit(", len(signature)="), F.size(sig_col).cast("string")))
-    ).cast("int")
+    ``bands`` must divide the signature length (see
+    :func:`_band_buckets`); the signature length is a runtime value
+    here, so a row that breaks the rule raises when the plan runs."""
     banded = df.select(
         F.col(id_col).alias("__id"),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                # band bucket = xxhash64 chain over the slice, seeded by the
-                # band index — all-numeric (measured ~20% faster on the
-                # candidates stage than stringifying the slice into
-                # concat_ws: no per-band string allocation); equal slices
-                # still collide exactly
-                lambda bnd: F.aggregate(
-                    F.slice(F.col(sig_col), bnd * rows_per_band + 1,
-                            rows_per_band),
-                    bnd.cast("long"),
-                    lambda acc, v: F.xxhash64(acc, v),
-                ),
-            )
-        ).alias("__band", "__bucket"),
+        F.posexplode(_band_buckets(F.col(sig_col), bands,
+                                   "minhash_lsh_candidates"))
+        .alias("__band", "__bucket"),
     )
     return _salted_self_pairs(
         banded, ["__band", "__bucket"], "__id", [],
@@ -364,12 +342,7 @@ def minhash_dedup_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     with duplicate ids where one copy has a null/empty-text signature
     the degenerate extra verify rows the pre-r14 lineage emitted no
     longer appear.  Identical results for unique-id inputs."""
-    if num_perm % bands != 0:
-        raise ValueError(
-            f"minhash_dedup_pairs: bands ({bands}) must divide num_perm "
-            f"({num_perm}) — a remainder silently drops trailing minhash "
-            "values from banding (and bands > num_perm collapses every "
-            "bucket to its band index: all-pairs blowup)")
+    _check_bands("minhash_dedup_pairs", num_perm, bands)
     src = _spread(
         df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt")),
         rows=input_rows if isinstance(input_rows, int) else None)
@@ -476,6 +449,39 @@ def simhash(text, bits: int = 64) -> Column:
     return udf(F.col(text) if isinstance(text, str) else text)
 
 
+def _hamming_pairs(sigs: DataFrame, sig_col: str, max_hamming: int,
+                   hot_bucket_threshold: int, hot_bucket_salts: int,
+                   input_rows: int | None) -> DataFrame:
+    """(id_a, id_b, hamming) for the pairs of ``sigs`` rows (``__id``,
+    64-bit ``sig_col``) whose signatures differ in at most
+    ``max_hamming`` bits.  The 64 bits split into ``max_hamming + 1``
+    chunks; by pigeonhole a qualifying pair agrees on at least one, so
+    a salted self-join per chunk (:func:`_salted_self_pairs`) finds
+    every candidate and ``bit_count`` verifies it."""
+    chunks = int(max_hamming) + 1
+    width = 64 // chunks
+    mask = (1 << width) - 1
+    if mask >= (1 << 63):
+        mask -= 1 << 64  # two's-complement signed long (width == 64 -> -1)
+    chunk_cols = [
+        F.shiftrightunsigned(F.col(sig_col), i * width).bitwiseAND(F.lit(mask))
+        for i in range(chunks)
+    ]
+    banded = sigs.select(
+        "__id", sig_col,
+        F.posexplode(F.array(*chunk_cols)).alias("__chunk_i", "__chunk"),
+    )
+    c = sig_col.lstrip("_")
+    return (
+        _salted_self_pairs(banded, ["__chunk_i", "__chunk"], "__id", [sig_col],
+                           hot_bucket_threshold, hot_bucket_salts, input_rows)
+        .withColumn("hamming",
+                    F.bit_count(F.col(f"{c}_a").bitwiseXOR(F.col(f"{c}_b"))))
+        .where(F.col("hamming") <= int(max_hamming))
+        .select("id_a", "id_b", "hamming")
+    )
+
+
 def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str = "text",
                        max_hamming: int = 3, hot_bucket_threshold: int = 10000,
                        hot_bucket_salts: int = 16,
@@ -484,19 +490,17 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str = "text",
     banding 64 bits into (max_hamming+1) chunks (pigeonhole: a qualifying
     pair collides on ≥1 chunk) + exact popcount verify via bit_count.
     Hot chunks (identical boilerplate docs) are salted via
-    ``_salted_self_pairs`` so no single join task gets the O(n^2) bucket;
+    ``_hamming_pairs`` so no single join task gets the O(n^2) bucket;
     at sub-threshold input sizes the detection jobs are skipped entirely.
 
     ``input_rows``: 'auto' = eager count at call time (see
     minhash_dedup_pairs); an int = caller-known bound, no job; None =
     fully lazy, skew detection always in-plan."""
-    chunks = max_hamming + 1
-    width = 64 // chunks
     sh = _spread(df.select(F.col(id_col).alias("__id"),
                            F.col(text_col).alias("__t")),
                  rows=input_rows if isinstance(input_rows, int) else None) \
         .select("__id", simhash("__t").alias("__sh"))
-    # the tokenize+hash UDF pass is the dominant cost and _salted_self_pairs
+    # the tokenize+hash UDF pass is the dominant cost and _hamming_pairs
     # scans the frame up to 3x (hot-count + both join sides)
     sh = sh.cache()
     n_docs = input_rows
@@ -506,24 +510,8 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str = "text",
         # pass (one fewer upstream evaluation; same eager contract,
         # tighter bound — only rows with signatures can fill a bucket)
         n_docs = sh.count()
-    mask = (1 << width) - 1
-    if mask >= (1 << 63):
-        mask -= 1 << 64  # two's-complement signed long (width == 64 -> -1)
-    chunk_cols = [
-        F.shiftrightunsigned(F.col("__sh"), i * width).bitwiseAND(F.lit(mask))
-        for i in range(chunks)
-    ]
-    banded = sh.select(
-        "__id", "__sh",
-        F.posexplode(F.array(*chunk_cols)).alias("__chunk_i", "__chunk"),
-    )
-    pairs = (
-        _salted_self_pairs(banded, ["__chunk_i", "__chunk"], "__id", ["__sh"],
-                           hot_bucket_threshold, hot_bucket_salts, n_docs)
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .where(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    pairs = _hamming_pairs(sh, "__sh", max_hamming, hot_bucket_threshold,
+                           hot_bucket_salts, n_docs)
     # cached-signature handle: release with
     # rasterframes_spark.release_cache(result) once materialized
     pairs._rf_cached_inputs = (sh,)
@@ -1082,6 +1070,18 @@ def exact_substring_pairs(docs: DataFrame, id_col: str = "doc_id",
     return out
 
 
+def _require_unique_ids(docs: DataFrame, id_col: str, fn: str) -> None:
+    """Raise unless ``id_col`` is unique per row of ``docs`` (a duplicated
+    id would duplicate rows through a rebuild join on it).  One Spark
+    job: a partial-aggregate pass whose ``take(1)`` stops at the first
+    duplicated id, not two full actions (count + distinct-count)."""
+    if docs.groupBy(F.col(id_col).alias("__id")).count() \
+            .where(F.col("count") > 1).take(1):
+        raise ValueError(
+            f"{fn}: {id_col!r} must be unique per document (the rebuilt "
+            "text joins back on it)")
+
+
 def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
                           text_col: str = "text", n: int = 50,
                           min_docs: int = 2, keep_first: bool = True,
@@ -1118,19 +1118,12 @@ def remove_repeated_spans(docs: DataFrame, id_col: str = "doc_id",
     stats estimate (VERDICT r9 #4); set False only when the affected
     set itself is too large to broadcast.
 
-    The default duplicate-id precheck costs two extra full scans of the
-    id column; pass ``assume_unique_ids=True`` to skip it when the
-    caller already guarantees uniqueness (the curation-gate example
-    does)."""
+    The default duplicate-id precheck (:func:`_require_unique_ids`)
+    runs one Spark job over the id column; pass
+    ``assume_unique_ids=True`` to skip it when the caller already
+    guarantees uniqueness (the curation-gate example does)."""
     if not assume_unique_ids:
-        # duplicate ids would silently duplicate rows through the
-        # rebuild join; the check costs one columnar scan — skip it
-        # with ``assume_unique_ids=True`` when the caller knows
-        ids = docs.select(F.col(id_col).alias("__id"))
-        if ids.count() != ids.distinct().count():
-            raise ValueError(
-                f"remove_repeated_spans: {id_col!r} must be unique per "
-                "document (the rebuilt text joins back on it)")
+        _require_unique_ids(docs, id_col, "remove_repeated_spans")
     # spread BEFORE both branches (census + rebuild): a single-file
     # corpus scans as one partition, serializing the tokenize/gram
     # census AND the rebuild's per-token exists() filter onto one core
@@ -1229,14 +1222,7 @@ def remove_duplicated_lines(docs: DataFrame, id_col: str = "doc_id",
     No reference counterpart (build-brief training-data extension;
     cf. CCNet, Wenzek et al. 2020 §4.1)."""
     if not assume_unique_ids:
-        # single-job probe (VERDICT r13 #3a): one partial-agg pass that
-        # short-circuits on the first duplicated id, instead of two
-        # full-corpus actions (count + distinct-count)
-        if docs.groupBy(F.col(id_col).alias("__id")).count() \
-                .where(F.col("count") > 1).take(1):
-            raise ValueError(
-                f"remove_duplicated_lines: {id_col!r} must be unique "
-                "per document (the rebuilt text joins back on it)")
+        _require_unique_ids(docs, id_col, "remove_duplicated_lines")
     # (r14: measured a _spread here — the per-row work (line split +
     # xxhash census) is too light to pay for the round-robin text
     # shuffle on narrow inputs: interleaved A/B 1.8x median REGRESSION.

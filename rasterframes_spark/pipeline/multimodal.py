@@ -539,34 +539,18 @@ def image_neardup_pairs(df: DataFrame, max_hamming: int = 8,
     scale posture as text SimHash (pipeline/dedup.py): band the 64 bits
     into ``max_hamming + 1`` chunks — pigeonhole guarantees a qualifying
     pair collides on at least one clean chunk — equi-join per chunk
-    (hot chunks salted via the shared ``_salted_self_pairs``), exact
-    ``bit_count`` verify on candidates only. Never all-pairs."""
-    from rasterframes_spark.pipeline.dedup import _salted_self_pairs
+    (hot chunks salted), exact ``bit_count`` verify on candidates only —
+    the shared ``pipeline/dedup.py:_hamming_pairs``. Never all-pairs."""
+    from rasterframes_spark.pipeline.dedup import _hamming_pairs
 
-    chunks = int(max_hamming) + 1
-    width = 64 // chunks
     # the decode+DCT pass is the dominant cost and the banded frame is
     # scanned up to 3x (hot-bucket count + both self-join sides):
     # truncate lineage so the 16-byte-per-image hash frame computes once
     ph = image_phash(df).select(F.col("media_id").alias("__id"),
-                                F.col("phash").alias("__ph"))         .localCheckpoint(eager=False)
-    mask = (1 << width) - 1
-    if mask >= (1 << 63):
-        mask -= 1 << 64
-    chunk_cols = [
-        F.shiftrightunsigned(F.col("__ph"), i * width).bitwiseAND(F.lit(mask))
-        for i in range(chunks)
-    ]
-    banded = ph.select(
-        "__id", "__ph",
-        F.posexplode(F.array(*chunk_cols)).alias("__chunk_i", "__chunk"))
-    return (
-        _salted_self_pairs(banded, ["__chunk_i", "__chunk"], "__id", ["__ph"],
-                           hot_bucket_threshold, hot_bucket_salts, input_rows)
-        .withColumn("hamming",
-                    F.bit_count(F.col("ph_a").bitwiseXOR(F.col("ph_b"))))
-        .where(F.col("hamming") <= int(max_hamming))
-        .select("id_a", "id_b", "hamming"))
+                                F.col("phash").alias("__ph")) \
+        .localCheckpoint(eager=False)
+    return _hamming_pairs(ph, "__ph", max_hamming, hot_bucket_threshold,
+                          hot_bucket_salts, input_rows)
 
 
 # ---------------------------------------------------------------------------

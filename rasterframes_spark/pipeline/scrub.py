@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from rasterframes_spark.pipeline.skew import stamp_content_id
+
 __all__ = [
     "canonicalize_url",
     "PII_PATTERNS", "pii_scrub", "pii_counts",
@@ -110,21 +112,30 @@ def filter_by_domains(df: DataFrame, domains, text_col: str = "text",
         hit = F.arrays_overlap(doms, lits)
         return df.where(~hit if mode == "block" else hit)
     dcol = domains.columns[0]
-    dl = domains.select(F.lower(F.col(dcol)).alias("__dom")).distinct()
-    # deterministic content ids (see decontaminate): the id expression
-    # evaluates in two branches; identical rows sharing an id filter
-    # identically, which is the correct semantics anyway
-    key = F.struct(*[F.col(c) for c in df.columns])
-    with_id = (df.withColumn("__rid", F.xxhash64(key))
-               .withColumn("__rid2", F.xxhash64(F.lit(7), key)))
-    hits = (with_id.select("__rid", "__rid2", F.explode(doms).alias("__dom"))
-            .join(F.broadcast(dl), "__dom", "left_semi")
-            .select("__rid", "__rid2").distinct()
+    dl = domains.select(F.lower(F.col(dcol)).alias("__key")).distinct()
+    out = _flag_matches(df, doms, dl, "__listed")
+    keep = ~F.col("__listed") if mode == "block" else F.col("__listed")
+    return out.where(keep).drop("__listed")
+
+
+def _flag_matches(df: DataFrame, keys: Column, table: DataFrame,
+                  flag: str) -> DataFrame:
+    """``df`` plus a boolean ``flag`` column: whether any element of the
+    array ``keys`` is a value of ``table`` (one column, ``__key``,
+    distinct and small).  Each row explodes its keys and left-semi joins
+    the broadcast table; the hit ids left-join back, so ``df`` itself
+    never shuffles.  The ids are content ids (``stamp_content_id``):
+    the id expression evaluates in both branches, and identical rows
+    sharing an id get the same flag, which is the right answer anyway."""
+    ids = ["__rid", "__rid2"]
+    with_id = stamp_content_id(df, *ids)
+    hits = (with_id.select(*ids, F.explode(keys).alias("__key"))
+            .join(F.broadcast(table), "__key", "left_semi")
+            .select(*ids).distinct()
             .withColumn("__hit", F.lit(True)))
-    out = (with_id.join(hits, ["__rid", "__rid2"], "left")
-           .withColumn("__hit", F.coalesce(F.col("__hit"), F.lit(False))))
-    keep = ~F.col("__hit") if mode == "block" else F.col("__hit")
-    return out.where(keep).drop("__rid", "__rid2", "__hit")
+    return (with_id.join(hits, ids, "left")
+            .withColumn(flag, F.coalesce(F.col("__hit"), F.lit(False)))
+            .drop(*ids, "__hit"))
 
 
 _TRACKING_PARAM = (r"^(utm_[a-z]+|fbclid|gclid|gclsrc|dclid|msclkid|"

@@ -1,8 +1,12 @@
-"""Skew-mitigation utilities for 100 TB-scale aggregations and joins.
+"""Skew-mitigation utilities for 100 TB-scale aggregations and joins,
+and the join building blocks the operators share.
 
-AQE's skew-join split handles the join side; these helpers handle skewed
-GROUP BY keys (a handful of keys owning most rows — e.g. one language
-dominating a document corpus) with the classic two-stage salted aggregate.
+AQE's skew-join split handles a skewed join only down to one partition;
+:func:`salted_join` bounds a hot key's per-task input by construction.
+Skewed GROUP BY keys (a handful of keys owning most rows — e.g. one
+language dominating a document corpus) get the classic two-stage salted
+aggregate.  :func:`stamp_content_id` is the one 128-bit content id of
+the frames that fan into several sub-plans.
 """
 
 from __future__ import annotations
@@ -48,6 +52,62 @@ def salted_agg(df: DataFrame, group_cols: list, aggs: dict,
 
 def salted_count(df: DataFrame, group_cols: list, salt_buckets: int = 16) -> DataFrame:
     return salted_agg(df, group_cols, {"n": ("*", "count")}, salt_buckets)
+
+
+def salted_join(left: DataFrame, right: DataFrame, keys: list[str],
+                salt_hash: Column, salts: int, threshold: int,
+                rows: int | None = None) -> DataFrame:
+    """USING equi-join of ``left`` and ``right`` on ``keys`` that splits
+    each hot key ``salts`` ways.
+
+    A key held by more than ``threshold`` rows of ``left`` is hot (one
+    groupBy, broadcast back as a marker).  Hot left rows get the tag
+    ``pmod(salt_hash, salts)``, hot right rows repeat under every tag,
+    and cold rows keep tag 0; the join keys on (keys, tag).  A hot
+    key's pairs then spread over ``salts`` tasks, and each pair still
+    meets on exactly one tag, so the output equals the plain join.
+
+    Pay-as-you-go: with at most one salt, or when ``rows`` (a bound on
+    the rows any key can hold on the left) is at or below
+    ``threshold``, no key can be hot and the plain join runs: no count,
+    no marker, no explode."""
+    s = int(salts)
+    if s <= 1 or (rows is not None and rows <= int(threshold)):
+        return left.join(right, keys)
+    hot = F.broadcast(
+        left.groupBy(*keys).agg(F.count(F.lit(1)).alias("__n"))
+        .where(F.col("__n") > int(threshold))
+        .select(*keys, F.lit(True).alias("__hot")))
+    is_hot = F.col("__hot").isNotNull()
+    tagged = (left.join(hot, keys, "left")
+              .withColumn("__salt", F.when(is_hot, F.pmod(salt_hash, F.lit(s)))
+                          .otherwise(F.lit(0)))
+              .drop("__hot"))
+    # non-null tags: a nullable array would add an isnotnull filter
+    tags = (F.when(is_hot, F.sequence(F.lit(0).cast("long"), F.lit(s - 1)))
+            .otherwise(F.array(F.lit(0).cast("long"))))
+    fanned = (right.join(hot, keys, "left")
+              .withColumn("__salt", F.explode(tags))
+              .drop("__hot"))
+    return tagged.join(fanned, [*keys, "__salt"]).drop("__salt")
+
+
+def stamp_content_id(df: DataFrame, a: str, b: str,
+                     key: Column | None = None) -> DataFrame:
+    """``df`` plus a deterministic 128-bit content id in columns ``a``
+    and ``b``: two seeded xxhash64 of ``key``, a struct that defaults to
+    the whole row.
+
+    A frame that fans into several sub-plans evaluates its id once per
+    sub-plan; ``monotonically_increasing_id`` can then hand one row two
+    ids under AQE re-planning or a task retry, and the sub-plans
+    mis-join.  A content hash is the same in every evaluation.  Rows
+    with equal keys share an id, so ``key`` must hold everything that
+    decides a row's matches."""
+    if key is None:
+        key = F.struct(*[F.col(c) for c in df.columns])
+    return (df.withColumn(a, F.xxhash64(key))
+            .withColumn(b, F.xxhash64(F.lit(7), key)))
 
 
 # Unary nodes that keep every row of their child.

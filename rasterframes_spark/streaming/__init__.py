@@ -434,28 +434,19 @@ def streaming_neardup(stream: DataFrame, id_col: str = "doc_id",
     import pandas as pd
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from rasterframes_spark.pipeline.dedup import minhash_signature_text
+    from rasterframes_spark.pipeline.dedup import (
+        _band_buckets, _check_bands, minhash_signature_text)
 
-    if num_perm % bands != 0:
-        raise ValueError(
-            f"streaming_neardup: bands ({bands}) must divide num_perm "
-            f"({num_perm}) — a remainder would silently drop trailing "
-            "minhash values from banding and degrade recall")
+    _check_bands("streaming_neardup", num_perm, bands)
     id_type = stream.schema[id_col].dataType.simpleString()
     # no _once: the micro-batch plan already evaluates this kernel once
     sig = minhash_signature_text(text_col, shingle_size, num_perm)
-    rows_per_band = num_perm // bands
     banded = (stream
               .select(F.col(id_col).alias("__id"), sig.alias("__sig"))
               .where(F.col("__sig").isNotNull())
-              .select("__id", "__sig", F.posexplode(F.transform(
-                  F.sequence(F.lit(0), F.lit(bands - 1)),
-                  lambda bnd: F.aggregate(
-                      F.slice(F.col("__sig"), bnd * rows_per_band + 1,
-                              rows_per_band),
-                      bnd.cast("long"),
-                      lambda acc, v: F.xxhash64(acc, v)),
-              )).alias("__band", "__bucket")))
+              .select("__id", "__sig", F.posexplode(_band_buckets(
+                  F.col("__sig"), bands, "streaming_neardup"))
+                  .alias("__band", "__bucket")))
 
     out_schema = f"new_id {id_type}, prior_id {id_type}, est_jaccard double"
     state_schema = f"ids array<{id_type}>, sigs binary"

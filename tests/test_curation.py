@@ -50,6 +50,16 @@ def test_dedup_against_minhash_finds_planted(spark, docs):
     assert not (flagged & {r["doc_id"] for r in clean.collect()})
 
 
+def test_dedup_against_minhash_rejects_bad_bands(spark, docs):
+    """bands must divide num_perm: bands > num_perm floors the band
+    width to 0 and turns the LSH join into an all-pairs join."""
+    ref = docs.select("doc_id", "text").where(F.col("doc_id") < 20)
+    for bands in (64, 10):
+        with pytest.raises(ValueError, match="divide num_perm"):
+            P.dedup_against_minhash(ref, ref, "doc_id", "text",
+                                    num_perm=32, bands=bands)
+
+
 def test_decontaminate_flags_ngram_overlap(spark, docs):
     # benchmark = exact 13-token windows lifted from two documents
     src = docs.where(F.col("doc_id").isin(3, 7)).collect()

@@ -58,3 +58,18 @@ def test_udf_sites_match_the_bench_tracer(spark):
     _harness().Tracer(spark, True)._plan_metrics(out, acc)
     assert acc["udf_sites"] == sum(sites.values())
     cached.unpersist()
+
+
+def test_udf_sites_count_grouped_aggregate_udfs(spark):
+    """A grouped-aggregate pandas UDF runs in ``ArrowAggregatePythonExec``;
+    each of its aggregate functions is one site."""
+    @pandas_udf("double")
+    def mean_of(v: pd.Series) -> float:
+        return float(v.mean())
+
+    out = (spark.range(0, 40, 1, 4).groupBy((F.col("id") % 3).alias("k"))
+           .agg(mean_of("id").alias("m")))
+    assert sorted(out.collect()) == [(k, float(sum(range(k, 40, 3)))
+                                      / len(range(k, 40, 3)))
+                                     for k in range(3)]
+    assert udf_sites(out) == {"mean_of": 1}

@@ -1189,7 +1189,9 @@ def test_remove_duplicated_lines_literal_sep(spark):
     assert got2 == {1: "a\\Eb", 2: "c"}
 
 
-def test_remove_duplicated_lines_unique_probe_single_job(spark):
+@pytest.mark.parametrize("op", ["remove_duplicated_lines",
+                                "remove_repeated_spans"])
+def test_remove_duplicated_lines_unique_probe_single_job(spark, op):
     """VERDICT r13 #7a: the uniqueness guard is ONE short-circuiting
     action (groupBy.count.where>1.take(1)), not count +
     distinct-count.  Job counts include AQE's shuffle-materialization
@@ -1202,7 +1204,7 @@ def test_remove_duplicated_lines_unique_probe_single_job(spark):
         return len(tracker.getJobIdsForGroup() or [])
 
     j0 = jobs()
-    P.remove_duplicated_lines(df)  # plan build triggers only the probe
+    getattr(P, op)(df)  # plan build triggers only the probe
     probe_jobs = jobs() - j0
     j1 = jobs()
     ids = df.select("doc_id")

@@ -1,4 +1,4 @@
-"""IVF ANN, salted aggregates, stateful streaming sessionizer."""
+"""IVF ANN, salted aggregates and joins, stateful streaming sessionizer."""
 
 import datetime as dt
 import os
@@ -44,6 +44,70 @@ def test_salted_agg_matches_plain(spark):
     salted = P.salted_agg(docs, ["lang"], {"n": ("*", "count"), "s": ("n_chars", "sum")})
     got = {(r["lang"],): (r["n"], r["s"]) for r in salted.collect()}
     assert got == plain
+
+
+def _salting_nodes(df):
+    """Aggregate, Generate and BroadcastExchange nodes of ``df``'s plan."""
+    from rasterframes_spark.observe import walk
+
+    names = [n for n, _ in walk(df._jdf.queryExecution().executedPlan())]
+    return (sum("Aggregate" in n for n in names), names.count("GenerateExec"),
+            names.count("BroadcastExchangeExec"))
+
+
+def test_salted_join_pays_nothing_when_no_key_can_be_hot(spark):
+    """At most one salt, or a row bound at or below the threshold, runs
+    the plain join: no hot-key count, no broadcast marker, no explode.
+    Otherwise the salted plan gives the plain join's rows."""
+    from rasterframes_spark.pipeline.skew import salted_join
+
+    left = spark.range(0, 200, 1, 4).select(
+        (F.col("id") % 3).alias("k"), F.col("id").alias("l"))
+    right = spark.range(0, 30, 1, 2).select(
+        (F.col("id") % 5).alias("k"), F.col("id").alias("r"))
+    plain = left.join(right, ["k"])
+    h = F.xxhash64("l")
+    for salts, rows in ((16, 10), (16, 50), (1, None), (0, None)):
+        got = salted_join(left, right, ["k"], h, salts, 50, rows)
+        assert _salting_nodes(got) == _salting_nodes(plain), (salts, rows)
+    salted = salted_join(left, right, ["k"], h, 4, 50)
+    assert all(a > b for a, b in zip(_salting_nodes(salted),
+                                     _salting_nodes(plain)))
+    assert sorted(salted.select("k", "l", "r").collect()) == \
+        sorted(plain.select("k", "l", "r").collect())
+
+
+def test_pair_joins_stay_unsalted_below_the_threshold(spark, monkeypatch):
+    """minhash with a known small input and st_join with the default
+    ``salt`` plan exactly the nodes of a plain equi-join in place of
+    ``salted_join``; an unknown input size plans the salting."""
+    from rasterframes_spark.geom import functions as GF
+    from rasterframes_spark.operators import st_join, vector_join
+    from rasterframes_spark.pipeline import dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    pts = spark.createDataFrame([(i, float(i), float(i)) for i in range(20)],
+                                "pid int, x double, y double") \
+        .select("pid", GF.st_point("x", "y").alias("geometry"))
+    polys = spark.createDataFrame([(0, "POLYGON ((0 0, 9 0, 9 9, 0 9, 0 0))")],
+                                  "zid int, wkt string") \
+        .select("zid", GF.st_geom_from_wkt("wkt").alias("geometry"))
+
+    def plans():
+        return (_salting_nodes(P.minhash_dedup_pairs(
+                    docs, "doc_id", "text", input_rows=500)),
+                _salting_nodes(st_join(pts, polys, grid_size=4.0)),
+                _salting_nodes(P.minhash_dedup_pairs(
+                    docs, "doc_id", "text", input_rows=None)))
+
+    got = plans()
+    with monkeypatch.context() as m:
+        for mod in (dedup, vector_join):
+            m.setattr(mod, "salted_join",
+                      lambda left, right, keys, *_: left.join(right, keys))
+        plain = plans()
+    assert got[:2] == plain[:2]
+    assert got[2] != plain[2]
 
 
 def test_stateful_sessionizer(spark, tmp_path):
