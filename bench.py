@@ -51,7 +51,7 @@ def compact_result_line(full: dict, limit: int = STDOUT_LINE_LIMIT) -> str:
     tests/test_bench_contract.py pins that an oversized result still
     parses from a 2000-char tail slice."""
     line = {k: v for k, v in full.items()
-            if k not in ("median", "normalized", "derived")}
+            if k not in ("median", "normalized", "derived", "compiles")}
     line["full"] = os.path.basename(FULL_JSON)
 
     def render():
@@ -357,6 +357,13 @@ def compute_derived(timings: dict, medians: dict) -> dict:
     }
 
 
+def _timed(fn) -> float:
+    """Wall seconds of ``fn()``."""
+    t0 = time.time()
+    fn()
+    return time.time() - t0
+
+
 def _count_release(df) -> int:
     """count() then release the operator's cached-input handle
     (``_rf_cached_inputs``) — repeat hygiene (VERDICT r11 #1): a leg
@@ -419,6 +426,7 @@ def main():
     from pyspark.sql import functions as F
     import rasterframes_spark as rf
     from rasterframes_spark import create_rf_spark_session
+    from rasterframes_spark.observe import count_compiles
     import __spark_entry__ as entry
 
     # UI enabled: the sf1 scale-rehearsal block reads per-stage task
@@ -429,6 +437,8 @@ def main():
 
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
+    # per repeat: [generated classes compiled, compile seconds]
+    compiles: dict[str, list] = {}
     # cell filter for tools/bench_ab.py: run only the named cells (their
     # shared input caches still build, so a cell times the same work)
     only = set(filter(None, os.environ.get(
@@ -437,11 +447,12 @@ def main():
     def run(name, fn, repeat=1):
         if only and name not in only:
             return
-        ts = []
+        ts, cc = [], []
         for _ in range(repeat):
-            t0 = time.time()
-            fn()
-            ts.append(time.time() - t0)
+            dt, n, secs = count_compiles(spark, lambda: _timed(fn))
+            ts.append(dt)
+            cc.append([n, round(secs, 3)])
+        compiles[name] = cc
         ts.sort()
         # min = capability (continuity with earlier rounds); median =
         # the noise-robust series round-over-round comparisons lead with
@@ -824,6 +835,7 @@ def main():
         "unit": "sec",
         "queries": timings,
         "median": medians,
+        "compiles": compiles,
         "derived": derived,
         "normalized": normalized,
         "normalized_median": normalized_median,
@@ -977,6 +989,7 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
 
     import rasterframes_spark as rf
     from rasterframes_spark import pipeline as P
+    from rasterframes_spark.observe import count_compiles
     from rasterframes_spark.operators import (raster_join, st_join,
                                               st_knn_join)
 
@@ -1054,16 +1067,15 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
                 pair_w = round(time.time() - tp, 3)
             wm = max_stage_id(spark)
             g0, s0 = jvm_gc_ms(), _steal_ticks()
-            t0 = time.time()
-            fn()
-            wall = round(time.time() - t0, 3)
+            wall, n, secs = count_compiles(spark, lambda: _timed(fn))
+            wall = round(wall, 3)
             g1, s1 = jvm_gc_ms(), _steal_ticks()
             gc_s = (round((g1 - g0) / 1000.0, 1)
                     if g0 is not None and g1 is not None else None)
             steal_s = (round((s1 - s0) / 100.0, 1)
                        if s0 is not None and s1 is not None else None)
             runs.append((wall, stage_metrics(spark, wm), gc_s, steal_s,
-                         pair_w))
+                         pair_w, [n, round(secs, 3)]))
             if repeat > 1:
                 spark.catalog.clearCache()
                 try:
@@ -1117,6 +1129,7 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
             m["median_of"] = "clean"
         if reran_for:
             m["reran_for"] = reran_for
+        m["compiles"] = [r[5] for r in runs]       # time-ordered
         if repeat > 1:
             m["runs"] = [r[0] for r in runs]        # time-ordered
             m["gc_sec"] = [r[2] for r in runs]

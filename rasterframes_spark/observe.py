@@ -1,6 +1,7 @@
 """One walk over a Spark plan (the package's only one), the views built
-on it, and a job counter.  ``pipeline/skew.py`` walks optimized plans
-with it; :func:`plan_nodes` and :func:`udf_sites` walk executed plans."""
+on it, a job counter and a compile counter.  ``pipeline/skew.py`` walks
+optimized plans with it; :func:`plan_nodes` and :func:`udf_sites` walk
+executed plans."""
 
 from __future__ import annotations
 
@@ -9,7 +10,7 @@ from collections import Counter
 
 from pyspark import SparkContext
 
-__all__ = ["walk", "plan_nodes", "udf_sites", "count_jobs"]
+__all__ = ["walk", "plan_nodes", "udf_sites", "count_jobs", "count_compiles"]
 
 _PANDAS_FUNC_NODES = ("FlatMapGroupsInPandasExec", "MapInPandasExec",
                       "FlatMapCoGroupsInPandasExec")
@@ -83,3 +84,17 @@ def count_jobs(spark, fn):
     finally:
         sc._jsc.clearJobGroup()
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_compiles(spark, fn):
+    """Run ``fn()``; return its result, the number of generated classes
+    Janino compiled meanwhile (codegen cache misses) and their compile
+    seconds (``CodeGenerator.compileTime()``).  The counters are
+    JVM-wide: in local mode, compiles of work running concurrently in
+    the same JVM count too."""
+    jvm = spark._jvm
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n0, ns0 = hist.getCount(), gen.compileTime()
+    out = fn()
+    return out, hist.getCount() - n0, (gen.compileTime() - ns0) / 1e9

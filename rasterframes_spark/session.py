@@ -14,6 +14,9 @@ import pandas as pd  # module-global: grouped-agg UDF type hints resolve here
 
 from pyspark.sql import SparkSession
 
+# default size of the JVM's codegen cache (spark.sql.codegen.cache.maxEntries)
+CODEGEN_CACHE_ENTRIES = 3000
+
 
 def create_rf_spark_session(master: str | None = None, app_name: str = "rasterframes-spark",
                             **configs) -> SparkSession:
@@ -58,6 +61,14 @@ def create_rf_spark_session(master: str | None = None, app_name: str = "rasterfr
         # workers fork from a daemon that has imported the package (see
         # _pyworker): no per-task zip re-reads, no per-worker imports
         .config("spark.python.daemon.module", "rasterframes_spark._pyworker")
+        # Generated classes (whole-stage codegen, projections, orderings)
+        # are compiled by Janino and kept in a cache that Spark caps at
+        # 100 entries.  One pass of the perfbench shuffle-and-write
+        # workload needs ~187 entries and the 50 oracle queries 1255, so
+        # at 100 a repeated query compiles all of its classes again.  The
+        # cap is over twice the largest census (CHANGES.md).  Static: it
+        # takes effect only when the session's JVM starts.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     # Object-store transport env reaches executor Python workers (r14):
     # RangeSource's s3:// signing and retry knobs read the standard AWS /

@@ -65,6 +65,8 @@ def _full_result(n_extra: int = 0) -> dict:
         sf1[leg]["runs"] = [15.1, 17.012, 18.3]
         sf1[leg]["gc_sec"] = [1.2, 0.8, 0.9]
         sf1[leg]["steal_sec"] = [0.0, 4.1, 2.2]
+    for leg in SF1_LEGS:
+        sf1[leg]["compiles"] = [[120, 1.2], [0, 0.0], [0, 0.0]]
     return {
         "metric": "headline_suite_total", "value": 23.456, "unit": "sec",
         "queries": queries, "median": dict(queries),
@@ -78,6 +80,8 @@ def _full_result(n_extra: int = 0) -> dict:
         "psi_cpu_avg10": 0.0, "waited_for_quiet_sec": 0,
         "contended": False,
         "semantics": {"minhash_dedup": "cold", "exact_substring": "cold"},
+        # per repeat: [classes compiled, compile seconds]
+        "compiles": {c: [[40, 0.31]] + [[0, 0.0]] * 4 for c in CELLS},
     }
 
 
@@ -104,6 +108,9 @@ def test_r9_sized_result_fits_and_parses():
     assert d["value"] == full["value"]
     assert d["full"] == "BENCH_full.json"
     assert set(SF1_LEGS) <= set(d["sf1"])
+    # compile counts live only in the full file
+    assert "compiles" not in d
+    assert not any("compiles" in v for v in d["sf1"].values())
     # the scale evidence survives compaction: per-leg wall seconds AND
     # the vs-10x-linear ratio (skew/spill may trim, full file keeps all)
     leg = d["sf1"]["minhash_dedup"]

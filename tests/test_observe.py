@@ -1,15 +1,21 @@
 """The plan walk of ``rasterframes_spark/observe.py`` against the
 benchmark tracer's own copy in ``perfbench/harness.py``: on one plan
-both count the same Python UDF sites, so the two walks cannot drift."""
+both count the same Python UDF sites, so the two walks cannot drift.
+And the compile counter: a session's repeated query hits the codegen
+cache however many classes were compiled in between."""
 
+import functools
 from pathlib import Path
 import types
 
 import pandas as pd
+import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-from rasterframes_spark.observe import plan_nodes, udf_sites
+from rasterframes_spark import session
+from rasterframes_spark.observe import count_compiles, plan_nodes, udf_sites
 
 
 def _harness():
@@ -73,3 +79,54 @@ def test_udf_sites_count_grouped_aggregate_udfs(spark):
                                       / len(range(k, 40, 3)))
                                      for k in range(3)]
     assert udf_sites(out) == {"mean_of": 1}
+
+
+def test_repeated_query_hits_the_codegen_cache(spark):
+    """A query run again after 200 cache entries of other generated
+    classes compiles nothing.  Spark's default cap of 100 is split into
+    4 LRU segments of 25; 200 new entries, ~50 a segment, evict the
+    query's classes there."""
+    def q():
+        # one stage: Range -> Project -> Filter, no exchange
+        return (spark.range(0, 512, 1, 2)
+                .select(((F.col("id") * 37 + 11) % 101).alias("v"))
+                .where("v > 50").collect())
+
+    want = sorted(v for v in ((i * 37 + 11) % 101 for i in range(512)) if v > 50)
+    rows, first, _ = count_compiles(spark, q)
+    assert sorted(r.v for r in rows) == want and first > 0
+
+    filler, k = 0, 0
+    while filler < 200:
+        # a union of 16 one-stage branches, each with its own inlined
+        # literals: new classes for every branch
+        k += 1
+        parts = [spark.range(0, 1, 1, 1).select((F.col("id") * (16 * k + j) + j).alias("w"))
+                 for j in range(16)]
+        _, n, _ = count_compiles(
+            spark, lambda: functools.reduce(lambda a, b: a.union(b), parts).collect())
+        filler += n
+    rows, again, secs = count_compiles(spark, q)
+    assert sorted(r.v for r in rows) == want
+    assert (again, secs) == (0, 0.0)
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        session.CODEGEN_CACHE_ENTRIES)
+
+
+def test_codegen_cache_default_yields_to_configs(monkeypatch):
+    """``create_rf_spark_session`` sets the cache cap; an explicit entry
+    in ``configs`` wins.  Read from the builder: the cap is static, so a
+    running JVM keeps the one it started with."""
+    class Built(Exception):
+        pass
+
+    def capture(builder):
+        raise Built(dict(builder._options))
+
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    key = "spark.sql.codegen.cache.maxEntries"
+    for configs, want in (({}, str(session.CODEGEN_CACHE_ENTRIES)),
+                          ({key: "64"}, "64")):
+        with pytest.raises(Built) as built:
+            session.create_rf_spark_session(master="local[1]", **configs)
+        assert built.value.args[0][key] == want
