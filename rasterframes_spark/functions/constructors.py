@@ -260,15 +260,11 @@ def assemble_tiles(df: DataFrame, group_cols: list, col_index, row_index, cell,
     conversion) was 1.8x slower still. Don't re-litigate without
     re-measuring.
 
-    method='chunked': two-phase alternative — a per-partition mapInPandas
-    packs each partition's cells for a key into two binary blobs
-    (int32 positions + float64 values), so the shuffle moves a handful of
-    compact rows per (partition, key) instead of millions of cell rows; the
-    final applyInPandas concatenates blobs and scatters. Chunked is never
-    chosen by 'auto' (its extra Arrow crossing loses at moderate scale);
-    pick it explicitly when the cell-row shuffle itself is the bottleneck
-    (very wide rows or extreme cell counts per partition).
+    Any other ``method`` raises ``ValueError``.
     """
+    if method not in ("auto", "collect", "collect_packed", "collect_dual",
+                      "group_map"):
+        raise ValueError(f"unknown assemble_tiles method: {method!r}")
     nc, nr = int(cols), int(rows)
     ct = CellType.parse(cell_type)
     if method == "auto":
@@ -276,7 +272,7 @@ def assemble_tiles(df: DataFrame, group_cols: list, col_index, row_index, cell,
         # traffic stays JVM-side); group_map beyond, where whole-group
         # collect_list buffers (12 B/cell) stop being a safe per-buffer
         # memory bound. Measured (100 x 256^2 uint16, local[32], min-of-5):
-        # collect 0.72-0.80 s vs group_map 1.26 s vs chunked 2.43 s — the
+        # collect 0.72-0.80 s vs group_map 1.26 s — the
         # JVM collect_list agg is 0.53 s of the collect path (boxing-bound;
         # a packed-long single list measured the same 0.56 s, Long boxing
         # replacing Integer boxing), the scatter UDF ~0.19 s.
@@ -368,99 +364,36 @@ def assemble_tiles(df: DataFrame, group_cols: list, col_index, row_index, cell,
             sel.append(scatter(F.col(f"__pos_{cv}"), F.col(f"__arr_{cv}")).alias(name))
         return grouped.select(*sel)
 
-    from pyspark.sql.types import BinaryType, StructType, StructField
+    from pyspark.sql.types import StructType, StructField
     in_schema = df.select(*group_cols).schema
     key_names = [f.name for f in in_schema.fields]
     out_schema = StructType(
         list(in_schema.fields) + [StructField(n, TILE_SCHEMA, True) for n in out_names]
     )
 
-    if method == "group_map":
-        # flat cell position is computed JVM-side so the shuffle carries
-        # (keys, pos:int, value) — one int narrower than shipping
-        # (row, col) — and the Python side does a single 1-D scatter.
-        src_gm = df.select(
-            *group_cols,
-            (F.col(ri).cast("long") * nc + F.col(ci).cast("long")).cast("int").alias("__p"),
-            *[F.col(cv).cast(xfer).alias(f"__c_{i}") for i, cv in enumerate(cvs)],
-        )
-
-        def make(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-            p = pdf["__p"].to_numpy(dtype="int64")
-            out = {g: [k] for g, k in zip(key_names, key)}
-            for i, name in enumerate(out_names):
-                vals = np.full(nr * nc, np.nan, dtype="float64")
-                vals[p] = pdf[f"__c_{i}"].to_numpy(dtype="float64")
-                vals = vals.reshape(nr, nc)
-                mask = np.isnan(vals)
-                tile = Tile(np.ma.masked_array(
-                    np.where(mask, 0, vals).astype(ct.dtype), mask=mask), ct)
-                out[name] = [tile.to_row()]
-            return pd.DataFrame(out)
-
-        return src_gm.groupBy(*group_cols).applyInPandas(make, schema=out_schema)
-
-    mid_schema = StructType(
-        list(in_schema.fields)
-        + [StructField("__pos", BinaryType(), True)]
-        + [StructField(f"__v_{i}", BinaryType(), True) for i in range(len(cvs))]
-    )
+    # flat cell position is computed JVM-side so the shuffle carries
+    # (keys, pos:int, value) — one int narrower than shipping
+    # (row, col) — and the Python side does a single 1-D scatter.
     src = df.select(
         *group_cols,
         (F.col(ri).cast("long") * nc + F.col(ci).cast("long")).cast("int").alias("__p"),
-        *[F.col(cv).cast("double").alias(f"__c_{i}") for i, cv in enumerate(cvs)],
+        *[F.col(cv).cast(xfer).alias(f"__c_{i}") for i, cv in enumerate(cvs)],
     )
 
-    def partial(batches):
-        """Map-side combine: pack this partition's cells per key into
-        binary (positions, values) blobs. Accumulates the whole partition
-        (cell rows arrive in many small Arrow batches) and groups once."""
-        key_acc: dict[str, list] = {n: [] for n in key_names}
-        pos_acc: list[np.ndarray] = []
-        val_acc: list[list[np.ndarray]] = [[] for _ in cvs]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            for n in key_names:
-                key_acc[n].append(pdf[n].to_numpy())
-            pos_acc.append(pdf["__p"].to_numpy(dtype="<i4"))
-            for i in range(len(cvs)):
-                val_acc[i].append(pdf[f"__c_{i}"].to_numpy(dtype="<f8"))
-        if not pos_acc:
-            return
-        kdf = pd.DataFrame({n: np.concatenate(key_acc[n]) for n in key_names})
-        pos = np.concatenate(pos_acc)
-        vals = [np.concatenate(v) for v in val_acc]
-        out: dict[str, list] = {n: [] for n in mid_schema.fieldNames()}
-        for key, idx in kdf.groupby(key_names, sort=False, dropna=False).indices.items():
-            if not isinstance(key, tuple):
-                key = (key,)
-            for n, k in zip(key_names, key):
-                out[n].append(k)
-            out["__pos"].append(pos[idx].tobytes())
-            for i in range(len(cvs)):
-                out[f"__v_{i}"].append(vals[i][idx].tobytes())
-        yield pd.DataFrame(out)
-
-    mid = src.mapInPandas(partial, schema=mid_schema)
-
-    def merge(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pos = np.concatenate(
-            [np.frombuffer(b, dtype="<i4") for b in pdf["__pos"]])
+    def make(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        p = pdf["__p"].to_numpy(dtype="int64")
         out = {g: [k] for g, k in zip(key_names, key)}
         for i, name in enumerate(out_names):
-            vals = np.concatenate(
-                [np.frombuffer(b, dtype="<f8") for b in pdf[f"__v_{i}"]])
-            flat = np.full(nr * nc, np.nan, dtype="float64")
-            flat[pos] = vals
-            arr = flat.reshape(nr, nc)
-            mask = np.isnan(arr)
+            vals = np.full(nr * nc, np.nan, dtype="float64")
+            vals[p] = pdf[f"__c_{i}"].to_numpy(dtype="float64")
+            vals = vals.reshape(nr, nc)
+            mask = np.isnan(vals)
             tile = Tile(np.ma.masked_array(
-                np.where(mask, 0, arr).astype(ct.dtype), mask=mask), ct)
+                np.where(mask, 0, vals).astype(ct.dtype), mask=mask), ct)
             out[name] = [tile.to_row()]
         return pd.DataFrame(out)
 
-    return mid.groupBy(*key_names).applyInPandas(merge, schema=out_schema)
+    return src.groupBy(*group_cols).applyInPandas(make, schema=out_schema)
 
 
 # -- cell-type conversion (transformers/SetCellType.scala:56-96 etc.) --------

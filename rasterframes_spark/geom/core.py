@@ -819,18 +819,23 @@ def distance(g1, g2) -> float:
 
 
 def _all_lines_or_points(g):
+    """Points and lines (rings) of ``g`` as arrays; empty parts are left
+    out, so the distance to an empty geometry is inf."""
     out = []
     gtype = g[0]
     if gtype in ("Point", "MultiPoint"):
         for p in _points(g):
-            out.append(("pt", np.asarray(p, dtype="float64")))
+            if len(p):
+                out.append(("pt", np.asarray(p, dtype="float64")))
     elif gtype in ("LineString", "MultiLineString"):
         for l in _lines(g):
-            out.append(("line", np.asarray(l, dtype="float64")))
+            if len(l):
+                out.append(("line", np.asarray(l, dtype="float64")))
     else:
         for rings in _polygons(g):
             for r in rings:
-                out.append(("line", np.asarray(r, dtype="float64")))
+                if len(r):
+                    out.append(("line", np.asarray(r, dtype="float64")))
     return out
 
 

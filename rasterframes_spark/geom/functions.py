@@ -65,20 +65,30 @@ def _geoms(s: pd.Series):
     return out
 
 
-def _unary_scalar(fn, rtype):
+def _is_null(v) -> bool:
+    """A null argument: None, or NaN (a null double crosses Arrow as NaN)."""
+    return v is None or (isinstance(v, float) and v != v)
+
+
+def _row_kernel(fn, rtype, geoms: int = 1):
+    """Kernel applying ``fn(*row)`` to each row of its argument columns.
+    The first ``geoms`` columns are WKB and reach ``fn`` parsed; the rest
+    reach it as plain values.  A null argument gives a null result.  SQL
+    may pass fewer columns than the Column API (an optional trailing
+    argument); ``fn`` then applies its own default."""
     @lazy_pandas_udf(rtype)
-    def udf(s: pd.Series) -> pd.Series:
-        return pd.Series([None if g is None else fn(g) for g in _geoms(s)], dtype=object)
+    def udf(*cols: pd.Series) -> pd.Series:
+        vals = [_geoms(c) if i < geoms else c.values for i, c in enumerate(cols)]
+        return pd.Series(
+            [None if any(map(_is_null, row)) else fn(*row) for row in zip(*vals)],
+            dtype=object)
     return udf
 
 
-def _unary_str(fn, rtype):
-    """Like _unary_scalar but over a plain string/bytes column (no WKB
-    decode of the input)."""
-    @lazy_pandas_udf(rtype)
-    def udf(s: pd.Series) -> pd.Series:
-        return pd.Series([None if t is None else fn(t) for t in s.values], dtype=object)
-    return udf
+def _index_arg(n) -> Column:
+    """The ``n`` of the st_*_n accessors: a column (or its name) as
+    given, a number as an int literal."""
+    return col_or_name(n) if isinstance(n, (str, Column)) else F.lit(int(n))
 
 
 def _binary_pred(fn):
@@ -161,14 +171,14 @@ def st_as_binary(geom) -> Column:
     return col_or_name(geom)
 
 
-_as_text = _unary_scalar(G.wkt_dumps, "string")
+_as_text = _row_kernel(G.wkt_dumps, "string")
 
 
 def st_as_text(geom) -> Column:
     return _as_text(col_or_name(geom))
 
 
-_geom_type = _unary_scalar(lambda g: g[0], "string")
+_geom_type = _row_kernel(lambda g: g[0], "string")
 
 
 def st_geometry_type(geom) -> Column:
@@ -179,8 +189,8 @@ def st_geometry_type(geom) -> Column:
 # accessors / measures
 # ---------------------------------------------------------------------------
 
-_x = _unary_scalar(lambda g: float(g[1][0]) if g[0] == "Point" and g[1] else None, "double")
-_y = _unary_scalar(lambda g: float(g[1][1]) if g[0] == "Point" and g[1] else None, "double")
+_x = _row_kernel(lambda g: float(g[1][0]) if g[0] == "Point" and g[1] else None, "double")
+_y = _row_kernel(lambda g: float(g[1][1]) if g[0] == "Point" and g[1] else None, "double")
 
 
 def st_x(geom) -> Column:
@@ -191,7 +201,7 @@ def st_y(geom) -> Column:
     return _y(col_or_name(geom))
 
 
-_centroid = _unary_scalar(lambda g: G.wkb_dumps(("Point", G.centroid(g))), "binary")
+_centroid = _row_kernel(lambda g: G.wkb_dumps(("Point", G.centroid(g))), "binary")
 
 
 def st_centroid(geom) -> Column:
@@ -235,8 +245,8 @@ def st_envelope(geom) -> Column:
 
 st_extent = st_envelope  # transformers/GeometryToExtent.scala:40
 
-_area = _unary_scalar(lambda g: float(G.area(g)), "double")
-_length = _unary_scalar(lambda g: float(G.length(g)), "double")
+_area = _row_kernel(lambda g: float(G.area(g)), "double")
+_length = _row_kernel(lambda g: float(G.length(g)), "double")
 
 
 def st_area(geom) -> Column:
@@ -309,16 +319,9 @@ def st_distance(a, b) -> Column:
     return _distance_udf(col_or_name(a), col_or_name(b))
 
 
-@lazy_pandas_udf("double")
-def _distance_sphere_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    ga, gb = _geoms(a), _geoms(b)
-    out = []
-    for x, y in zip(ga, gb):
-        if x is None or y is None or x[0] != "Point" or y[0] != "Point":
-            out.append(None)
-        else:
-            out.append(float(G.distance_sphere(x[1], y[1])))
-    return pd.Series(out, dtype=object)
+_distance_sphere_udf = _row_kernel(
+    lambda x, y: float(G.distance_sphere(x[1], y[1]))
+    if x[0] == y[0] == "Point" and x[1] and y[1] else None, "double", geoms=2)
 
 
 def st_distance_sphere(a, b) -> Column:
@@ -391,14 +394,7 @@ _crosses = _binary_pred(R.crosses)
 _overlaps = _binary_pred(R.overlaps)
 
 
-@lazy_pandas_udf("string")
-def _relate_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    ga, gb = _geoms(a), _geoms(b)
-    return pd.Series(
-        [None if (x is None or y is None) else R.relate_matrix(x, y)
-         for x, y in zip(ga, gb)],
-        dtype=object,
-    )
+_relate_udf = _row_kernel(R.relate_matrix, "string", geoms=2)
 
 
 def st_intersects(a, b) -> Column:
@@ -449,11 +445,15 @@ def st_relate(a, b) -> Column:
     return _relate_udf(col_or_name(a), col_or_name(b))
 
 
+_relate_bool = _row_kernel(
+    lambda x, y, pat: None if _is_empty(x) or _is_empty(y)
+    else bool(R.relate_pattern(x, y, str(pat))), "boolean", geoms=2)
+
+
 def st_relate_bool(a, b, pattern: str) -> Column:
-    """DE-9IM pattern predicate (geomesa st_relateBool)."""
-    pat = str(pattern)
-    udf = _binary_pred(lambda x, y: R.relate_pattern(x, y, pat))
-    return udf(col_or_name(a), col_or_name(b))
+    """DE-9IM pattern predicate (geomesa st_relateBool); null when either
+    geometry is empty."""
+    return _relate_bool(col_or_name(a), col_or_name(b), F.lit(str(pattern)))
 
 
 def st_equals(a, b) -> Column:
@@ -465,10 +465,17 @@ def st_equals(a, b) -> Column:
 # ---------------------------------------------------------------------------
 
 
+_translate = _row_kernel(
+    lambda g, dx, dy: G.wkb_dumps(G.translate(g, float(dx), float(dy))), "binary")
+
+
 def st_translate(geom, dx, dy) -> Column:
-    fx, fy = float(dx), float(dy)
-    udf = _unary_scalar(lambda g: G.wkb_dumps(G.translate(g, fx, fy)), "binary")
-    return udf(col_or_name(geom))
+    return _translate(col_or_name(geom), F.lit(float(dx)), F.lit(float(dy)))
+
+
+_buffer_point = _row_kernel(
+    lambda g, r: G.wkb_dumps(G.buffer_point_geodesic(g[1], float(r)))
+    if g[0] == "Point" and g[1] else None, "binary")
 
 
 def st_buffer_point(geom, radius) -> Column:
@@ -476,50 +483,61 @@ def st_buffer_point(geom, radius) -> Column:
     point — the geomesa st_bufferPoint contract (geodesic, spherical
     direct formula; previously this engine buffered in planar coordinate
     units, an undocumented divergence)."""
-    r = float(radius)
-    udf = _unary_scalar(
-        lambda g: G.wkb_dumps(G.buffer_point_geodesic(g[1], r))
-        if g[0] == "Point" and g[1] else None, "binary"
-    )
-    return udf(col_or_name(geom))
+    return _buffer_point(col_or_name(geom), F.lit(float(radius)))
+
+
+def _geohash_of(g, precision=12):
+    c = G.centroid(g)
+    return G.geohash(c[0], c[1], int(precision)) if c else None  # empty -> null
+
+
+_geohash = _row_kernel(_geohash_of, "string")
 
 
 def st_geohash(geom, precision=12) -> Column:
-    p = int(precision)
+    return _geohash(col_or_name(geom), F.lit(int(precision)))
 
-    def _gh(g):
-        c = G.centroid(g)
-        return G.geohash(c[0], c[1], p) if c else None  # empty -> null
 
-    udf = _unary_scalar(_gh, "string")
-    return udf(col_or_name(geom))
+@lazy_pandas_udf("binary")
+def _reproject_udf(s: pd.Series, src: pd.Series, dst: pd.Series) -> pd.Series:
+    # one transform per distinct (src, dst) pair in the batch, over the
+    # vertices of all its rows; an empty geometry gives null
+    gs = _geoms(s)
+    pairs: dict = {}
+    for i, row in enumerate(zip(gs, src.values, dst.values)):
+        if not any(map(_is_null, row)) and not _is_empty(row[0]):
+            pairs.setdefault(row[1:], []).append(i)
+    out = [None] * len(gs)
+    for (a, b), idx in pairs.items():
+        moved = P.transform_geoms([gs[i] for i in idx], str(a), str(b))
+        for i, g in zip(idx, moved):
+            out[i] = G.wkb_dumps(g)
+    return pd.Series(out, dtype=object)
 
 
 def st_reproject(geom, src_crs: str, dst_crs: str) -> Column:
     """Reproject geometry between CRSs (transformers/ReprojectGeometry.scala:52-105).
-    CRS args are literal strings (column-valued CRS: see raster_join which
-    handles per-row CRS inside its merge kernel)."""
-    s, d = str(src_crs), str(dst_crs)
-    udf = _unary_scalar(lambda g: G.wkb_dumps(P.transform_geom(g, s, d)), "binary")
-    return udf(col_or_name(geom))
+    The Column API takes literal CRS strings; the kernel takes CRS columns
+    (raster_join handles per-row CRS inside its merge kernel)."""
+    return _reproject_udf(col_or_name(geom), F.lit(str(src_crs)), F.lit(str(dst_crs)))
+
+
+@lazy_pandas_udf("binary")
+def _geometry_udf(e: pd.DataFrame) -> pd.Series:
+    out = []
+    for i in range(len(e)):
+        if e["xmin"].values[i] is None or (isinstance(e["xmin"].values[i], float) and np.isnan(e["xmin"].values[i])):
+            out.append(None)
+        else:
+            out.append(G.wkb_dumps(G.box_polygon(
+                float(e["xmin"].values[i]), float(e["ymin"].values[i]),
+                float(e["xmax"].values[i]), float(e["ymax"].values[i]))))
+    return pd.Series(out, dtype=object)
 
 
 def st_geometry(extent) -> Column:
     """Extent struct -> polygon geometry (transformers/ExtentToGeometry.scala:41)."""
-
-    @lazy_pandas_udf("binary")
-    def udf(e: pd.DataFrame) -> pd.Series:
-        out = []
-        for i in range(len(e)):
-            if e["xmin"].values[i] is None or (isinstance(e["xmin"].values[i], float) and np.isnan(e["xmin"].values[i])):
-                out.append(None)
-            else:
-                out.append(G.wkb_dumps(G.box_polygon(
-                    float(e["xmin"].values[i]), float(e["ymin"].values[i]),
-                    float(e["xmax"].values[i]), float(e["ymax"].values[i]))))
-        return pd.Series(out, dtype=object)
-
-    return udf(col_or_name(extent))
+    return _geometry_udf(col_or_name(extent))
 
 
 def rf_mk_crs(crs: str) -> Column:
@@ -535,6 +553,8 @@ def _geohash_box(gh: str, precision_bits: int | None = None):
     """Geohash string -> its bounding-box polygon geometry.
     ``precision_bits`` (geomesa st_geomFromGeoHash's 2nd arg) truncates
     decoding after that many BITS — the cell geomesa returns."""
+    if precision_bits is not None:
+        precision_bits = int(precision_bits)
     lat = [-90.0, 90.0]
     lon = [-180.0, 180.0]
     even = True
@@ -559,20 +579,19 @@ def st_geom_from_geohash(geohash_col, precision: int | None = None) -> Column:
     """Geohash string -> its bounding-box polygon (geomesa
     st_geomFromGeoHash). ``precision`` is in BITS and truncates the cell
     to that precision (previously accepted and silently ignored)."""
-    p = None if precision is None else int(precision)
-
-    @lazy_pandas_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [None if gh is None else G.wkb_dumps(_geohash_box(gh, p))
-             for gh in s.values],
-            dtype=object)
-
-    return udf(col_or_name(geohash_col))
+    return _geom_from_geohash(*_geohash_args(geohash_col, precision))
 
 
-_exterior_ring = _unary_scalar(
-    lambda g: G.wkb_dumps(("LineString", g[1][0])) if g[0] == "Polygon" else None,
+def _geohash_args(geohash_col, precision) -> list:
+    args = [col_or_name(geohash_col)]
+    return args if precision is None else args + [F.lit(int(precision))]
+
+
+_geom_from_geohash = _row_kernel(
+    lambda gh, *bits: G.wkb_dumps(_geohash_box(gh, *bits)), "binary", geoms=0)
+
+_exterior_ring = _row_kernel(
+    lambda g: G.wkb_dumps(("LineString", g[1][0])) if g[0] == "Polygon" and g[1] else None,
     "binary",
 )
 
@@ -581,7 +600,7 @@ def st_exterior_ring(geom) -> Column:
     return _exterior_ring(col_or_name(geom))
 
 
-_num_points = _unary_scalar(lambda g: len(G._points(g)), "int")
+_num_points = _row_kernel(lambda g: len(G._points(g)), "int")
 
 
 def st_num_points(geom) -> Column:
@@ -599,7 +618,7 @@ def _is_valid(g) -> bool:
     return True
 
 
-_is_valid_udf = _unary_scalar(_is_valid, "boolean")
+_is_valid_udf = _row_kernel(_is_valid, "boolean")
 
 
 def st_is_valid(geom) -> Column:
@@ -616,7 +635,7 @@ def _length_sphere(g) -> float:
     return total
 
 
-_length_sphere_udf = _unary_scalar(_length_sphere, "double")
+_length_sphere_udf = _row_kernel(_length_sphere, "double")
 
 
 def st_length_sphere(geom) -> Column:
@@ -624,26 +643,18 @@ def st_length_sphere(geom) -> Column:
     return _length_sphere_udf(col_or_name(geom))
 
 
-@lazy_pandas_udf("binary")
-def _closest_point_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    ga, gb = _geoms(a), _geoms(b)
-    out = []
-    for x, y in zip(ga, gb):
-        if x is None or y is None:
-            out.append(None)
-            continue
-        # closest point ON x to y: sample x's segments/vertices
-        best, bd = None, float("inf")
-        import numpy as _np
-        ys = G._all_lines_or_points(y)
-        for kind, data in G._all_lines_or_points(x):
-            pts = data[None, :] if kind == "pt" else data
-            for p in pts:
-                d = G.distance(("Point", tuple(p)), y)
-                if d < bd:
-                    bd, best = d, tuple(float(v) for v in p)
-        out.append(G.wkb_dumps(("Point", best)) if best else None)
-    return pd.Series(out, dtype=object)
+def _closest_vertex(x, y):
+    """The vertex of ``x`` closest to ``y``, as WKB."""
+    best, bd = None, float("inf")
+    for kind, data in G._all_lines_or_points(x):
+        for p in (data[None, :] if kind == "pt" else data):
+            d = G.distance(("Point", tuple(p)), y)
+            if d < bd:
+                bd, best = d, tuple(float(v) for v in p)
+    return G.wkb_dumps(("Point", best)) if best else None
+
+
+_closest_point_udf = _row_kernel(_closest_vertex, "binary", geoms=2)
 
 
 def st_closest_point(a, b) -> Column:
@@ -670,7 +681,7 @@ def _as_geojson(g):
     return _json.dumps({"type": gtype, "coordinates": coords})
 
 
-_as_geojson_udf = _unary_scalar(_as_geojson, "string")
+_as_geojson_udf = _row_kernel(_as_geojson, "string")
 
 
 def st_as_geojson(geom) -> Column:
@@ -754,71 +765,77 @@ def _typed_from_wkt(expect: str):
     def fn(t):
         g = G.wkt_loads(t)
         return G.wkb_dumps(g) if g[0] == expect else None
-    return fn
+    return _row_kernel(fn, "binary", geoms=0)
+
+
+_point_from_text = _typed_from_wkt("Point")
+_line_from_text = _typed_from_wkt("LineString")
+_polygon_from_text = _typed_from_wkt("Polygon")
+_m_point_from_text = _typed_from_wkt("MultiPoint")
+_m_line_from_text = _typed_from_wkt("MultiLineString")
+_m_poly_from_text = _typed_from_wkt("MultiPolygon")
 
 
 def st_point_from_text(wkt) -> Column:
     """WKT -> Point geometry (null for non-point WKT)."""
-    return _unary_str(_typed_from_wkt("Point"), "binary")(col_or_name(wkt))
+    return _point_from_text(col_or_name(wkt))
 
 
 def st_line_from_text(wkt) -> Column:
-    return _unary_str(_typed_from_wkt("LineString"), "binary")(col_or_name(wkt))
+    return _line_from_text(col_or_name(wkt))
 
 
 def st_polygon_from_text(wkt) -> Column:
-    return _unary_str(_typed_from_wkt("Polygon"), "binary")(col_or_name(wkt))
+    return _polygon_from_text(col_or_name(wkt))
 
 
 def st_m_point_from_text(wkt) -> Column:
-    return _unary_str(_typed_from_wkt("MultiPoint"), "binary")(col_or_name(wkt))
+    return _m_point_from_text(col_or_name(wkt))
 
 
 def st_m_line_from_text(wkt) -> Column:
-    return _unary_str(_typed_from_wkt("MultiLineString"), "binary")(col_or_name(wkt))
+    return _m_line_from_text(col_or_name(wkt))
 
 
 def st_m_poly_from_text(wkt) -> Column:
-    return _unary_str(_typed_from_wkt("MultiPolygon"), "binary")(col_or_name(wkt))
+    return _m_poly_from_text(col_or_name(wkt))
 
 
 def st_point_from_wkb(wkb) -> Column:
     """WKB -> Point (null if the bytes decode to any other type)."""
-    return _unary_scalar(
-        lambda g: G.wkb_dumps(g) if g[0] == "Point" else None, "binary"
-    )(col_or_name(wkb))
+    return _cast_point(col_or_name(wkb))
+
+
+_point_from_geohash = _row_kernel(
+    lambda gh, *bits: G.wkb_dumps(("Point", G.centroid(_geohash_box(gh, *bits)))),
+    "binary", geoms=0)
 
 
 def st_point_from_geohash(geohash_col, precision: int | None = None) -> Column:
     """Geohash -> center point of its cell (``precision`` in bits, like
     st_geom_from_geohash)."""
-    box = st_geom_from_geohash(geohash_col, precision)
-    return st_centroid(box)
+    return _point_from_geohash(*_geohash_args(geohash_col, precision))
+
+
+def _line_through(arr):
+    pts = []
+    for b in arr:
+        if b is None:
+            continue
+        g = G.wkb_loads(bytes(b))
+        if g[0] == "Point" and g[1]:
+            pts.append(g[1])
+        elif g[0] in ("MultiPoint", "LineString"):
+            pts.extend(g[1])
+    return G.wkb_dumps(("LineString", pts)) if len(pts) >= 2 else None
+
+
+_make_line = _row_kernel(_line_through, "binary", geoms=0)
 
 
 def st_make_line(points) -> Column:
     """array<binary> of point WKBs -> LineString through them in order."""
-
-    @lazy_pandas_udf("binary")
-    def udf(s: pd.Series) -> pd.Series:
-        out = []
-        for arr in s.values:
-            if arr is None:
-                out.append(None)
-                continue
-            pts = []
-            for b in arr:
-                if b is None:
-                    continue
-                g = G.wkb_loads(bytes(b))
-                if g[0] == "Point" and g[1]:
-                    pts.append(g[1])
-                elif g[0] in ("MultiPoint", "LineString"):
-                    pts.extend(g[1])
-            out.append(G.wkb_dumps(("LineString", pts)) if len(pts) >= 2 else None)
-        return pd.Series(out, dtype=object)
-
-    return udf(col_or_name(points))
+    return _make_line(col_or_name(points))
 
 
 def _close_ring(pts):
@@ -828,38 +845,43 @@ def _close_ring(pts):
     return pts
 
 
+_make_polygon = _row_kernel(
+    lambda g: G.wkb_dumps(("Polygon", [_close_ring(g[1])]))
+    if g[0] == "LineString" and len(g[1]) >= 3 else None,
+    "binary",
+)
+
+
 def st_make_polygon(shell) -> Column:
     """LineString shell -> Polygon (ring auto-closed)."""
-    return _unary_scalar(
-        lambda g: G.wkb_dumps(("Polygon", [_close_ring(g[1])]))
-        if g[0] == "LineString" and len(g[1]) >= 3 else None,
-        "binary",
-    )(col_or_name(shell))
+    return _make_polygon(col_or_name(shell))
 
 
 st_polygon = st_make_polygon  # geomesa exposes both names
 
+_make_box2d = _row_kernel(
+    lambda a, b: G.wkb_dumps(G.box_polygon(a[1][0], a[1][1], b[1][0], b[1][1]))
+    if a[0] == b[0] == "Point" and a[1] and b[1] else None,
+    "binary", geoms=2)
+
 
 def st_make_box2d(lower_left, upper_right) -> Column:
-    """Two corner points -> axis-aligned box polygon."""
-
-    @lazy_pandas_udf("binary")
-    def udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        ga, gb = _geoms(a), _geoms(b)
-        out = []
-        for x, y in zip(ga, gb):
-            if x is None or y is None or x[0] != "Point" or y[0] != "Point":
-                out.append(None)
-            else:
-                out.append(G.wkb_dumps(G.box_polygon(x[1][0], x[1][1], y[1][0], y[1][1])))
-        return pd.Series(out, dtype=object)
-
-    return udf(col_or_name(lower_left), col_or_name(upper_right))
+    """Two corner points -> axis-aligned box polygon (null unless both are
+    non-empty points)."""
+    return _make_box2d(col_or_name(lower_left), col_or_name(upper_right))
 
 
 def st_make_bbox(xmin, ymin, xmax, ymax) -> Column:
     """Four doubles -> box polygon geometry (geomesa st_makeBBox)."""
     return st_geometry(extent_struct(xmin, ymin, xmax, ymax))
+
+
+@lazy_pandas_udf("binary")
+def _make_bbox_udf(xmin: pd.Series, ymin: pd.Series, xmax: pd.Series,
+                   ymax: pd.Series) -> pd.Series:
+    # SQL st_makeBBox: the st_geometry kernel over four bound columns
+    return _geometry_udf.fn(pd.DataFrame(
+        {"xmin": xmin, "ymin": ymin, "xmax": xmax, "ymax": ymax}))
 
 
 def st_make_point_m(x, y, m) -> Column:
@@ -884,65 +906,54 @@ def _sub_geoms(g):
     return [g]
 
 
+def _nth(items, n):
+    """1-based ``items[n - 1]``; None when out of range."""
+    n = int(n)
+    return items[n - 1] if 1 <= n <= len(items) else None
+
+
+def _geometry_n_of(g, n):
+    sub = _nth(_sub_geoms(g), n)
+    return None if sub is None else G.wkb_dumps(sub)
+
+
+def _point_n_of(g, n):
+    if g[0] != "LineString":
+        return None
+    n = int(n)
+    p = _nth(g[1], len(g[1]) + n + 1 if n < 0 else n)
+    return None if p is None else G.wkb_dumps(("Point", tuple(p)))
+
+
+def _interior_ring_n_of(g, n):
+    ring = _nth(g[1][1:], n) if g[0] == "Polygon" else None
+    return None if ring is None else G.wkb_dumps(("LineString", ring))
+
+
+_geometry_n = _row_kernel(_geometry_n_of, "binary")
+_point_n = _row_kernel(_point_n_of, "binary")
+_interior_ring_n = _row_kernel(_interior_ring_n_of, "binary")
+_num_geometries = _row_kernel(lambda g: len(_sub_geoms(g)), "int")
+
+
 def st_geometry_n(geom, n) -> Column:
     """1-based n-th sub-geometry (the geometry itself for simple types)."""
-
-    @lazy_pandas_udf("binary")
-    def udf(s: pd.Series, ns: pd.Series) -> pd.Series:
-        out = []
-        for g, i in zip(_geoms(s), ns.values):
-            if g is None or i is None:
-                out.append(None)
-                continue
-            subs = _sub_geoms(g)
-            i = int(i)
-            out.append(G.wkb_dumps(subs[i - 1]) if 1 <= i <= len(subs) else None)
-        return pd.Series(out, dtype=object)
-
-    return udf(col_or_name(geom), col_or_name(n) if isinstance(n, (str, Column)) else F.lit(int(n)))
+    return _geometry_n(col_or_name(geom), _index_arg(n))
 
 
 def st_num_geometries(geom) -> Column:
-    return _unary_scalar(lambda g: len(_sub_geoms(g)), "int")(col_or_name(geom))
+    return _num_geometries(col_or_name(geom))
 
 
 def st_point_n(geom, n) -> Column:
     """1-based n-th vertex of a LineString (negative n counts from the end,
     geomesa-style); null for other types or out of range."""
-
-    @lazy_pandas_udf("binary")
-    def udf(s: pd.Series, ns: pd.Series) -> pd.Series:
-        out = []
-        for g, i in zip(_geoms(s), ns.values):
-            if g is None or i is None or g[0] != "LineString":
-                out.append(None)
-                continue
-            i = int(i)
-            pts = g[1]
-            if i < 0:
-                i = len(pts) + i + 1
-            out.append(G.wkb_dumps(("Point", tuple(pts[i - 1]))) if 1 <= i <= len(pts) else None)
-        return pd.Series(out, dtype=object)
-
-    return udf(col_or_name(geom), col_or_name(n) if isinstance(n, (str, Column)) else F.lit(int(n)))
+    return _point_n(col_or_name(geom), _index_arg(n))
 
 
 def st_interior_ring_n(geom, n) -> Column:
     """1-based n-th interior ring of a Polygon as a LineString."""
-
-    @lazy_pandas_udf("binary")
-    def udf(s: pd.Series, ns: pd.Series) -> pd.Series:
-        out = []
-        for g, i in zip(_geoms(s), ns.values):
-            if g is None or i is None or g[0] != "Polygon":
-                out.append(None)
-                continue
-            holes = g[1][1:]
-            i = int(i)
-            out.append(G.wkb_dumps(("LineString", holes[i - 1])) if 1 <= i <= len(holes) else None)
-        return pd.Series(out, dtype=object)
-
-    return udf(col_or_name(geom), col_or_name(n) if isinstance(n, (str, Column)) else F.lit(int(n)))
+    return _interior_ring_n(col_or_name(geom), _index_arg(n))
 
 
 def _boundary_of(g):
@@ -973,10 +984,13 @@ def _boundary_of(g):
     return ("GeometryCollection", [_boundary_of(sub) for sub in body])
 
 
+_boundary = _row_kernel(lambda g: G.wkb_dumps(_boundary_of(g)), "binary")
+
+
 def st_boundary(geom) -> Column:
     """OGC boundary: polygon -> rings, line -> odd-degree endpoints
     (mod-2 rule), point -> empty."""
-    return _unary_scalar(lambda g: G.wkb_dumps(_boundary_of(g)), "binary")(col_or_name(geom))
+    return _boundary(col_or_name(geom))
 
 
 _DIMS = {"Point": 0, "MultiPoint": 0, "LineString": 1, "MultiLineString": 1,
@@ -989,10 +1003,13 @@ def _dimension_of(g):
     return _DIMS[g[0]]
 
 
+_dimension = _row_kernel(_dimension_of, "int")
+
+
 def st_dimension(geom) -> Column:
     """Topological dimension: 0 points, 1 lines, 2 polygons (max over
     collections)."""
-    return _unary_scalar(_dimension_of, "int")(col_or_name(geom))
+    return _dimension(col_or_name(geom))
 
 
 def st_coord_dim(geom) -> Column:
@@ -1010,8 +1027,11 @@ def _is_empty(g):
     return len(g[1]) == 0
 
 
+_is_empty_udf = _row_kernel(lambda g: bool(_is_empty(g)), "boolean")
+
+
 def st_is_empty(geom) -> Column:
-    return _unary_scalar(lambda g: bool(_is_empty(g)), "boolean")(col_or_name(geom))
+    return _is_empty_udf(col_or_name(geom))
 
 
 def _line_is_simple(pts) -> bool:
@@ -1048,8 +1068,11 @@ def _is_simple(g):
     return True  # polygons: validity implies simplicity here
 
 
+_is_simple_udf = _row_kernel(lambda g: bool(_is_simple(g)), "boolean")
+
+
 def st_is_simple(geom) -> Column:
-    return _unary_scalar(lambda g: bool(_is_simple(g)), "boolean")(col_or_name(geom))
+    return _is_simple_udf(col_or_name(geom))
 
 
 def _is_closed(g):
@@ -1061,44 +1084,51 @@ def _is_closed(g):
     return True  # points/polygons: vacuously closed (geomesa convention)
 
 
+_is_closed_udf = _row_kernel(lambda g: bool(_is_closed(g)), "boolean")
+_is_ring = _row_kernel(
+    lambda g: bool(g[0] == "LineString" and _is_closed(g) and _is_simple(g)), "boolean")
+_is_collection = _row_kernel(
+    lambda g: g[0] in ("MultiPoint", "MultiLineString", "MultiPolygon",
+                       "GeometryCollection"), "boolean")
+
+
 def st_is_closed(geom) -> Column:
-    return _unary_scalar(lambda g: bool(_is_closed(g)), "boolean")(col_or_name(geom))
+    return _is_closed_udf(col_or_name(geom))
 
 
 def st_is_ring(geom) -> Column:
     """Closed AND simple LineString."""
-    return _unary_scalar(
-        lambda g: bool(g[0] == "LineString" and _is_closed(g) and _is_simple(g)),
-        "boolean")(col_or_name(geom))
+    return _is_ring(col_or_name(geom))
 
 
 def st_is_collection(geom) -> Column:
-    return _unary_scalar(
-        lambda g: g[0] in ("MultiPoint", "MultiLineString", "MultiPolygon",
-                           "GeometryCollection"),
-        "boolean")(col_or_name(geom))
+    return _is_collection(col_or_name(geom))
 
 
 # -- casts / serializers -----------------------------------------------------
 
 
 def _cast_to(expect: str):
-    return _unary_scalar(
-        lambda g: G.wkb_dumps(g) if g[0] == expect else None, "binary")
+    return _row_kernel(lambda g: G.wkb_dumps(g) if g[0] == expect else None, "binary")
+
+
+_cast_point = _cast_to("Point")
+_cast_line = _cast_to("LineString")
+_cast_polygon = _cast_to("Polygon")
 
 
 def st_cast_to_point(geom) -> Column:
     """Null if the value is not a Point (geomesa throws a ClassCastException;
     null keeps the column total — documented divergence)."""
-    return _cast_to("Point")(col_or_name(geom))
+    return _cast_point(col_or_name(geom))
 
 
 def st_cast_to_linestring(geom) -> Column:
-    return _cast_to("LineString")(col_or_name(geom))
+    return _cast_line(col_or_name(geom))
 
 
 def st_cast_to_polygon(geom) -> Column:
-    return _cast_to("Polygon")(col_or_name(geom))
+    return _cast_polygon(col_or_name(geom))
 
 
 def st_byte_array(s) -> Column:
@@ -1115,13 +1145,16 @@ def _dms(value: float, pos: str, neg: str) -> str:
     return f"{d}°{m}'{s:06.3f}\"{hemi}"
 
 
+_as_lat_lon_text = _row_kernel(
+    lambda g: f"{_dms(g[1][1], 'N', 'S')} {_dms(g[1][0], 'E', 'W')}"
+    if g[0] == "Point" and g[1] else None,
+    "string")
+
+
 def st_as_lat_lon_text(point) -> Column:
     """Point -> 'DDD°MM'SS.SSS"N DDD°MM'SS.SSS"E' (lat first, geomesa
     st_asLatLonText)."""
-    return _unary_scalar(
-        lambda g: f"{_dms(g[1][1], 'N', 'S')} {_dms(g[1][0], 'E', 'W')}"
-        if g[0] == "Point" and g[1] else None,
-        "string")(col_or_name(point))
+    return _as_lat_lon_text(col_or_name(point))
 
 
 # -- antimeridian ------------------------------------------------------------
@@ -1240,31 +1273,29 @@ def _antimeridian_safe(g):
     return g
 
 
+_antimeridian_safe_udf = _row_kernel(lambda g: G.wkb_dumps(_antimeridian_safe(g)), "binary")
+
+
 def st_antimeridian_safe_geom(geom) -> Column:
-    return _unary_scalar(
-        lambda g: G.wkb_dumps(_antimeridian_safe(g)), "binary")(col_or_name(geom))
+    return _antimeridian_safe_udf(col_or_name(geom))
+
+
+def _path_distance_sphere(arr) -> float:
+    pts = [G.wkb_loads(bytes(b))[1] for b in arr if b is not None]
+    total = 0.0
+    for a, b in zip(pts[:-1], pts[1:]):
+        total += G.distance_sphere(a, b)
+    return total
+
+
+_aggregate_distance_sphere = _row_kernel(_path_distance_sphere, "double", geoms=0)
 
 
 def st_aggregate_distance_sphere(points_array) -> Column:
     """Total haversine path length (meters) over an array<binary> of point
     WKBs in order — pair with ``F.collect_list`` for the geomesa UDAF shape:
     ``df.groupBy(...).agg(st_aggregate_distance_sphere(F.collect_list(pt)))``."""
-
-    @lazy_pandas_udf("double")
-    def udf(s: pd.Series) -> pd.Series:
-        out = []
-        for arr in s.values:
-            if arr is None:
-                out.append(None)
-                continue
-            pts = [G.wkb_loads(bytes(b))[1] for b in arr if b is not None]
-            total = 0.0
-            for a, b in zip(pts[:-1], pts[1:]):
-                total += G.distance_sphere(a, b)
-            out.append(total)
-        return pd.Series(out, dtype=object)
-
-    return udf(col_or_name(points_array))
+    return _aggregate_distance_sphere(col_or_name(points_array))
 
 
 # ---------------------------------------------------------------------------
@@ -1352,3 +1383,68 @@ __all__ += [
     "st_antimeridianSafeGeom", "st_bufferPoint", "st_closestPoint",
     "st_relateBool", "st_coveredBy", "st_geoHash",
 ]
+
+
+# ---------------------------------------------------------------------------
+# SQL surface (the reference registers each expression once for every API,
+# core/.../rasterframes/package.scala:60-83): a SQL name runs the Column
+# API's kernel.  A string value is the body of a SQL function, for Column
+# functions that are Catalyst expressions (no Python crossing); those come
+# last, as one of them calls a registered kernel.
+# ---------------------------------------------------------------------------
+
+SQL_FUNCTIONS = {
+    # constructors / parsers
+    "st_point": _point_udf, "st_makePoint": _point_udf,
+    "st_makeBBox": _make_bbox_udf, "st_makeBox2D": _make_box2d,
+    "st_makeLine": _make_line,
+    "st_makePolygon": _make_polygon, "st_polygon": _make_polygon,
+    "st_geom_from_wkt": _from_wkt_udf, "st_geomFromWKT": _from_wkt_udf,
+    "st_pointFromText": _point_from_text, "st_lineFromText": _line_from_text,
+    "st_polygonFromText": _polygon_from_text,
+    "st_mPointFromText": _m_point_from_text,
+    "st_mLineFromText": _m_line_from_text,
+    "st_mPolyFromText": _m_poly_from_text,
+    "st_pointFromWKB": _cast_point,
+    "st_geomFromGeoHash": _geom_from_geohash,
+    "st_pointFromGeoHash": _point_from_geohash,
+    # serializers / casts
+    "st_asText": _as_text, "st_asGeoJSON": _as_geojson_udf,
+    "st_asLatLonText": _as_lat_lon_text, "st_geoHash": _geohash,
+    "st_castToPoint": _cast_point, "st_castToLineString": _cast_line,
+    "st_castToPolygon": _cast_polygon,
+    # accessors / measures
+    "st_geometryType": _geom_type, "st_x": _x, "st_y": _y,
+    "st_centroid": _centroid, "st_envelope": _envelope_udf,
+    "st_area": _area, "st_length": _length,
+    "st_lengthSphere": _length_sphere_udf,
+    "st_numPoints": _num_points, "st_numGeometries": _num_geometries,
+    "st_geometryN": _geometry_n, "st_pointN": _point_n,
+    "st_interiorRingN": _interior_ring_n, "st_exteriorRing": _exterior_ring,
+    "st_boundary": _boundary, "st_dimension": _dimension,
+    "st_distance": _distance_udf,
+    "st_distance_sphere": _distance_sphere_udf,
+    "st_distanceSphere": _distance_sphere_udf,
+    "st_aggregateDistanceSphere": _aggregate_distance_sphere,
+    "st_closestPoint": _closest_point_udf,
+    # predicates
+    "st_intersects": _intersects, "st_contains": _contains,
+    "st_within": _within, "st_disjoint": _disjoint, "st_equals": _equals,
+    "st_covers": _covers, "st_coveredBy": _covered_by,
+    "st_touches": _touches, "st_crosses": _crosses, "st_overlaps": _overlaps,
+    "st_relate": _relate_udf, "st_relateBool": _relate_bool,
+    "st_isValid": _is_valid_udf, "st_isEmpty": _is_empty_udf,
+    "st_isSimple": _is_simple_udf, "st_isClosed": _is_closed_udf,
+    "st_isRing": _is_ring, "st_isCollection": _is_collection,
+    # transforms
+    "st_translate": _translate, "st_bufferPoint": _buffer_point,
+    "st_reproject": _reproject_udf,
+    "st_antimeridianSafeGeom": _antimeridian_safe_udf,
+    # SQL functions: the Catalyst expressions, and st_makePointM as the
+    # Column API builds it (st_makePoint over double casts)
+    "st_geomFromWKB": "(wkb BINARY) RETURNS BINARY RETURN wkb",
+    "st_asBinary": "(geom BINARY) RETURNS BINARY RETURN geom",
+    "st_byteArray": "(s STRING) RETURNS BINARY RETURN encode(s, 'UTF-8')",
+    "st_coordDim": "(geom BINARY) RETURNS INT RETURN CASE WHEN geom IS NOT NULL THEN 2 END",
+    "st_makePointM": "(x DOUBLE, y DOUBLE, m DOUBLE) RETURNS BINARY RETURN st_makePoint(x, y)",
+}

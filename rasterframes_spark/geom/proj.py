@@ -21,6 +21,8 @@ import re
 
 import numpy as np
 
+from rasterframes_spark.geom.core import _points
+
 WGS84_A = 6378137.0
 WGS84_F = 1 / 298.257223563
 WGS84_E2 = WGS84_F * (2 - WGS84_F)
@@ -143,25 +145,31 @@ def _utm_to_ll(easting, northing, zone, south):
     return np.degrees(lon), np.degrees(lat)
 
 
-def transform_geom(geom, src_crs: str, dst_crs: str):
-    """Reproject a geometry tuple (densify-free; vertices only, like JTS)."""
+def transform_geoms(geoms, src_crs: str, dst_crs: str) -> list:
+    """Reproject geometry tuples (densify-free; vertices only, like JTS)
+    with one ``transform_points`` call over all their vertices."""
+    pts = [p for g in geoms for p in _points(g)]
+    if not pts:
+        return list(geoms)
+    a = np.asarray(pts, dtype="float64")
+    x, y = transform_points(a[:, 0], a[:, 1], src_crs, dst_crs)
+    it = zip(x.tolist(), y.tolist())
+    return [_with_points(g, it) for g in geoms]
+
+
+def _with_points(geom, it):
+    """``geom`` with its vertices, in ``core._points`` order, taken from
+    ``it``."""
     gtype, body = geom
-
-    def tx(pts):
-        a = np.asarray(pts, dtype="float64")
-        x, y = transform_points(a[:, 0], a[:, 1], src_crs, dst_crs)
-        return list(zip(x.tolist(), y.tolist()))
-
     if gtype == "Point":
-        x, y = transform_points([body[0]], [body[1]], src_crs, dst_crs)
-        return (gtype, (float(x[0]), float(y[0])))
+        return (gtype, next(it) if body else body)
     if gtype in ("LineString", "MultiPoint"):
-        return (gtype, tx(body))
+        return (gtype, [next(it) for _ in body])
     if gtype in ("Polygon", "MultiLineString"):
-        return (gtype, [tx(part) for part in body])
+        return (gtype, [[next(it) for _ in part] for part in body])
     if gtype == "MultiPolygon":
-        return (gtype, [[tx(r) for r in poly] for poly in body])
-    return (gtype, [transform_geom(g, src_crs, dst_crs) for g in body])
+        return (gtype, [[[next(it) for _ in r] for r in poly] for poly in body])
+    return (gtype, [_with_points(g, it) for g in body])
 
 
 def transform_extent(extent: tuple, src_crs: str, dst_crs: str) -> tuple:

@@ -263,10 +263,13 @@ def relate_matrix(g1, g2) -> str:
         if dv > cells[r][c]:
             cells[r][c] = dv
 
-    for pt, rc, kind in _samples_of(g1, g2):
-        add(rc, _locate(pt, g2), kind)
-    for pt, cc, kind in _samples_of(g2, g1):
-        add(_locate(pt, g1), cc, kind)
+    # an empty geometry gives no samples and holds no point: only the
+    # other's parts meet it, in its exterior
+    e1, e2 = C.envelope(g1) is None, C.envelope(g2) is None
+    for pt, rc, kind in ([] if e1 else _samples_of(g1, g2)):
+        add(rc, "E" if e2 else _locate(pt, g2), kind)
+    for pt, cc, kind in ([] if e2 else _samples_of(g2, g1)):
+        add("E" if e1 else _locate(pt, g1), cc, kind)
     # both geometries are bounded: the exteriors always share a 2-D region
     add("E", "E", 2)
     # open-set propagation (see module docstring)

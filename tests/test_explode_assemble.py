@@ -109,6 +109,15 @@ def test_assemble_packed_rejects_wide_types(spark, tile_df):
                           method="collect_packed")
 
 
+def test_assemble_unknown_method_raises(spark, tile_df):
+    df, _ = tile_df
+    cells = rf.explode_tiles(df, ["tile"])
+    for method in ("chunked", "Collect", ""):
+        with pytest.raises(ValueError, match="unknown assemble_tiles method"):
+            rf.assemble_tiles(cells, ["tile_id"], "column_index", "row_index",
+                              "tile", cols=5, rows=6, method=method)
+
+
 def test_tile_to_array_and_back(spark, tile_df):
     df, tiles = tile_df
     out = df.select("tile_id", rf.rf_array_to_tile(

@@ -157,3 +157,25 @@ def test_empty_geometry_geohash_translate_null_not_crash(spark, gdf):
     ).head()
     assert row["gh"] is None
     assert row["tr"] in ("POLYGON EMPTY", None)
+
+    # each of these raised IndexError in the Python worker and failed the
+    # whole query; an empty operand now gives null
+    pt = rf.st_point(F.lit(1.0), F.lit(1.0))
+    assert _one(gdf, rf.st_exterior_ring(rf.st_geomFromWKT(F.lit("POLYGON EMPTY")))) is None
+    for wkt in ("POINT EMPTY", "LINESTRING EMPTY", "POLYGON EMPTY"):
+        e = rf.st_geomFromWKT(F.lit(wkt))
+        assert _one(gdf, rf.st_reproject(e, "EPSG:4326", "EPSG:3857")) is None
+        assert _one(gdf, rf.st_make_box2d(rf.st_centroid(e), pt)) is None
+        assert _one(gdf, rf.st_make_box2d(pt, rf.st_centroid(e))) is None
+        for a, b in ((e, pt), (pt, e), (e, rf.st_geomFromWKT("pl"))):
+            assert _one(gdf, rf.st_relate_bool(a, b, "T********")) is None
+    row = spark.sql("""
+        select st_exteriorRing(st_geomFromWKT('POLYGON EMPTY')) as er,
+               st_reproject(st_geomFromWKT('POINT EMPTY'), 'EPSG:4326', 'EPSG:3857') as rp,
+               st_reproject(st_geomFromWKT('LINESTRING EMPTY'), 'EPSG:4326', 'EPSG:3857') as rl,
+               st_makeBox2D(st_centroid(st_geomFromWKT('MULTIPOLYGON EMPTY')),
+                            st_makePoint(1.0, 1.0)) as bx,
+               st_relateBool(st_geomFromWKT('POLYGON EMPTY'),
+                             st_geomFromWKT('POINT (1 1)'), 'T********') as rb
+    """).head()
+    assert row.asDict() == {"er": None, "rp": None, "rl": None, "bx": None, "rb": None}

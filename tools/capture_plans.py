@@ -1,6 +1,7 @@
 """Capture .explain("formatted") for every declared query into
 plans/<round>/<query>_<tag>.txt (tag = before/after), so plan claims of an
-optimization round can be checked against the files.
+optimization round can be checked against the files.  Each query runs
+first, so every dump is its final adaptive plan.
 
 Run: python tools/capture_plans.py <round> <tag> [query1,query2,...]
 Defaults: all queries, sf dir from $SPARK_GRAFT_SF_DIR (default sf0.01 —
@@ -42,6 +43,9 @@ def main():
         path = os.path.join(outdir, f"{name}_{tag}.txt")
         try:
             df = fn(spark, sf_dir)
+            # run the query first: every capture then prints the final
+            # adaptive plan, whatever the builder already materialized
+            df.collect()
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
