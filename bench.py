@@ -364,6 +364,16 @@ def _timed(fn) -> float:
     return time.time() - t0
 
 
+def _compile_census(spark, fn):
+    """``fn()``'s result and what the JVM compiled meanwhile:
+    ``[generated classes, their Janino seconds, JIT seconds]``."""
+    from rasterframes_spark.observe import count_compiles, jit_seconds
+
+    j0 = jit_seconds(spark)
+    out, n, secs = count_compiles(spark, fn)
+    return out, [n, round(secs, 3), round(jit_seconds(spark) - j0, 3)]
+
+
 def _count_release(df) -> int:
     """count() then release the operator's cached-input handle
     (``_rf_cached_inputs``) — repeat hygiene (VERDICT r11 #1): a leg
@@ -426,7 +436,6 @@ def main():
     from pyspark.sql import functions as F
     import rasterframes_spark as rf
     from rasterframes_spark import create_rf_spark_session
-    from rasterframes_spark.observe import count_compiles
     import __spark_entry__ as entry
 
     # UI enabled: the sf1 scale-rehearsal block reads per-stage task
@@ -437,7 +446,7 @@ def main():
 
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
-    # per repeat: [generated classes compiled, compile seconds]
+    # per repeat: [generated classes compiled, their compile s, JIT s]
     compiles: dict[str, list] = {}
     # cell filter for tools/bench_ab.py: run only the named cells (their
     # shared input caches still build, so a cell times the same work)
@@ -449,9 +458,9 @@ def main():
             return
         ts, cc = [], []
         for _ in range(repeat):
-            dt, n, secs = count_compiles(spark, lambda: _timed(fn))
+            dt, census = _compile_census(spark, lambda: _timed(fn))
             ts.append(dt)
-            cc.append([n, round(secs, 3)])
+            cc.append(census)
         compiles[name] = cc
         ts.sort()
         # min = capability (continuity with earlier rounds); median =
@@ -989,7 +998,6 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
 
     import rasterframes_spark as rf
     from rasterframes_spark import pipeline as P
-    from rasterframes_spark.observe import count_compiles
     from rasterframes_spark.operators import (raster_join, st_join,
                                               st_knn_join)
 
@@ -1067,7 +1075,7 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
                 pair_w = round(time.time() - tp, 3)
             wm = max_stage_id(spark)
             g0, s0 = jvm_gc_ms(), _steal_ticks()
-            wall, n, secs = count_compiles(spark, lambda: _timed(fn))
+            wall, census = _compile_census(spark, lambda: _timed(fn))
             wall = round(wall, 3)
             g1, s1 = jvm_gc_ms(), _steal_ticks()
             gc_s = (round((g1 - g0) / 1000.0, 1)
@@ -1075,7 +1083,7 @@ def _sf1_rehearsal(spark, sf_dir, sf01_timings, tile_df, paired=None):
             steal_s = (round((s1 - s0) / 100.0, 1)
                        if s0 is not None and s1 is not None else None)
             runs.append((wall, stage_metrics(spark, wm), gc_s, steal_s,
-                         pair_w, [n, round(secs, 3)]))
+                         pair_w, census))
             if repeat > 1:
                 spark.catalog.clearCache()
                 try:

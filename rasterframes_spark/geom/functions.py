@@ -309,10 +309,17 @@ def _distance_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         out[na | nb] = np.nan          # Arrow from_pandas: NaN -> null
         return out
     ga, gb = _geoms(a), _geoms(b)
-    return pd.Series(
-        [None if (x is None or y is None) else float(G.distance(x, y)) for x, y in zip(ga, gb)],
-        dtype=object,
-    )
+    return pd.Series([_distance_or_null(x, y) for x, y in zip(ga, gb)], dtype=object)
+
+
+def _distance_or_null(x, y):
+    """``G.distance``, but NULL where a side is null or empty (no part
+    pairs: ``G.distance`` answers inf), as the point fast path answers
+    POINT EMPTY, so the answer does not hang on what shares the batch."""
+    if x is None or y is None:
+        return None
+    d = G.distance(x, y)
+    return None if d == math.inf else float(d)
 
 
 def st_distance(a, b) -> Column:

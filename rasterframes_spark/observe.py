@@ -1,7 +1,7 @@
 """One walk over a Spark plan (the package's only one), the views built
-on it, a job counter and a compile counter.  ``pipeline/skew.py`` walks
-optimized plans with it; :func:`plan_nodes` and :func:`udf_sites` walk
-executed plans."""
+on it, a job counter, a compile counter and a JIT-time reader.
+``pipeline/skew.py`` walks optimized plans with it; :func:`plan_nodes`
+and :func:`udf_sites` walk executed plans."""
 
 from __future__ import annotations
 
@@ -10,7 +10,8 @@ from collections import Counter
 
 from pyspark import SparkContext
 
-__all__ = ["walk", "plan_nodes", "udf_sites", "count_jobs", "count_compiles"]
+__all__ = ["walk", "plan_nodes", "udf_sites", "count_jobs", "count_compiles",
+           "jit_seconds"]
 
 _PANDAS_FUNC_NODES = ("FlatMapGroupsInPandasExec", "MapInPandasExec",
                       "FlatMapCoGroupsInPandasExec")
@@ -98,3 +99,13 @@ def count_compiles(spark, fn):
     n0, ns0 = hist.getCount(), gen.compileTime()
     out = fn()
     return out, hist.getCount() - n0, (gen.compileTime() - ns0) / 1e9
+
+
+def jit_seconds(spark) -> float:
+    """Seconds the JVM's JIT compilers (C1 and C2) have spent compiling
+    since it started (``CompilationMXBean.getTotalCompilationTime()``);
+    take the difference around a piece of work.  JVM-wide, and it counts
+    compiler threads that have since exited, which a per-thread CPU
+    reading loses: HotSpot starts and stops compiler threads on demand."""
+    mx = spark._jvm.java.lang.management.ManagementFactory.getCompilationMXBean()
+    return mx.getTotalCompilationTime() / 1e3

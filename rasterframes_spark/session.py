@@ -16,6 +16,10 @@ from pyspark.sql import SparkSession
 
 # default size of the JVM's codegen cache (spark.sql.codegen.cache.maxEntries)
 CODEGEN_CACHE_ENTRIES = 3000
+# default driver JVM flags (spark.driver.defaultJavaOptions): HotSpot's
+# tier-4 (C2) thresholds at ten times their defaults
+JIT_JAVA_OPTIONS = ("-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+                    " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000")
 
 
 def create_rf_spark_session(master: str | None = None, app_name: str = "rasterframes-spark",
@@ -68,6 +72,18 @@ def create_rf_spark_session(master: str | None = None, app_name: str = "rasterfr
         # cap is over twice the largest census (CHANGES.md).  Static: it
         # takes effect only when the session's JVM starts.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # A short session spends much of its driver CPU in C2 compiling
+        # lukewarm Catalyst planning code (a perfbench join_export_dedup
+        # pass after the warm-up: 10-14 s of JIT time at HotSpot's
+        # defaults, 5-8 s here), so only methods ten times hotter reach
+        # C2; the rest stays in C1.  C2 stays on: C1 alone ran bench.py
+        # cells up to 3x slower (README).
+        # defaultJavaOptions, not extraJavaOptions: the launcher puts it
+        # in front of a caller's extraJavaOptions, so both apply and a
+        # repeated flag takes the caller's value.  Only when this call
+        # launches the JVM; the driver JVM only (local mode: it also
+        # runs the tasks).
+        .config("spark.driver.defaultJavaOptions", JIT_JAVA_OPTIONS)
     )
     # Object-store transport env reaches executor Python workers (r14):
     # RangeSource's s3:// signing and retry knobs read the standard AWS /

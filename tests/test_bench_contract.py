@@ -66,7 +66,7 @@ def _full_result(n_extra: int = 0) -> dict:
         sf1[leg]["gc_sec"] = [1.2, 0.8, 0.9]
         sf1[leg]["steal_sec"] = [0.0, 4.1, 2.2]
     for leg in SF1_LEGS:
-        sf1[leg]["compiles"] = [[120, 1.2], [0, 0.0], [0, 0.0]]
+        sf1[leg]["compiles"] = [[120, 1.2, 9.8], [0, 0.0, 2.1], [0, 0.0, 0.4]]
     return {
         "metric": "headline_suite_total", "value": 23.456, "unit": "sec",
         "queries": queries, "median": dict(queries),
@@ -80,8 +80,8 @@ def _full_result(n_extra: int = 0) -> dict:
         "psi_cpu_avg10": 0.0, "waited_for_quiet_sec": 0,
         "contended": False,
         "semantics": {"minhash_dedup": "cold", "exact_substring": "cold"},
-        # per repeat: [classes compiled, compile seconds]
-        "compiles": {c: [[40, 0.31]] + [[0, 0.0]] * 4 for c in CELLS},
+        # per repeat: [classes compiled, their compile s, JIT s]
+        "compiles": {c: [[40, 0.31, 1.8]] + [[0, 0.0, 0.2]] * 4 for c in CELLS},
     }
 
 

@@ -2,7 +2,8 @@
 benchmark tracer's own copy in ``perfbench/harness.py``: on one plan
 both count the same Python UDF sites, so the two walks cannot drift.
 And the compile counter: a session's repeated query hits the codegen
-cache however many classes were compiled in between."""
+cache however many classes were compiled in between.  And the driver
+JIT default: raised C2 thresholds, C2 still on."""
 
 import functools
 from pathlib import Path
@@ -15,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from rasterframes_spark import session
-from rasterframes_spark.observe import count_compiles, plan_nodes, udf_sites
+from rasterframes_spark.observe import count_compiles, jit_seconds, plan_nodes, udf_sites
 
 
 def _harness():
@@ -113,10 +114,8 @@ def test_repeated_query_hits_the_codegen_cache(spark):
         session.CODEGEN_CACHE_ENTRIES)
 
 
-def test_codegen_cache_default_yields_to_configs(monkeypatch):
-    """``create_rf_spark_session`` sets the cache cap; an explicit entry
-    in ``configs`` wins.  Read from the builder: the cap is static, so a
-    running JVM keeps the one it started with."""
+def _built_options(monkeypatch, **configs) -> dict:
+    """The options ``create_rf_spark_session(**configs)`` hands Spark."""
     class Built(Exception):
         pass
 
@@ -124,9 +123,44 @@ def test_codegen_cache_default_yields_to_configs(monkeypatch):
         raise Built(dict(builder._options))
 
     monkeypatch.setattr(SparkSession.Builder, "getOrCreate", capture)
+    with pytest.raises(Built) as built:
+        session.create_rf_spark_session(master="local[1]", **configs)
+    return built.value.args[0]
+
+
+def test_codegen_cache_default_yields_to_configs(monkeypatch):
+    """``create_rf_spark_session`` sets the cache cap; an explicit entry
+    in ``configs`` wins.  Read from the builder: the cap is static, so a
+    running JVM keeps the one it started with."""
     key = "spark.sql.codegen.cache.maxEntries"
     for configs, want in (({}, str(session.CODEGEN_CACHE_ENTRIES)),
                           ({key: "64"}, "64")):
-        with pytest.raises(Built) as built:
-            session.create_rf_spark_session(master="local[1]", **configs)
-        assert built.value.args[0][key] == want
+        assert _built_options(monkeypatch, **configs)[key] == want
+
+
+def test_jit_default_keeps_a_callers_extra_java_options(monkeypatch):
+    """The tier-4 thresholds go in ``defaultJavaOptions``, which Spark's
+    launcher puts in front of ``extraJavaOptions``: a caller's own JVM
+    flags (perfbench's tmpdir flags) leave the default set, and an
+    explicit ``defaultJavaOptions`` entry replaces it."""
+    key = "spark.driver.defaultJavaOptions"
+    assert _built_options(monkeypatch)[key] == session.JIT_JAVA_OPTIONS
+    extra = "-Djava.io.tmpdir=/tmp/x -XX:-UsePerfData"
+    opts = _built_options(monkeypatch, **{"spark.driver.extraJavaOptions": extra})
+    assert opts[key] == session.JIT_JAVA_OPTIONS
+    assert opts["spark.driver.extraJavaOptions"] == extra
+    assert _built_options(monkeypatch, **{key: ""})[key] == ""
+
+
+def test_session_jvm_runs_the_jit_default(spark):
+    """The running JVM has the four tier-4 thresholds of the default and
+    still compiles at tier 4 (C2); its JIT clock has started."""
+    jvm = spark._jvm
+    mx = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    flags = dict(f[len("-XX:"):].split("=") for f in session.JIT_JAVA_OPTIONS.split())
+    assert len(flags) == 4
+    for name, want in flags.items():
+        assert mx.getVMOption(name).getValue() == want, name
+    assert mx.getVMOption("TieredStopAtLevel").getValue() == "4"
+    assert jit_seconds(spark) > 0

@@ -160,3 +160,18 @@ def test_sql_matches_column_api(spark, parity_df):
             x, y = struct.unpack("<dd", b[5:])
             assert b[:5] == b"\x01\x01\x00\x00\x00" and math.isnan(x)
             assert y == s["id"] * 0.5
+
+
+def test_distance_of_an_empty_geometry_is_null_in_any_batch(spark):
+    """``st_distance`` of POINT EMPTY is NULL alone in its batch (the
+    all-point fast path) and beside a polygon in the same partition (the
+    general path), in SQL and in the Column API."""
+    empty, pt = _wkb("POINT EMPTY"), _wkb("POINT (1 1)")
+    poly = _wkb("POLYGON ((5 5, 6 5, 6 6, 5 6, 5 5))")
+    for rows, want in (([(0, empty, pt)], [None]),
+                       ([(0, empty, pt), (1, poly, pt)], [None, pytest.approx(math.sqrt(32))])):
+        df = spark.createDataFrame(rows, "id int, a binary, b binary").coalesce(1)
+        df.createOrReplaceTempView("dist_empty")
+        api = df.select("id", rf.st_distance("a", "b").alias("d")).orderBy("id").collect()
+        sql = spark.sql("select id, st_distance(a, b) as d from dist_empty order by id").collect()
+        assert [r.d for r in api] == [r.d for r in sql] == want
